@@ -81,27 +81,7 @@ def main() -> None:
     missing = set(HEADLINE) - REGISTRY.keys()
     assert not missing, f"headline keys missing from registry: {sorted(missing)}"
 
-    def reset_memo_caches() -> None:
-        """Clear every in-process fit/boundary memo BEFORE a timed
-        execution (r12 verdict #3/#6): the memos are keyed (path,
-        mtime) and disclosed, but under min-of-2/retry the SECOND
-        execution of a key would skip its fit — a retried key's
-        recorded wall was then fit-free while a single-run key's
-        wasn't. Resetting them per execution makes every recorded
-        wall include the full computation from parquet inputs."""
-        from flink_rc_spark.llm import bpe as _bpe
-        from flink_rc_spark.llm import similarity as _sim
-        from flink_rc_spark.operators import analytics as _an
-        from flink_rc_spark.operators import windows as _win
-
-        _bpe._MERGE_CACHE.clear()          # q_bpe_* merge table
-        _sim._IVFPQ_FIT_CACHE.clear()      # q_ivf_pq_search Lloyd fit
-        _win._BOUNDS_MEMO.clear()          # global_scan_salted bounds
-        _win._WIN_SALTED_BOUNDS.clear()    # q_win_salted boundaries
-        _an._RFM_BOUNDS.clear()            # q_rfm_segments boundaries
-
     def execute(key: str) -> float:
-        reset_memo_caches()
         t0 = time.perf_counter()
         df = REGISTRY[key].builder(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -534,10 +514,10 @@ def main() -> None:
                 # replay per r11 verdict #3.
                 # r13: reference walls read from committed
                 # bench_ref_<sf>.json (never auto-written); run record
-                # written to bench_out.latest.json (gitignored); every
-                # execute() resets the in-process fit memos so
+                # written to bench_out.latest.json (gitignored).
+                # Builders keep no in-process fit state, so
                 # min-of-2/retry walls always include the fit.
-                "gate_policy": "r13-ref-split-memo-reset",
+                "gate_policy": "r13-ref-split",
             },
             "sf": sf,
         }

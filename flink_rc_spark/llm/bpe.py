@@ -30,8 +30,6 @@ training-data pipeline).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -150,27 +148,6 @@ def learn_merges(
     return merges
 
 
-# Learned merges memoized per (sf_dir, documents.parquet mtime) — the
-# q_win_salted cache precedent (operators/windows.py): q_bpe_merges and
-# q_bpe_encode share one training pass per dataset within a process;
-# the mtime key invalidates on data regeneration.
-_MERGE_CACHE: dict[tuple[str, float], list[tuple[int, str, str, int]]] = {}
-
-
-def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, int]]:
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = 0.0
-    key = (sf_dir.rstrip("/"), mtime)
-    if key not in _MERGE_CACHE:
-        _MERGE_CACHE[key] = learn_merges(
-            spark, load(spark, sf_dir, "documents"), _N_MERGES
-        )
-    return _MERGE_CACHE[key]
-
-
 def bpe_encode_batches(merges: list[tuple[str, str]]):
     """mapInPandas kernel factory: apply a merge table, in training
     order, to ' '||text||' ' via vectorized fixed-string replaces —
@@ -254,10 +231,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged pair and its frequency AT SELECTION TIME (counted over the
     corpus as rewritten by all previous merges — the iterative
     dependency that makes this training, not counting)."""
-    return spark.createDataFrame(
-        _merges_for(spark, sf_dir),
-        "step int, left string, right string, n bigint",
-    ).orderBy("step")
+    return bpe_merge_table(spark, load(spark, sf_dir, "documents"), _N_MERGES)
 
 
 def _bpe_encode_oracle(n_merges: int) -> str:
@@ -307,10 +281,10 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so the encoded corpus — and therefore both counts and the
     hash — match the oracle's chained-CTE rewrite bit-for-bit.
 
-    Scale: training state is the 6-row driver-side merge list (shared
-    with q_bpe_merges via an mtime-keyed cache — one training pass per
-    dataset per process); encoding itself is ONE scan with 6 chained
-    codegen string replaces — embarrassingly parallel, no shuffle.
+    Scale: training state is the 6-row driver-side merge list (the
+    same learn_merges pass q_bpe_merges runs); encoding itself is ONE
+    scan with 6 chained codegen string replaces — embarrassingly
+    parallel, no shuffle.
 
     DEPTH CEILING + the production path: expression chaining stops
     scaling at a few dozen merges (catalyst tree depth); past that the
@@ -322,8 +296,8 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     key keeps the 6-merge expression form because that is the
     exact-oracle surface (the oracle unrolls the same 6 CTE rounds).
     """
-    merges = _merges_for(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
+    merges = learn_merges(spark, docs, _N_MERGES)
     s0 = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     enc = s0
     for _, left, right, _n in merges:
@@ -394,8 +368,8 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace token (the multilingual-tokenizer-equity metric — a
     language whose fertility stays near 1.0 gains nothing from the
     learned merges, i.e. the vocabulary under-serves it; the standard
-    readout in tokenizer papers). Uses the SAME 6-merge table (shared
-    mtime-keyed cache) and the SAME space-sentineled replace semantics
+    readout in tokenizer papers). Uses the SAME 6-merge table
+    (learn_merges) and the SAME space-sentineled replace semantics
     as q_bpe_encode, so the per-language sums are exactly the rollup
     of q_bpe_encode's audited per-doc counts.
 
@@ -404,10 +378,10 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan at 100 TB: encoding is the q_bpe_encode codegen replace chain
     (no shuffle); the rollup is one |langs|-row hash agg. The merge
-    table is driver-side k-row state, cached per dataset.
+    table is driver-side k-row state.
     """
-    merges = _merges_for(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
+    merges = learn_merges(spark, docs, _N_MERGES)
     s0 = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     enc = s0
     for _, left, right, _n in merges:

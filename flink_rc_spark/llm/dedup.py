@@ -256,6 +256,53 @@ def minhash_pairs_from_signatures(sig: DataFrame) -> DataFrame:
     )
 
 
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash) per document: the 60-bit SimHash signature
+    from per-distinct-token md5 bit votes.
+
+    PARTITION-LOCALITY INVARIANT: the kernel sums each doc's votes
+    within ONE task, so all of a doc's token rows must stay in the
+    partition they were exploded in. Any repartition/shuffle between
+    the explode and the kernel would emit several partial rows per
+    doc and silently corrupt banding (a shuffle BEFORE the explode is
+    safe). Pinned by tests/test_r13_optimizations.py: no Exchange
+    between Generate and MapInPandas, unique doc_ids on a
+    multi-partition input."""
+    # Bit voting in the shared Arrow kernel (r13, guide §2.3/§4.2 —
+    # r12 verdict #2): the previous shape evaluated 60 per-bit
+    # instr/floor/cast expression trees per token row and fed a
+    # 60-bigint-column groupBy(doc_id) aggregate — the widest shuffle
+    # in the registry and the sf1 wall's bulk. Now the JVM computes
+    # only md5 per distinct token (15 hex chars — all the signature
+    # reads) and the kernel does one vectorized nibble-unpack + one
+    # grouped int64 add per batch, emitting (doc_id, simhash)
+    # directly. NO exchange remains in the signature stage: a doc's
+    # token rows stay in its scan partition (explode is narrow), so
+    # per-doc votes complete inside the task. Same integer math bit
+    # for bit (sign of the ±1 vote sum == 2*bitcount >= n_tokens);
+    # kernel-vs-JVM equality pinned in tests/test_r13_optimizations.py
+    # and the oracle hash proves the end result. (History: the nested
+    # transform(sequence(0,59), ...) HOF form was interpreted and took
+    # 99 s at sf0.1; the flat 60-column JVM form measured ~1 s at
+    # sf0.1 but 8.3 s at sf1; this kernel halves that again — see
+    # OPTIMIZATION_r13.md.)
+    from flink_rc_spark.llm.pairkern import (
+        SIMHASH_SIG_SCHEMA,
+        make_simhash_signature_kernel,
+    )
+
+    toks = docs.select(
+        "doc_id",
+        F.explode(F.expr("array_distinct(split(text, ' '))")).alias("tok"),
+    )
+    hashed = toks.select(
+        "doc_id", F.substring(F.md5("tok"), 1, 15).alias("x")
+    )
+    return hashed.mapInPandas(
+        make_simhash_signature_kernel(60), SIMHASH_SIG_SCHEMA
+    )
+
+
 @register(
     "q_dedup_simhash",
     oracle=f"""
@@ -304,40 +351,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelling, so the driver's value-hash check PROVES the banded plan
     computes exactly the all-pairs result.
     """
-    docs = load(spark, sf_dir, "documents")
-    # Bit voting in the shared Arrow kernel (r13, guide §2.3/§4.2 —
-    # r12 verdict #2): the previous shape evaluated 60 per-bit
-    # instr/floor/cast expression trees per token row and fed a
-    # 60-bigint-column groupBy(doc_id) aggregate — the widest shuffle
-    # in the registry and the sf1 wall's bulk. Now the JVM computes
-    # only md5 per distinct token (15 hex chars — all the signature
-    # reads) and the kernel does one vectorized nibble-unpack + one
-    # grouped int64 add per batch, emitting (doc_id, simhash)
-    # directly. NO exchange remains in the signature stage: a doc's
-    # token rows stay in its scan partition (explode is narrow), so
-    # per-doc votes complete inside the task. Same integer math bit
-    # for bit (sign of the ±1 vote sum == 2*bitcount >= n_tokens);
-    # kernel-vs-JVM equality pinned in tests/test_r13_optimizations.py
-    # and the oracle hash proves the end result. (History: the nested
-    # transform(sequence(0,59), ...) HOF form was interpreted and took
-    # 99 s at sf0.1; the flat 60-column JVM form measured ~1 s at
-    # sf0.1 but 8.3 s at sf1; this kernel halves that again — see
-    # OPTIMIZATION_r13.md.)
-    from flink_rc_spark.llm.pairkern import (
-        SIMHASH_SIG_SCHEMA,
-        make_simhash_signature_kernel,
-    )
-
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.expr("array_distinct(split(text, ' '))")).alias("tok"),
-    )
-    hashed = toks.select(
-        "doc_id", F.substring(F.md5("tok"), 1, 15).alias("x")
-    )
-    sh = hashed.mapInPandas(
-        make_simhash_signature_kernel(60), SIMHASH_SIG_SCHEMA
-    )
+    sh = simhash_signatures(load(spark, sf_dir, "documents"))
     # 4 x 15-bit band keys; each row carries its full signature so the
     # in-bucket Hamming verify needs no join back to sh. One shuffle on
     # (band, key), pairs generated inside each bucket from the sorted
@@ -653,8 +667,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dense_edge_index(rows):
     """(doc_a, doc_b, ...) collected pair rows -> (ids: sorted unique
     vertex ids, ea, eb: dense int64 index arrays). Shared by every
-    bounded-subgraph driver solver (components, pagerank, bfs, sssp,
-    kcore)."""
+    bounded-subgraph driver solver (components, pagerank, kcore)."""
     import numpy as np
 
     ea = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
@@ -1059,6 +1072,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_SCALE = 1_000_000_000_000  # fixed-point rank unit (10^12)
 _PR_TELEPORT = 150_000_000_000  # 0.15 * SCALE, exact
 _PR_ITERS = 5
+_PR_MAX_INFLOW = (2**63 - 1) // 85  # largest inflow m with 85 * m in int64
 
 
 def _pagerank_oracle() -> str:
@@ -1093,6 +1107,83 @@ def _pagerank_oracle() -> str:
     return cte
 
 
+def _pagerank_driver(rows):
+    """The _PR_ITERS fixed-point rounds in numpy over collected pair
+    rows -> (ids, r), bit-identical to the distributed loop (int64
+    `div` == `//` on positive operands). Returns None when a round's
+    inflow breaks the int64 precondition 85 * m <= 2^63 - 1: numpy
+    would wrap silently where ANSI Spark raises, so the caller falls
+    through to the distributed loop instead."""
+    import numpy as np
+
+    ids, ea, eb = _dense_edge_index(rows)
+    src = np.concatenate([ea, eb])
+    dst = np.concatenate([eb, ea])
+    deg = np.bincount(src, minlength=len(ids))
+    r = np.full(len(ids), _PR_SCALE, dtype=np.int64)
+    for _ in range(_PR_ITERS):
+        c = r[src] // deg[src]
+        m = np.zeros(len(ids), dtype=np.int64)
+        np.add.at(m, dst, c)
+        if m.max(initial=0) > _PR_MAX_INFLOW:
+            return None
+        r = _PR_TELEPORT + (85 * m) // 100
+    return ids, r
+
+
+def _pagerank_ranks(
+    spark: SparkSession, verts: DataFrame, pairs: DataFrame
+) -> DataFrame:
+    """Fixed-point PageRank (v, r) of every vertex in `verts` over the
+    undirected edge list `pairs` (doc_a, doc_b).
+
+    r13 (the q_dedup_components collect-and-solve gate, same bound,
+    same rationale): the rounds are exact int64 arithmetic over ONLY
+    the dup-graph vertices — a vertex with no candidate edge receives
+    no inflow and settles at the teleport constant after round 1 (and
+    contributes nothing, having no out-edges), so a bounded pair frame
+    is collected and iterated in numpy (_pagerank_driver). The
+    distributed Pregel loop below stays the at-scale path and the
+    fallback when the driver solve's int64 range check fails.
+    Equivalence pinned by a forced-distributed test + the oracle hash;
+    the fallback by a synthetic-star overflow test."""
+    if pairs.count() <= _COMPONENTS_DRIVER_MAX_EDGES:
+        solved = _pagerank_driver(pairs.collect())
+        if solved is not None:
+            ids, r = solved
+            graph_rank = spark.createDataFrame(
+                [(int(v), int(rv)) for v, rv in zip(ids.tolist(), r.tolist())],
+                "v long, r long",
+            )
+            return verts.join(F.broadcast(graph_rank), "v", "left").select(
+                "v",
+                F.coalesce(F.col("r"), F.lit(_PR_TELEPORT))
+                .cast("bigint")
+                .alias("r"),
+            )
+    edges = pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    ).toDF("src", "dst")
+    degs = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    ew = edges.join(degs, "src").transform(checkpoint, eager=True)
+
+    rank = verts.select("v", F.lit(_PR_SCALE).cast("bigint").alias("r"))
+    for _ in range(_PR_ITERS):
+        inflow = (
+            ew.join(rank, ew.src == rank.v)
+            .select(F.col("dst").alias("v"), F.expr("r div deg").alias("c"))
+            .groupBy("v")
+            .agg(F.sum("c").cast("bigint").alias("m"))
+        )
+        rank = verts.join(inflow, "v", "left").select(
+            "v",
+            (F.lit(_PR_TELEPORT) + F.expr("85 * coalesce(m, 0L) div 100"))
+            .cast("bigint")
+            .alias("r"),
+        )
+    return rank
+
+
 @register(
     "q_graph_pagerank",
     oracle=_pagerank_oracle(),
@@ -1111,8 +1202,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution = r div deg (integer division), damping =
     (85 * m) div 100. Both engines do exact int64 arithmetic in the
     same dataflow order, so 5 rounds produce bit-identical BIGINT
-    ranks. Mass bound: total mass <= N * SCALE, and 85 * per-vertex
-    inflow stays far inside int64 even at 10^6 documents.
+    ranks. Range bound: total mass <= N * SCALE, so the inflow sums
+    fit int64 up to ~9e6 documents, but 85 * inflow overflows once
+    one vertex collects more than ~108.5k units of mass (a star with
+    that many leaves, in round 1) — both engines then raise under
+    ANSI.
 
     ITERATION AS DATAFLOW (the reference's IterativeStream shape,
     SURVEY.md §2.1 R6, re-expressed batch): edges carry their source
@@ -1147,75 +1241,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(checkpoint, eager=True)
     )
     verts = docs.select(F.col("doc_id").alias("v"))
-    # r13 (the q_dedup_components collect-and-solve gate, same bound,
-    # same rationale): the 5 fixed-point rounds are exact int64
-    # arithmetic over ONLY the dup-graph vertices — a vertex with no
-    # candidate edge receives no inflow and settles at the teleport
-    # constant after round 1 (and contributes nothing, having no
-    # out-edges), so the whole iterate runs in numpy on the collected
-    # bounded pair frame, bit-identically (int64 `div` == `//` on
-    # positive operands; Java and numpy share two's-complement
-    # semantics). The distributed Pregel loop below stays the at-scale
-    # path. Equivalence pinned by a forced-distributed test + the
-    # oracle hash.
-    if pairs.count() <= _COMPONENTS_DRIVER_MAX_EDGES:
-        import numpy as np
-
-        rows = pairs.collect()
-        if rows:
-            ids, ea, eb = _dense_edge_index(rows)
-            src = np.concatenate([ea, eb])
-            dst = np.concatenate([eb, ea])
-            deg = np.bincount(src, minlength=len(ids))
-            r = np.full(len(ids), _PR_SCALE, dtype=np.int64)
-            for _ in range(_PR_ITERS):
-                c = r[src] // deg[src]
-                m = np.zeros(len(ids), dtype=np.int64)
-                np.add.at(m, dst, c)
-                r = _PR_TELEPORT + (85 * m) // 100
-            graph_rank = spark.createDataFrame(
-                [
-                    (int(v), int(rv))
-                    for v, rv in zip(ids.tolist(), r.tolist())
-                ],
-                "v long, r long",
-            )
-        else:
-            graph_rank = spark.createDataFrame([], "v long, r long")
-        rank = verts.join(F.broadcast(graph_rank), "v", "left").select(
-            "v",
-            F.coalesce(F.col("r"), F.lit(_PR_TELEPORT))
-            .cast("bigint")
-            .alias("r"),
-        )
-    else:
-        edges = pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        ).toDF("src", "dst")
-        degs = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        ew = edges.join(degs, "src").transform(checkpoint, eager=True)
-
-        rank = verts.select("v", F.lit(_PR_SCALE).cast("bigint").alias("r"))
-        for _ in range(_PR_ITERS):
-            inflow = (
-                ew.join(rank, ew.src == rank.v)
-                .select(
-                    F.col("dst").alias("v"), F.expr("r div deg").alias("c")
-                )
-                .groupBy("v")
-                .agg(F.sum("c").cast("bigint").alias("m"))
-            )
-            rank = verts.join(inflow, "v", "left").select(
-                "v",
-                (
-                    F.lit(_PR_TELEPORT)
-                    + F.expr("85 * coalesce(m, 0L) div 100")
-                )
-                .cast("bigint")
-                .alias("r"),
-            )
+    rank = _pagerank_ranks(spark, verts, pairs)
     # global rank WITHOUT a node-scale single-partition window: count
     # per distinct fixed-point score, two-phase exclusive cumulative
     # count over the descending score order (rank() = strictly-greater
@@ -1973,17 +1999,6 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fixture_mtime(sf_dir: str) -> float:
-    """documents.parquet mtime — data-version component for memo keys
-    (the global_scan_salted bounds memo convention: path + mtime)."""
-    import os as _os
-
-    try:
-        return _os.path.getmtime(_os.path.join(sf_dir, "documents.parquet"))
-    except OSError:
-        return 0.0
-
-
 @register(
     "q_join_setsim",
     oracle=f"""
@@ -2100,12 +2115,6 @@ def q_join_setsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_on="_ord",
         order_cols=["dfc", "_h", "w"],
         specs=[{"kind": "count", "out": "rnk"}],
-        # mtime fingerprints the fixture (helper convention): path
-        # alone would reuse stale boundaries if data is regenerated
-        # in place — still correct (bucketing is comparison-based and
-        # order_cols give the exact total order), but bucket balance
-        # would silently degrade.
-        bounds_key=("q_join_setsim", sf_dir, _fixture_mtime(sf_dir)),
     ).select("w", F.col("rnk").cast("long").alias("rnk"))
     docs_t = (
         flat.join(ranked, "w")

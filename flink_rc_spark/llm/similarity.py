@@ -1054,40 +1054,18 @@ def _pq_fit_cte() -> str:
     )""")
     return ",".join(parts)
 
-# Fitted IVF centroids + PQ codebook memoized per (sf_dir,
-# embeddings.parquet mtime) — the q_bpe_merges cache precedent
-# (llm/bpe.py): the Lloyd fits are INDEX-BUILD work a production
-# system runs once per corpus version, not per query, so re-fitting
-# inside every invocation (as r6 did) double-charged every search
-# ~2 s of amortizable cost. Values are plain Python rows (8 + 128 of
-# them — k-row model collects, driver-safe); the mtime key
-# invalidates on data regeneration.
-_IVFPQ_FIT_CACHE: dict[tuple[str, float], tuple[list, list]] = {}
-
-
 def _ivf_pq_fit(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
-    """Fit (and memoize) the coarse quantizer and PQ codebook:
+    """Fit the coarse quantizer and PQ codebook:
     _IVF_ROUNDS integer fixed-point Lloyd rounds each (the q_kmeans
     protocol, llm/cluster.py) from md5-ranked seed samples. Returns
     (cent_rows, pcent_rows): [(c_id, cm)], [(s, code, cs)] on the 1e6
     integer grid — every intermediate is an identical bigint in both
-    engines, so cached rows are exactly what a re-fit would produce."""
-    import os
-
+    engines."""
     from flink_rc_spark.llm.cluster import (
         _QUANT_SPARK,
         _assign,
         _recenter,
     )
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = 0.0
-    key = (sf_dir.rstrip("/"), mtime)
-    if key in _IVFPQ_FIT_CACHE:
-        return _IVFPQ_FIT_CACHE[key]
 
     # coarse quantizer: md5-ranked sample seeds (limit-first
     # TakeOrdered pulls the _IVF_K rows; the cell-id ranking window
@@ -1173,7 +1151,6 @@ def _ivf_pq_fit(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
         (int(r["s"]), int(r["code"]), [int(x) for x in r["cs"]])
         for r in pcent.collect()
     ]
-    _IVFPQ_FIT_CACHE[key] = (cent_rows, pcent_rows)
     return cent_rows, pcent_rows
 
 
@@ -1285,11 +1262,9 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     id — so the candidate sets, scores, and final ranking are
     bit-identical in DuckDB.
 
-    The fit is INDEX-BUILD work and amortizes like one: r7 moved both
-    Lloyd fits behind the mtime-keyed _IVFPQ_FIT_CACHE (the
-    q_bpe_merges precedent), so repeated searches pay only the query
-    path — recall is unchanged by construction (the cached rows ARE
-    the fit's exact integer output).
+    The fit is INDEX-BUILD work, but the builder is stateless: every
+    call re-runs both Lloyd fits (_ivf_pq_fit), so the key's wall is
+    fit plus query path.
 
     100 TB: the coarse fit is q_kmeans' plan (k x dim integer state
     broadcast per round, re-center is a map-side-combined hash agg);
@@ -1311,9 +1286,8 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
     )
-    # fitted quantizers from the mtime-keyed index-build cache — the
-    # search below is the per-query work; the fit amortizes across
-    # invocations exactly as a deployed index does
+    # index build: both fitted quantizers; the search below is the
+    # per-query work
     cent_rows, pcent_rows = _ivf_pq_fit(spark, sf_dir)
     cent = spark.createDataFrame(cent_rows, "c_id bigint, cm array<bigint>")
     pcent = spark.createDataFrame(pcent_rows, "s int, code int, cs array<bigint>")

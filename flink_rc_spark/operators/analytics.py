@@ -495,27 +495,17 @@ def q_rfm_segments(spark, sf_dir):
     )
     n = rfm.count()
     # ONE multi-column approxQuantile job supplies all three dims'
-    # bucket boundaries, memoized per (sf_dir, orders mtime) — the
-    # q_win_salted pattern (boundary choice never affects values)
-    import os as _os
-
-    try:
-        _mt = _os.path.getmtime(_os.path.join(sf_dir, "orders.parquet"))
-    except OSError:
-        _mt = 0.0
-    _bkey = (sf_dir.rstrip("/"), _mt)
-    if _bkey not in _RFM_BOUNDS:
-        _RFM_BOUNDS[_bkey] = dict(
-            zip(
+    # bucket boundaries (boundary choice never affects values)
+    bounds = dict(
+        zip(
+            ["_r_d", "frequency", "monetary"],
+            rfm.approxQuantile(
                 ["_r_d", "frequency", "monetary"],
-                rfm.approxQuantile(
-                    ["_r_d", "frequency", "monetary"],
-                    [i / 32 for i in range(1, 32)],
-                    0.001,
-                ),
-            )
+                [i / 32 for i in range(1, 32)],
+                0.001,
+            ),
         )
-    bounds = _RFM_BOUNDS[_bkey]
+    )
     cnt = [{"kind": "count", "value": None, "out": "_rn", "exclusive": False}]
     # three INDEPENDENT rank scans of the one materialized frame
     # (scores depend only on their own dimension), joined back on the
@@ -546,9 +536,6 @@ def q_rfm_segments(spark, sf_dir):
         )
         .orderBy("r_score", "f_score", "m_score")
     )
-
-
-_RFM_BOUNDS: dict[tuple, dict] = {}
 
 
 @register(
@@ -3217,12 +3204,6 @@ def q_elbow_point(spark, sf_dir):
         F.count("*").cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("total"),
     )
-    import os as _os
-
-    try:
-        _mt = _os.path.getmtime(_os.path.join(sf_dir, "orders.parquet"))
-    except OSError:
-        _mt = 0.0
     curve = global_scan_salted(
         per_cust,
         "cents",
@@ -3235,9 +3216,6 @@ def q_elbow_point(spark, sf_dir):
         ],
         descending=True,
         materialize=False,
-        # stable memo key: per_cust is a checkpoint (plan hash is
-        # per-call unstable), so name the (query, data) identity
-        bounds_key=("q_elbow_point", sf_dir.rstrip("/"), _mt),
     ).crossJoin(F.broadcast(tot)).select(
         F.col("_i").cast("bigint").alias("i"),
         F.col("_cum").cast("bigint").alias("cum"),

@@ -34,7 +34,6 @@ def prefix_agg_salted(
     out_sum: str = "running_sum",
     out_rn: str = "running_n",
     materialize: bool = True,
-    bounds_key=None,
 ):
     """Skew-safe cumulative sum / running count for LOW-CARDINALITY
     window partition keys — the window twin of q_agg_salted.
@@ -61,25 +60,18 @@ def prefix_agg_salted(
     """
     from flink_rc_spark.functions.exact import dec as _dec
 
-    if bounds_key is not None:
-        memo_key = (bounds_key, str(bucket_on), n_buckets, False)
-    else:
-        memo_key = _bounds_memo_key(df, bucket_on, n_buckets, False)
-    if boundaries is None and memo_key is not None:
-        boundaries = _BOUNDS_MEMO.get(memo_key)
     # single materialization of the input subtree — see
     # global_scan_salted's note (same three-read shape). LAZY: the
     # checkpoint persists during the first job that touches it (the
-    # approxQuantile planning pass, or the final job on a memo hit),
-    # so the helper never schedules a separate materialize-only job —
-    # measured ~0.3-0.6 s of fixed per-call overhead at sf0.1.
+    # approxQuantile planning pass, or the final job when the caller
+    # passes boundaries), so the helper never schedules a separate
+    # materialize-only job — measured ~0.3-0.6 s of fixed per-call
+    # overhead at sf0.1.
     if materialize:
         df = df.transform(checkpoint, eager=False)
     if boundaries is None:
         probs = [i / n_buckets for i in range(1, n_buckets)]
         boundaries = df.approxQuantile(bucket_on, probs, 0.001)
-        if memo_key is not None:
-            _BOUNDS_MEMO[memo_key] = boundaries
     # non-null bucket contract enforced at RUNTIME (r8 advice: the old
     # otherwise(0) silently placed NULL keys in bucket 0, corrupting
     # every later bucket's offset): raise_error fires lazily only for
@@ -129,35 +121,6 @@ def prefix_agg_salted(
     )
 
 
-def _bounds_memo_key(df, bucket_on, n_buckets: int, descending: bool):
-    """Memo key for planning-time bucket boundaries: the INPUT plan's
-    semantic hash (computed before any checkpoint, so it is stable
-    across repeated builder invocations of the same query in a
-    session) + the bucketing parameters. Boundaries are pure planning
-    metadata — ANY monotone bucketing yields the identical result
-    (the equivalence the oracle hash proves), so a stale hit can only
-    affect bucket balance, never values; the q_win_salted mtime-keyed
-    cache established the pattern. Returns None (no memoization) when
-    the plan contains a LogicalRDD leaf (a caller's own checkpoint,
-    whose RDD id — and so its hash — changes per call: memoizing
-    would only grow the dict, never hit; such callers pass
-    `bounds_key` instead)."""
-    try:
-        if "LogicalRDD" in df._jdf.queryExecution().analyzed().toString():
-            return None
-        return (
-            df.semanticHash(),
-            str(bucket_on),
-            int(n_buckets),
-            bool(descending),
-        )
-    except Exception:  # pragma: no cover - defensive
-        return None
-
-
-_BOUNDS_MEMO: dict[tuple, list] = {}
-
-
 def global_scan_salted(
     df,
     bucket_on,
@@ -167,7 +130,6 @@ def global_scan_salted(
     descending: bool = False,
     materialize: bool = True,
     boundaries: list | None = None,
-    bounds_key=None,
 ):
     """Skew-safe GLOBAL window scan — the empty-partition-spec twin of
     `prefix_agg_salted`, for cumulative aggregates / ranks over a
@@ -206,18 +168,10 @@ def global_scan_salted(
     # at +0.7-7.6 s per converted key at sf0.1. Callers that already
     # checkpointed (e.g. to share the frame with a separate totals
     # agg) pass materialize=False.
-    if bounds_key is not None:
-        # caller-stable key (e.g. (query, sf_dir, mtime)) for inputs
-        # whose plan hash is per-call unstable (own checkpoint)
-        memo_key = (bounds_key, str(bucket_on), n_buckets, descending)
-    else:
-        memo_key = _bounds_memo_key(df, bucket_on, n_buckets, descending)
-    if boundaries is None and memo_key is not None:
-        boundaries = _BOUNDS_MEMO.get(memo_key)
     if materialize:
         # LAZY checkpoint: persisted by whichever job touches it first
-        # (quantile pass, or the final job on a memo hit) — the
-        # separate eager materialize-only job was pure fixed overhead
+        # (quantile pass, or the final job when boundaries are given) —
+        # the separate eager materialize-only job was pure fixed overhead
         df = df.transform(checkpoint, eager=False)
     src = F.col(bucket_on) if isinstance(bucket_on, str) else bucket_on
     src = src.cast("double")
@@ -237,8 +191,6 @@ def global_scan_salted(
     if boundaries is None:
         probs = [i / n_buckets for i in range(1, n_buckets)]
         boundaries = work.approxQuantile("_gss_src", probs, 0.001)
-        if memo_key is not None:
-            _BOUNDS_MEMO[memo_key] = boundaries
     bkt = F.lit(0)
     for bb in boundaries:
         bkt = bkt + F.when(F.col("_gss_src") >= F.lit(bb), 1).otherwise(0)
@@ -356,35 +308,13 @@ def q_win_salted(spark, sf_dir):
         .withColumn("us", F.unix_micros("ts"))
         .select("event_id", "event_type", "us", "value")
     )
-    # memoize the planning-time boundary probe per sf_dir — the result
-    # is correct for ANY boundaries (equivalence is boundary-free), so
-    # caching only saves the repeated approxQuantile job. Keyed by
-    # (path, events.parquet mtime) so regenerated data at the same path
-    # invalidates the cache (stale boundaries can't break correctness,
-    # but could silently collapse the skew mitigation to one bucket).
-    import os
-
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    try:
-        mtime = os.path.getmtime(ev_path)
-    except OSError:
-        mtime = 0.0
-    key = (sf_dir.rstrip("/"), mtime)
-    if key not in _WIN_SALTED_BOUNDS:
-        _WIN_SALTED_BOUNDS[key] = e.approxQuantile(
-            "us", [i / 16 for i in range(1, 16)], 0.001
-        )
     return prefix_agg_salted(
         e,
         part_col="event_type",
         bucket_on="us",
         order_cols=["us", "event_id"],
         value_col="value",
-        boundaries=_WIN_SALTED_BOUNDS[key],
     ).select("event_id", "event_type", "running_sum", "running_n")
-
-
-_WIN_SALTED_BOUNDS: dict[tuple[str, float], list] = {}
 
 
 @register(

@@ -23,6 +23,29 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
+def scan_tables(plan: str) -> dict[str, int]:
+    """Per-table parquet-scan counts from a FORMATTED plan string.
+
+    The scan header and its file path sit on different lines — a
+    numbered `(N) Scan parquet` detail block, then its own
+    `Location: InMemoryFileIndex [file:/.../<table>.parquet]` line — so
+    the plan is split into its numbered detail blocks first and each
+    scan's Location is read within its own block. A cross-line regex
+    can pair a scan with the NEXT block's Location when its own path
+    does not match the table pattern (e.g. a file name with '-')."""
+    counts: dict[str, int] = {}
+    for block in re.split(r"^(?=\(\d+\) )", plan, flags=re.M):
+        if not re.match(r"\(\d+\) Scan parquet", block):
+            continue
+        loc = re.search(r"^Location: [^\[\n]*\[([^,\]\n]+)", block, re.M)
+        if loc is None:
+            continue
+        name = loc.group(1).strip().rstrip("/").rsplit("/", 1)[-1]
+        name = name.removesuffix(".parquet")
+        counts[name] = counts.get(name, 0) + 1
+    return counts
+
+
 def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
     """Assert each fragment appears in a PushedFilters clause of the scan."""
     plan = formatted_plan(df)

@@ -899,11 +899,12 @@ def test_bpe_trainer_matches_python_reference(spark, sf_dir):
     """The distributed trainer (learn_merges) reproduces the
     pure-Python reference trainer EXACTLY — (step, left, right, n)
     tuples — on the fixture corpus at the declared depth."""
-    from flink_rc_spark.llm.bpe import _merges_for
+    from flink_rc_spark.llm.bpe import learn_merges
     from flink_rc_spark.sources.tables import load
 
-    texts = [r.text for r in load(spark, sf_dir, "documents").collect()]
-    assert _bpe_train_py(texts, 6) == _merges_for(spark, sf_dir)
+    docs = load(spark, sf_dir, "documents")
+    texts = [r.text for r in docs.collect()]
+    assert _bpe_train_py(texts, 6) == learn_merges(spark, docs, 6)
 
 
 def test_bpe_trainer_single_token_doc_guard(spark):

@@ -14,46 +14,53 @@ pin the *mechanisms* that guarantee it:
 
 from __future__ import annotations
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
 
-def _scan_tables(df) -> dict:
-    """Per-table parquet-scan counts from the FORMATTED plan's numbered
-    detail blocks. The scan header and its file path sit on different
-    lines — `(N) Scan parquet` then a `Location: InMemoryFileIndex
-    [...]` line — so the pairing regex must span lines (the r12 round
-    shipped a same-line regex that matched NOTHING, making the
-    duplicate-scan assert vacuous; ADVICE r12 item 1)."""
-    from flink_rc_spark.plans.inspect import formatted_plan
-
-    plan = formatted_plan(df)
-    tables = re.findall(
-        r"\(\d+\) Scan parquet[\s\S]*?Location:[^\n]*?/(\w+)\.parquet",
-        plan,
-    )
-    counts: dict = {}
-    for t in tables:
-        counts[t] = counts.get(t, 0) + 1
-    return counts
-
-
 def _dup_scan_tables(df) -> dict:
-    return {t: c for t, c in _scan_tables(df).items() if c > 1}
+    from flink_rc_spark.plans.inspect import formatted_plan, scan_tables
+
+    return {t: c for t, c in scan_tables(formatted_plan(df)).items() if c > 1}
+
+
+_TWO_SCAN_PLAN = """== Physical Plan ==
+BroadcastHashJoin (5)
+:- Scan parquet  (1)
++- BroadcastExchange (4)
+   +- Scan parquet  (3)
+
+
+(1) Scan parquet 
+Output [1]: [doc_id#1L]
+Batched: true
+Location: InMemoryFileIndex [file:/data/sf1/web-docs.parquet]
+ReadSchema: struct<doc_id:bigint>
+
+(3) Scan parquet 
+Output [1]: [doc_id#2L]
+Batched: true
+Location: InMemoryFileIndex [file:/data/sf1/documents.parquet]
+ReadSchema: struct<doc_id:bigint>
+
+(4) BroadcastExchange
+Input [1]: [doc_id#2L]
+"""
 
 
 def test_scan_parser_finds_scans(spark):
-    """Self-check: the pairing regex must find >= 1 scan for a plan
-    that plainly reads parquet — guards against the parser regressing
-    back to an always-empty match."""
+    """Self-check of the shared scan parser: it must find the one scan
+    of a plan that plainly reads parquet (guards against an
+    always-empty match), and must pair every scan with the Location
+    of its OWN detail block, also when a file name holds a '-'."""
+    from flink_rc_spark.plans.inspect import formatted_plan, scan_tables
     from flink_rc_spark.sources.tables import load
 
     docs = load(spark, SF_DIR, "documents")
-    assert _scan_tables(docs.select("doc_id")) == {"documents": 1}
+    assert scan_tables(formatted_plan(docs.select("doc_id"))) == {"documents": 1}
+    assert scan_tables(_TWO_SCAN_PLAN) == {"web-docs": 1, "documents": 1}
 
 
 def test_minhash_pairs_exactly_once(spark):

@@ -116,3 +116,66 @@ def test_graph_driver_solver_equals_distributed(
     monkeypatch.setattr(importlib.import_module(module), gate, -1)
     ref = {tuple(r) for r in REGISTRY[key].builder(spark, SF_DIR).collect()}
     assert got == ref and len(got) > 0
+
+
+def test_simhash_kernel_partition_locality(spark):
+    """The signature kernel sums each doc's votes inside ONE task, so
+    it is correct only while a doc's token rows stay in the partition
+    they were exploded in: the declared plan has no Exchange between
+    the explode (Generate) and the kernel (MapInPandas), and on a
+    multi-partition input the kernel emits each doc_id exactly once."""
+    from flink_rc_spark.llm.dedup import simhash_signatures
+    from flink_rc_spark.plans.inspect import formatted_plan
+    from flink_rc_spark.registry import REGISTRY, load_all
+    from flink_rc_spark.sources.tables import load
+
+    load_all()
+    plan = formatted_plan(REGISTRY["q_dedup_simhash"].builder(spark, SF_DIR))
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    nodes = [ln.lstrip(" :+-").split(" (", 1)[0].strip() for ln in tree]
+    # the signature kernel is the deepest MapInPandas; walk down to
+    # the Generate feeding it (the plan is a chain down to the scan)
+    below = nodes[max(i for i, n in enumerate(nodes) if n == "MapInPandas") + 1:]
+    assert "Generate" in below, plan
+    assert "Exchange" not in below[: below.index("Generate")], plan
+
+    docs = load(spark, SF_DIR, "documents").repartition(4)
+    assert docs.rdd.getNumPartitions() > 1
+    ids = [r.doc_id for r in simhash_signatures(docs).collect()]
+    n_docs = docs.filter(F.col("text").isNotNull()).count()
+    assert len(ids) == len(set(ids)) == n_docs
+
+
+def test_pagerank_driver_overflow_falls_back(spark, monkeypatch):
+    """A star whose hub collects > (2^63-1)/85 inflow in round 1 breaks
+    the driver solve's int64 precondition: numpy would wrap 85*m
+    silently, so the gate must fall through to the distributed loop,
+    whose outcome (an ANSI overflow error, or the wrapped values with
+    ANSI off) the gated path must then share exactly."""
+    from flink_rc_spark.llm import dedup as _d
+
+    leaves = _d._PR_MAX_INFLOW // _d._PR_SCALE + 1_500  # ~110k
+    assert leaves + 1 <= _d._COMPONENTS_DRIVER_MAX_EDGES
+    star = [(0, i) for i in range(1, leaves + 1)]
+    assert _d._pagerank_driver(star) is None
+    assert _d._pagerank_driver(star[:1_000]) is not None
+
+    pairs = spark.range(1, leaves + 1).select(
+        F.lit(0).cast("long").alias("doc_a"), F.col("id").alias("doc_b")
+    )
+    verts = spark.range(leaves + 1).select(F.col("id").alias("v"))
+
+    def outcome():
+        try:
+            return sorted(
+                tuple(r) for r in _d._pagerank_ranks(spark, verts, pairs).collect()
+            )
+        except Exception as e:  # noqa: BLE001 - compared across paths
+            assert "ARITHMETIC_OVERFLOW" in str(e), e
+            return "overflow"
+
+    gated = outcome()
+    monkeypatch.setattr(_d, "_COMPONENTS_DRIVER_MAX_EDGES", -1)
+    assert gated == outcome()
+    if spark.conf.get("spark.sql.ansi.enabled").lower() == "true":
+        assert gated == "overflow"

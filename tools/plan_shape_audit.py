@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from flink_rc_spark.plans.inspect import formatted_plan
+    from flink_rc_spark.plans.inspect import formatted_plan, scan_tables
     from flink_rc_spark.registry import REGISTRY, load_all
     from flink_rc_spark.session import get_spark
 
@@ -42,20 +42,9 @@ def main() -> None:
             continue
         finally:
             spark.catalog.clearCache()
-        # Pair each numbered `(N) Scan parquet` detail block with its
-        # own following `Location:` line — header and path sit on
-        # DIFFERENT lines in formatted plans, so a same-line regex
-        # matches nothing (ADVICE r12 item 2: the r12 audit's primary
-        # finder was silently empty for every key).
-        tables = re.findall(
-            r"\(\d+\) Scan parquet[\s\S]*?Location:[^\n]*?/(\w+)\.parquet",
-            plan,
-        )
-        counts: dict[str, int] = {}
-        for t in tables:
-            counts[t] = counts.get(t, 0) + 1
+        counts = scan_tables(plan)
         dup = {t: c for t, c in counts.items() if c > 1}
-        if "Scan parquet" in plan and not tables:
+        if "Scan parquet" in plan and not counts:
             print(f"{k}: SCAN PARSER FOUND NOTHING (plan has scans)",
                   flush=True)
         # numbered detail blocks only, excluding ReusedExchange (the
