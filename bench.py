@@ -2,35 +2,163 @@
 
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+verbose JSON line (every key's wall plus the ``calib`` block), then a
+compact final line carrying only the headline::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "sf": ..., "calib_ok": B, "compact": true}
+
+The verbose record is also written to ``$SPARK_GRAFT_BENCH_OUT``
+(default ``bench_out.latest.json`` next to this file).
 
 Timing method: each query's full physical plan is executed through the
 ``noop`` sink (``df.write.format("noop")``) so the measured time is the
 distributed execution — scan, shuffle, agg, join — without driver-side
-collect or sink I/O skew. One warm-up query runs first so JVM/codegen
-warm-up is not charged to the first headline entry.
+collect or sink I/O skew. Each timing includes the builder call: for
+batch queries that is ms of plan construction; for streaming keys the
+builder drives the whole bounded replay, which IS the work. Session
+warm-up (``warm_session``) runs first so one-time JVM, codegen and
+Python-worker costs are not charged to whichever key happens to run
+first.
 
 The headline set covers every operator family (scan, filter, join, agg,
-window, sort, set, scalar, subquery, LLM-data); ``value`` remains the
-headline total so rounds stay comparable. Since r2 the bench ALSO times
-every other registered key (the ``queries`` map holds all of them, and
-``all_total`` their sum) so a regression anywhere in the tail is visible
-round-over-round. Set ``SPARK_GRAFT_BENCH_HEADLINE_ONLY=1`` to skip the
-tail while iterating.
+window, sort, set, scalar, subquery, LLM-data); ``value`` is the
+headline total. The bench also times every other registered key (the
+``queries`` map holds all of them, ``all_total`` their sum). Set
+``SPARK_GRAFT_BENCH_HEADLINE_ONLY=1`` to skip that tail.
 
-Each timing includes the builder call: for batch queries that is ms of
-plan construction; for streaming keys the builder drives the whole
-bounded replay, which IS the work.
+Trust: two fixed probes — a pure-codegen query and a scan of the bench
+SF's own ``lineitem.parquet`` — are sampled around the headline pass
+and every 25 tail keys. ``calib.ok`` (``calib_verdict``) is true when
+neither probe drifted within the run: codegen ``max/min <= 1.3``, scan
+``max/min <= 1.5``. A drifting probe means the box, not the plans,
+moved during the run.
+
+Tail keys slower than twice their wall in the committed
+``bench_ref_<sf>.json`` (a prior full sweep's verbose record) are
+re-executed once and the min kept; ``calib.retried_keys`` lists every
+re-executed key.
+
+``tools/key_probe.py`` and ``tools/kernel_ab_probe.py`` time keys with
+this module's ``execute``, ``codegen_probe`` and ``warm_session``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
 import time
+
+from flink_rc_spark.registry import REGISTRY, load_all
+from flink_rc_spark.session import get_spark
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+
+CODEGEN_DRIFT_MAX = 1.3
+SCAN_DRIFT_MAX = 1.5
+
+
+def calib_verdict(
+    codegen_samples: list[float], scan_samples: list[float]
+) -> dict:
+    """Drift verdict from one run's own probe samples.
+
+    ``ratio`` and ``scan_drift`` are each probe's ``max/min`` (1.0 when
+    a probe has no samples); ``ok`` holds when both are within their
+    limits. The verdict is decided on the rounded ratios it reports.
+    """
+
+    def drift(samples: list[float]) -> float:
+        return round(max(samples) / min(samples), 3) if samples else 1.0
+
+    ratio = drift(codegen_samples)
+    scan_drift = drift(scan_samples)
+    return {
+        "ok": ratio <= CODEGEN_DRIFT_MAX and scan_drift <= SCAN_DRIFT_MAX,
+        "ratio": ratio,
+        "scan_drift": scan_drift,
+    }
+
+
+def _noop_wall(df) -> float:
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return round(time.perf_counter() - t0, 4)
+
+
+def execute(spark, key: str, sf_dir: str) -> float:
+    """Wall of one registry key: builder call plus noop-sink execution."""
+    t0 = time.perf_counter()
+    REGISTRY[key].builder(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    elapsed = time.perf_counter() - t0
+    # drop persisted RDDs a builder left behind (e.g. the RC pipeline's
+    # reservoir-state persist): across ~120 keys the accumulated blocks
+    # skew later keys' times with GC/memory pressure
+    spark.catalog.clearCache()
+    return elapsed
+
+
+def codegen_probe(spark) -> float:
+    """Fixed pure-codegen query (~0.15 s on a healthy 4-core box): its
+    drift within a run tracks CPU-side box noise."""
+    return _noop_wall(
+        spark.range(4_000_000).selectExpr("sum(id * 2) AS s", "count(*) AS n")
+    )
+
+
+def scan_probe(spark, fixture: str) -> float:
+    """Parquet scan + hash agg of a fixed file: tracks the I/O and
+    memory-bandwidth side that the codegen probe cannot see."""
+    return _noop_wall(
+        spark.read.parquet(fixture).groupBy("l_returnflag").agg(
+            {"l_extendedprice": "sum", "*": "count"}
+        )
+    )
+
+
+def warm_session(spark, sf_dir: str, first_key: str) -> list[str]:
+    """Pay the session's one-time costs outside any timed run; returns
+    what was warmed (recorded as ``calib.prewarmed_keys``)."""
+    warmed = [first_key]
+    execute(spark, first_key, sf_dir)  # JVM + codegen + parquet footers
+    # The session's FIRST use of the pyspark.sql.datasource API pays
+    # ~3 s of one-time cost (dataSource.register into the JVM manager +
+    # spawning the Python planning runner); q_pyds_source itself
+    # generates a fixed 6x512-row frame.
+    if "q_pyds_source" in REGISTRY:
+        warmed.append("q_pyds_source")
+        execute(spark, "q_pyds_source", sf_dir)
+    # The first mapInPandas/applyInPandas stage spawns one Python
+    # worker per core plus their numpy/pandas imports (r12 probe:
+    # q_audio_decode 8.76 s cold vs 0.86 s warm, same plan). Ship the
+    # package FIRST — addPyFile changes the worker environment key, so
+    # workers spawned without it would be thrown away on the first real
+    # kernel — and import it inside the warm-up kernel, one task per
+    # core. Workers are then reused across jobs.
+    warmed.append("<arrow-python-workers>")
+    from flink_rc_spark.util import ensure_package_shipped
+
+    ensure_package_shipped(spark)
+
+    def _py_warm(it):
+        import flink_rc_spark  # noqa: F401 — warm the package import
+
+        return it
+
+    n = spark.sparkContext.defaultParallelism
+    _noop_wall(spark.range(n).repartition(n).mapInPandas(_py_warm, "id long"))
+    codegen_probe(spark)
+    return warmed
+
+
+def jvm_gc(spark) -> None:
+    """Full GC between measurements: garbage from PRIOR keys degrades
+    later keys 3-4x (codegen probe: 0.13 s fresh -> 0.45 s after 60
+    keys -> 0.13 s after System.gc()), so it is collected outside the
+    timed window."""
+    spark._jvm.System.gc()
+
 
 HEADLINE = [
     # relational core
@@ -63,11 +191,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-    from flink_rc_spark.registry import REGISTRY, load_all
-    from flink_rc_spark.session import get_spark
-
     load_all()
     spark = get_spark(app="flink_rc_spark_bench")
 
@@ -81,404 +204,80 @@ def main() -> None:
     missing = set(HEADLINE) - REGISTRY.keys()
     assert not missing, f"headline keys missing from registry: {sorted(missing)}"
 
-    def execute(key: str) -> float:
-        t0 = time.perf_counter()
-        df = REGISTRY[key].builder(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # drop persisted RDDs a builder left behind (e.g. the RC
-        # pipeline's reservoir-state persist): across ~120 keys the
-        # accumulated blocks skew later keys' times with GC/memory
-        # pressure, which is measurement noise, not plan cost
-        spark.catalog.clearCache()
-        return elapsed
+    prewarmed = warm_session(spark, sf_dir, HEADLINE[0])
+    scan_fixture = os.path.join(sf_dir, "lineitem.parquet")
+    scan_probe(spark, scan_fixture)
 
-    def calibrate() -> float:
-        """Fixed pure-codegen probe (~0.1 s on a healthy box): its
-        drift DURING the run is the box/session noise floor, recorded
-        so a degraded-environment episode (this box intermittently
-        runs 10-30x slower for minutes at a time) is visible in the
-        artifact instead of masquerading as a plan regression."""
-        t0 = time.perf_counter()
-        spark.range(4_000_000).selectExpr(
-            "sum(id * 2) AS s", "count(*) AS n"
-        ).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 4)
-
-    # Probe fixture resolved relative to the configured testdata root
-    # (r8 advice: the old hardcoded /root/testdata/sf0.01 path crashed
-    # the whole bench when that exact fixture was absent). Prefer the
-    # sibling sf0.01 (small, fixed-size probe regardless of bench SF);
-    # fall back to the bench SF's own lineitem; None disables the probe
-    # and calib_ok records the codegen-only verdict.
-    # The probe must be FIXED-SIZE at every bench SF: the r9 sf1 sweep
-    # resolved the fallback (the bench SF's own lineitem — 104 MB at
-    # sf1) and recorded scan samples of 0.18-0.35 s, which the 0.14 s
-    # sf0.01-floor gate then read as a whole-run degraded episode —
-    # calib_ok=false was a probe-fixture artifact, not the box. The
-    # canonical /root/testdata/sf0.01 candidate keeps the probe
-    # identical regardless of where the bench data lives.
-    _root = os.path.dirname(sf_dir.rstrip("/"))
-    _scan_fixture = None
-    for cand in (
-        os.path.join(_root, "sf0.01", "lineitem.parquet"),
-        "/root/testdata/sf0.01/lineitem.parquet",
-        os.path.join(sf_dir, "lineitem.parquet"),
-    ):
-        if os.path.exists(cand):
-            _scan_fixture = cand
-            break
-    # the 0.14 s floor is calibrated to the sf0.01 fixture; if we had
-    # to fall back to the bench SF's own (bigger) lineitem the
-    # absolute-floor gates are meaningless — judge drift only
-    _scan_floor_valid = _scan_fixture is not None and "sf0.01" in _scan_fixture
-
-    def calibrate_scan() -> float | None:
-        """Parquet-scan probe (~0.15 s healthy): reads the fixed
-        sf0.01 lineitem and hash-aggs it. The pure-codegen probe
-        above tracks CPU only; r8 measured box episodes where that
-        probe sat at a healthy ~0.10 s while REAL (scan+shuffle)
-        keys ran 1.4-2x slow — this probe senses the I/O/memory-
-        bandwidth dimension those episodes degrade."""
-        if _scan_fixture is None:
-            return None
-        t0 = time.perf_counter()
-        spark.read.parquet(_scan_fixture).groupBy("l_returnflag").agg(
-            {"l_extendedprice": "sum", "*": "count"}
-        ).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 4)
-
-    def scan_probe2() -> float | None:
-        s = calibrate_scan()
-        return None if s is None else min(s, calibrate_scan())
-
-    def jvm_gc() -> None:
-        """Full GC between measurements: accumulated garbage from
-        PRIOR keys' execution degrades later keys 3-4x (measured via
-        the calibration probe: 0.13 s fresh -> 0.45 s after 60 keys ->
-        0.13 s after System.gc()). Collecting it outside the timed
-        window makes each key's number reflect its own plan, the same
-        isolation a fresh-process-per-key harness would buy."""
-        spark._jvm.System.gc()
-
-    _prewarmed = [HEADLINE[0]]
-    execute(HEADLINE[0])  # warm-up (JVM + codegen + parquet footer cache)
-    # Warm the Python DataSource path too: the session's FIRST use of
-    # the pyspark.sql.datasource API pays ~3 s of one-time cost
-    # (dataSource.register into the JVM manager + spawning the Python
-    # planning runner for schema()/partitions()) — session warm-up by
-    # the same policy that keeps JVM/codegen warm-up out of the first
-    # headline key, not plan cost of the one key that uses the API
-    # (q_pyds_source generates a FIXED 6x512-row frame; r9 recorded
-    # 3.66 s for it purely because its in-sweep call was also the
-    # session's first API use).
-    if "q_pyds_source" in REGISTRY:
-        _prewarmed.append("q_pyds_source")
-        execute("q_pyds_source")
-    # Warm the ARROW PYTHON WORKER pool by the same policy: the
-    # session's first mapInPandas/applyInPandas stage pays the
-    # one-time spawn of one Python worker per core plus their
-    # numpy/pandas imports — ~4-8 s on local[32], charged entirely to
-    # whichever registry key happens to run Python first (r12 probe:
-    # q_audio_decode 8.76 s cold vs 0.86 s warm, same plan). That is
-    # session setup, not plan cost; a long-lived cluster pays it once
-    # per executor, not once per query. The warm-up must mirror what
-    # the real kernels run under: ship the package FIRST (addPyFile
-    # changes the worker environment key, so workers spawned without
-    # it would be thrown away on the first real kernel) and import it
-    # inside the warm-up kernel, one task per core. Workers are then
-    # reused across jobs (spark.python.worker.reuse defaults true).
-    _prewarmed.append("<arrow-python-workers>")
-    from flink_rc_spark.util import ensure_package_shipped
-
-    ensure_package_shipped(spark)
-
-    def _py_warm(it):
-        import flink_rc_spark  # noqa: F401 — warm the package import
-
-        return it
-
-    _np = spark.sparkContext.defaultParallelism
-    spark.range(_np).repartition(_np).mapInPandas(
-        _py_warm, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    calibrate()
-    calibrate_scan()
-
+    codegen_samples: list[float] = []
     scan_samples: list[float] = []
 
-    def probe_pair() -> tuple[float, float | None]:
-        c = min(calibrate(), calibrate())
-        s = scan_probe2()
-        if s is not None:
-            scan_samples.append(s)
-        return c, s
+    def sample() -> None:
+        codegen_samples.append(min(codegen_probe(spark), codegen_probe(spark)))
+        scan_samples.append(
+            min(scan_probe(spark, scan_fixture), scan_probe(spark, scan_fixture))
+        )
 
-    def scan_sample() -> None:
-        s = scan_probe2()
-        if s is not None:
-            scan_samples.append(s)
-
-    # Pre-flight gate (r8 verdict): refuse to START the headline while
-    # either probe reads above the healthy-box envelope — codegen
-    # > 0.20 s, or scan > ~1.3x the 0.14 s warm healthy floor recorded
-    # in BASELINE.md's r8 environment tally. This box runs multi-minute
-    # degraded episodes; starting inside one produced three rounds of
-    # calib_ok=false artifacts. Bounded: up to 10 cool-downs of 60 s,
-    # then proceed anyway and let calib_ok mark the episode.
-    # SPARK_GRAFT_BENCH_PREFLIGHT_MAX caps TOTAL sleep seconds across
-    # the pre-flight loop AND the mid-run episode cool-downs (r10
-    # verdict #1: the uncapped 600 s worst case exceeded the contract
-    # test's subprocess timeout, so the suite went red whenever the
-    # box sat in its degraded band; the contract test validates stdout
-    # FORMAT, not box health, and sets this to 0).
-    SCAN_FLOOR = 0.14
-    _sleep_left = float(
-        os.environ.get("SPARK_GRAFT_BENCH_PREFLIGHT_MAX", "600")
-    )
-
-    def cooldown(sec: float) -> float:
-        nonlocal _sleep_left
-        take = min(sec, max(_sleep_left, 0.0))
-        if take > 0:
-            time.sleep(take)
-            _sleep_left -= take
-        return take
-
-    preflight_waits = 0
-    for _ in range(10):
-        jvm_gc()
-        scan_samples.clear()
-        calib_start, scan_start = probe_pair()
-        if calib_start <= 0.20 and (
-            scan_start is None
-            or not _scan_floor_valid
-            or scan_start <= 1.3 * SCAN_FLOOR
-        ):
-            break
-        if _sleep_left <= 0:
-            break  # budget spent: proceed and let calib_ok mark it
-        preflight_waits += 1
-        cooldown(60)
-    calib_samples = [calib_start]
+    jvm_gc(spark)
+    sample()
 
     # Headline keys are timed as min-of-2 executions: the first pass
     # pays per-query Catalyst/codegen compilation (~0.1-0.3 s) and any
     # transient box noise; the min is the steady-state distributed
-    # execution — the quantity that scales with data volume. (Recorded
-    # in BASELINE.md alongside the single-pass history.)
+    # execution — the quantity that scales with data volume.
     timings: dict[str, float] = {}
     for k in HEADLINE:
-        jvm_gc()
-        timings[k] = round(min(execute(k), execute(k)), 4)
-    # Calibration gate (r7 verdict): if the probe's envelope around
-    # the headline pass is unhealthy — start above the ~0.15 s nominal
-    # box floor, or >1.3x drift in EITHER direction between start and
-    # end (a degraded start that later recovers inflates the first
-    # pass exactly like a degradation does) — the box, not the plans,
-    # moved; re-measure each headline key once more and keep the min,
-    # so one episode cannot masquerade as a plan regression.
-    calib_after_headline = min(calibrate(), calibrate())
-    calib_samples.append(calib_after_headline)
-    scan_sample()
-    # probe pairs BRACKETING a full headline pass: a pass whose
-    # bracket reads healthy on both ends ran inside a healthy phase,
-    # and min-of-passes then carries at least one trustworthy number
-    # per key — this is what the calib_ok start gate certifies (the
-    # r10 sf1 run showed why: a single hot pre-start probe, 10
-    # exhausted pre-flight waits, then a perfectly healthy run that
-    # the old `calib_start <= 0.20` hard gate could never pass).
-    headline_brackets = [(calib_start, calib_after_headline)]
-    hi = max(calib_start, calib_after_headline)
-    lo = min(calib_start, calib_after_headline)
-    if calib_start > 0.20 or hi > 1.3 * lo:
-        # The box episodes observed this round last minutes and swing
-        # the probe 0.08 -> 1.15 s; a re-measure INSIDE the episode
-        # just re-records it. Up to two extra headline passes, each
-        # preceded by a 60 s cool-down if the probe still reads hot,
-        # keep the min honest without unbounded stalling.
-        for attempt in range(2):
-            probe = min(calibrate(), calibrate())
-            if probe > 0.20 and attempt == 0:
-                cooldown(60)
-                probe = min(calibrate(), calibrate())
-            calib_samples.append(probe)
-            for k in HEADLINE:
-                jvm_gc()
-                timings[k] = round(min(timings[k], execute(k)), 4)
-            calib_samples.append(min(calibrate(), calibrate()))
-            headline_brackets.append((probe, calib_samples[-1]))
-            scan_sample()
-            if calib_samples[-1] <= 0.20:
-                break
+        jvm_gc(spark)
+        timings[k] = round(
+            min(execute(spark, k, sf_dir), execute(spark, k, sf_dir)), 4
+        )
+    sample()
     headline_total = round(sum(timings.values()), 4)
 
-    # Per-key reference walls from a PRIOR artifact: a tail key whose
-    # single run exceeds 2x its reference is re-executed once and the
-    # min kept — the same min-of-executions shield headline keys get,
-    # extended to the sub-4 s tail keys a brief box flap inflates
-    # without tripping the absolute retry. Retrying only re-executes
-    # the identical plan, so the recorded number is always a true
-    # wall. SPARK_GRAFT_BENCH_REF overrides the path; when unset the
-    # shield defaults to the repo's committed same-SF artifact
-    # (bench_out.json / bench_sf1_out.json) so DRIVER sweeps — which
-    # set no env — get it too (r10 verdict #3: q_geo_radius_join read
-    # 12.5 s in BENCH_r10 on an untouched plan, a flap the shield was
-    # built for). One-sided by design: only slower-than-ref keys
-    # retry, so the artifact stays a true wall for every key; the
-    # retried set is emitted as calib.retried_keys for auditability.
-    # r13 (verdict #1): reference walls and run output are SEPARATE
-    # files now. bench.py used to both read its retry-shield reference
-    # from bench_out.json AND overwrite that same file at the end of
-    # every run, so each sweep clobbered the committed reference the
-    # next sweep's thresholds depended on (an 8-core driver sweep
-    # seeded the 32-core shield). References are now the committed,
-    # never-auto-written bench_ref_<sf>.json artifacts; the run record
-    # goes to bench_out.latest.json (gitignored) unless
-    # SPARK_GRAFT_BENCH_OUT says otherwise.
+    ref_name = f"bench_ref_{base}.json"
     ref_walls: dict[str, float] = {}
-    ref_source: str | None = None
-    _here = os.path.dirname(os.path.abspath(__file__))
-    _ref_candidates = [os.environ.get("SPARK_GRAFT_BENCH_REF")] if (
-        os.environ.get("SPARK_GRAFT_BENCH_REF")
-    ) else [
-        os.path.join(_here, f"bench_ref_{base}.json"),
-        # legacy committed artifacts (pre-r13 names), kept as fallback
-        # so the shield still works before a bench_ref lands
-        os.path.join(_here, "bench_out.json"),
-        os.path.join(_here, "bench_sf1_out.json"),
-    ]
-    for _ref_path in _ref_candidates:
-        if not (_ref_path and os.path.exists(_ref_path)):
-            continue
-        try:
-            with open(_ref_path) as f:
-                _ref_rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        # a reference is only meaningful at the SAME scale factor
-        if _ref_rec.get("sf") == sf and _ref_rec.get("queries"):
-            ref_walls = _ref_rec["queries"]
-            ref_source = _ref_path
-            break
+    ref_source = None
+    if os.path.exists(os.path.join(HERE, ref_name)):
+        with open(os.path.join(HERE, ref_name)) as f:
+            ref_walls = json.load(f)["queries"]
+        ref_source = ref_name
     retried_keys: list[str] = []
 
     if not os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_ONLY"):
         for i, k in enumerate(sorted(REGISTRY.keys() - set(HEADLINE))):
             if i % 10 == 0:
-                jvm_gc()
+                jvm_gc(spark)
             if i % 25 == 0 and i > 0:
-                calib_samples.append(min(calibrate(), calibrate()))
-                scan_sample()
-            t = execute(k)
-            # Streaming-replay keys get the HEADLINE treatment —
-            # min-of-2 always, plus a third run if still >1.5x the
-            # committed same-SF wall (r11 verdict #3: the driver's
-            # r11 sweep showed plan-unchanged q_stream_* keys
-            # 1.6-3.3x inflated even AFTER the single shield retry;
+                sample()
+            t = execute(spark, k, sf_dir)
+            # Streaming-replay keys get the headline treatment — min-of-2
+            # always, plus a third run if still >1.5x the reference wall:
             # replay pays multi-second fixed session costs with high
-            # box-noise sensitivity, so one run is never evidence).
+            # box-noise sensitivity, so one run is never evidence.
             if k.startswith("q_stream_"):
                 retried_keys.append(k)
-                t = min(t, execute(k))
+                t = min(t, execute(spark, k, sf_dir))
                 if k in ref_walls and t > 1.5 * ref_walls[k]:
-                    t = min(t, execute(k))
-            # retry-if-slow: this box shows 2-5x single-run noise
-            # spikes (a 2.5 s key has benched at 13 s); one retry on
-            # outliers separates noise from real plan cost while
-            # keeping the sweep's wall clock bounded. If the box is in
-            # a DEGRADED episode (calibration probe > 2x its start),
-            # one extra retry — both prior runs were likely polluted.
+                    t = min(t, execute(spark, k, sf_dir))
+            # retry-if-slow: single runs show 2-5x noise spikes (a 2.5 s
+            # key has benched at 13 s); one retry on outliers separates
+            # noise from plan cost while keeping the sweep bounded. If
+            # the codegen probe reads > 2x its first sample, the box is
+            # degraded and both prior runs were likely polluted.
             elif t > 4.0:
                 retried_keys.append(k)
-                t = min(t, execute(k))
-                if t > 4.0 and calibrate() > 2 * calib_start:
-                    t = min(t, execute(k))
+                t = min(t, execute(spark, k, sf_dir))
+                if t > 4.0 and codegen_probe(spark) > 2 * codegen_samples[0]:
+                    t = min(t, execute(spark, k, sf_dir))
+            # Only slower-than-reference keys retry, and a retry only
+            # re-executes the identical plan, so every recorded number
+            # is a true wall.
             elif k in ref_walls and t > max(2 * ref_walls[k], 0.5):
                 retried_keys.append(k)
-                t = min(t, execute(k))
+                t = min(t, execute(spark, k, sf_dir))
             timings[k] = round(t, 4)
-        calib_samples.append(min(calibrate(), calibrate()))
-        scan_sample()
+        sample()
 
-    # calib_ok gates trust in the artifact (r7 verdict): False means
-    # the probe either started above its healthy-box envelope
-    # (~0.15 s nominal on this container, BASELINE.md) or drifted
-    # >1.3x during the run even after the headline re-measure — the
-    # numbers then describe the box episode, not the plans, and a
-    # consumer must not record them as a regression.
-    calib_ratio = round(max(calib_samples) / calib_start, 3)
-    # scan probe judged on BOTH intra-run drift and the absolute
-    # healthy floor established by the r8 environment tally
-    # (BASELINE.md: healthy warm ~0.14 s; degraded phases 0.22-0.45 s).
-    # A run whose scan probe never came near the floor ran entirely
-    # inside an episode, however flat its drift.
-    if scan_samples:
-        scan_drift = round(max(scan_samples) / min(scan_samples), 3)
-        scan_healthy = (
-            not _scan_floor_valid
-            or min(scan_samples) <= 1.3 * SCAN_FLOOR
-        )
-    else:
-        scan_drift = 1.0
-        scan_healthy = True  # probe fixture absent: codegen-only verdict
-    # Drift gates are judged against the healthy-envelope CEILINGS
-    # first (codegen <= 0.20 s, scan <= 1.3x the 0.14 s floor): on a
-    # fast box phase the probes read 0.05-0.15 s, where a 0.05->0.15
-    # swing is 3x RELATIVE but pure noise in absolute terms — every
-    # sample inside the envelope means the box stayed healthy for the
-    # whole run, which is the verdict calib_ok exists to certify. The
-    # relative gates still apply whenever any sample leaves the
-    # envelope (a genuine episode can only push samples UP through
-    # the ceiling, never hide below it).
-    calib_in_envelope = max(calib_samples) <= 0.20
-    # scan envelope judged on the MEDIAN sample (plus a 2x-floor hard
-    # cap): healthy-phase samples run 0.10-0.19 s, so a single 4-ms
-    # excursion over the 1.3x ceiling among 17 healthy readings is
-    # sampling noise, not an episode — per-key min-of-2/retry already
-    # shields timings from brief spikes, and the r8-measured degraded
-    # phases (0.22-0.45 s sustained) sit far above both bounds.
-    # Hard cap at 1.5x the floor (0.21 s) — BELOW the r8-measured
-    # degraded band's own floor (0.22-0.45 s sustained), so a run
-    # where a minority of samples sit inside the degraded band can
-    # never report calib_ok=true through this branch (r9 advice: the
-    # old 2x cap overlapped the band). The cap is judged on the
-    # SECOND-max sample: the degraded phases are sustained (they put
-    # MANY samples over the cap), while a single excursion among ~17
-    # healthy readings is sampling noise that per-key min-of-2/retry
-    # already shields (measured: a lone 0.211 s sample in an
-    # otherwise 0.11-0.14 s run). scan_median and scan_in_envelope
-    # are emitted in the JSON, with every raw sample, so a reader can
-    # audit the verdict instead of trusting the boolean.
-    if scan_samples and _scan_floor_valid:
-        _ss = sorted(scan_samples)
-        scan_median = _ss[len(_ss) // 2]
-        _second_max = _ss[-2] if len(_ss) >= 2 else _ss[-1]
-        scan_in_envelope = (
-            scan_median <= 1.3 * SCAN_FLOOR
-            and _second_max <= 1.5 * SCAN_FLOOR
-        )
-    elif scan_samples:
-        _ss = sorted(scan_samples)
-        scan_median = _ss[len(_ss) // 2]
-        scan_in_envelope = False  # floor invalid: drift gate decides
-    else:
-        scan_median = None
-        scan_in_envelope = True
-    # Start gate: at least one full headline pass must be BRACKETED
-    # by healthy probes (both ends <= 0.20 s). A hot pre-start probe
-    # followed by a healthy re-measure pass is a trustworthy run
-    # (min-of-passes keeps the healthy numbers); a run whose every
-    # pass has a hot endpoint is not.
-    healthy_bracket = any(
-        a <= 0.20 and b <= 0.20 for a, b in headline_brackets
-    )
-    calib_ok = (
-        healthy_bracket
-        and (calib_in_envelope or calib_ratio <= 1.3)
-        and (scan_in_envelope or scan_drift <= 1.5)
-        and scan_healthy
-    )
+    verdict = calib_verdict(codegen_samples, scan_samples)
     line = json.dumps(
         {
             "metric": "headline_queries_wall_clock",
@@ -487,37 +286,16 @@ def main() -> None:
             "queries": timings,
             "all_total": round(sum(timings.values()), 4),
             "calib": {
-                "start": calib_start,
-                "samples": calib_samples,
+                **verdict,
+                "samples": codegen_samples,
                 "scan_samples": scan_samples,
-                "scan_median": scan_median,
-                "scan_in_envelope": scan_in_envelope,
-                "scan_fixture": _scan_fixture,
-                "scan_floor_valid": _scan_floor_valid,
-                "headline_brackets": headline_brackets,
-                "ratio": calib_ratio,
-                "preflight_waits": preflight_waits,
-                "ok": calib_ok,
-                # audit surface (r10 advice): which keys were executed
-                # before their measured runs (session warm-up, NOT in
-                # their recorded walls), which tail keys the flap
-                # shield re-executed, where the shield's reference
-                # walls came from, and which gate-policy revision
-                # produced this verdict — so round-over-round headline
-                # comparisons are recognizably apples-to-apples.
-                "prewarmed_keys": _prewarmed,
+                "scan_fixture": scan_fixture,
+                # keys executed before their measured runs (session
+                # warm-up, NOT in their recorded walls)
+                "prewarmed_keys": prewarmed,
                 "retried_keys": retried_keys,
                 "ref_source": ref_source,
-                # r12: q_stream_* tail keys run min-of-2 always (+1
-                # run if still >1.5x the committed same-SF wall) —
-                # the headline treatment, extended to streaming
-                # replay per r11 verdict #3.
-                # r13: reference walls read from committed
-                # bench_ref_<sf>.json (never auto-written); run record
-                # written to bench_out.latest.json (gitignored).
-                # Builders keep no in-process fit state, so
-                # min-of-2/retry walls always include the fit.
-                "gate_policy": "r13-ref-split",
+                "gate_policy": "r14-drift-only",
             },
             "sf": sf,
         }
@@ -534,7 +312,7 @@ def main() -> None:
             "value": headline_total,
             "unit": "sec",
             "sf": sf,
-            "calib_ok": calib_ok,
+            "calib_ok": verdict["ok"],
             # distinguishes this tail line from the verbose one above,
             # so a consumer parsing the FIRST matching metric doesn't
             # silently get the verbose record (and vice versa)
@@ -549,8 +327,7 @@ def main() -> None:
     # consumer doing json.load() on the file must not break.
     try:
         out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "bench_out.latest.json",
+            HERE, "bench_out.latest.json"
         )
         with open(out_path, "w") as f:
             f.write(line + "\n")

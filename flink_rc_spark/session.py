@@ -56,15 +56,8 @@ def get_spark(app: str = "flink_rc_spark", cpus: int | None = None) -> SparkSess
     # this cannot over-split them. On a real lake the 128 MB default
     # is right (files are many and the bin amortizes task overhead) —
     # these two settings are the local stand-in for that file
-    # multiplicity, so they apply ONLY under a local[...] master
-    # (belt-and-suspenders: this factory only ever runs local) and
-    # can additionally be switched off with
-    # SPARK_GRAFT_DEFAULT_SPLITS=1 (r9 advice: the unconditional
-    # override 64x-over-split every scan for any non-bench consumer
-    # of a copy-pasted get_spark()).
-    if master.startswith("local") and not os.environ.get(
-        "SPARK_GRAFT_DEFAULT_SPLITS"
-    ):
+    # multiplicity, so they apply ONLY under a local[...] master.
+    if master.startswith("local"):
         builder = builder.config(
             "spark.sql.files.maxPartitionBytes", "2m"
         ).config("spark.sql.files.openCostInBytes", "512k")

@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -46,10 +45,11 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
+    import bench
     from flink_rc_spark.llm import cluster as C
     from flink_rc_spark.llm import dedup as D
     from flink_rc_spark.llm import similarity as S
-    from flink_rc_spark.registry import REGISTRY, load_all
+    from flink_rc_spark.registry import load_all
     from flink_rc_spark.session import get_spark
 
     load_all()
@@ -87,32 +87,18 @@ def main() -> None:
                 mod, attr = k.split(".")
                 setattr({"S": S, "D": D, "C": C}[mod], attr, v)
 
-    def calibrate() -> float:
-        t0 = time.perf_counter()
-        spark.range(4_000_000).selectExpr("sum(id * 2) AS s").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    def execute(key: str) -> float:
-        t0 = time.perf_counter()
-        df = REGISTRY[key].builder(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return el
-
-    execute(KEYS[0])  # warm-up
+    bench.execute(spark, KEYS[0], sf_dir)  # warm-up
     results: dict[str, dict[str, float]] = {}
     for key in KEYS:
         results[key] = {}
         for variant in ("flat", "hof"):
             set_variant(variant)
-            spark._jvm.System.gc()
-            t = min(execute(key) for _ in range(reps))
+            bench.jvm_gc(spark)
+            t = min(bench.execute(spark, key, sf_dir) for _ in range(reps))
             results[key][variant] = round(t, 3)
             print(
-                f"{key:24s} {variant:5s} {t:7.3f}s  calib={calibrate()}",
+                f"{key:24s} {variant:5s} {t:7.3f}s"
+                f"  calib={bench.codegen_probe(spark)}",
                 flush=True,
             )
         set_variant("committed")
