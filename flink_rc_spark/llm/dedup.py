@@ -664,32 +664,60 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_components_from_pairs(docs, pairs)
 
 
-def _dense_edge_index(rows):
-    """(doc_a, doc_b, ...) collected pair rows -> (ids: sorted unique
-    vertex ids, ea, eb: dense int64 index arrays). Shared by every
-    bounded-subgraph driver solver (components, pagerank, kcore)."""
-    import numpy as np
+# Edge bound of every bounded dup-graph driver solve (driver_solve).
+_DRIVER_MAX_EDGES = 500_000
 
-    ea = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-    eb = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
+
+def driver_solve(pairs: DataFrame, solve, schema: str) -> DataFrame | None:
+    """Solve a bounded dup graph in numpy on the driver.
+
+    The iterative graph loops (components, pagerank, kcore) pay one
+    job-dispatch + shuffle round trip PER ROUND whatever the data
+    size, while the dup graph they iterate over is usually smaller
+    than one task. So when the (doc_a, doc_b) pair frame has at most
+    _DRIVER_MAX_EDGES rows it crosses to the driver in one columnar
+    step (``toPandas``, over Arrow when the session enables it), is
+    re-indexed densely (ids = sorted unique vertex ids; ea, eb = int64
+    positions into ids) and handed to ``solve(ids, ea, eb)``. The
+    solver returns a dict of column arrays in `schema` order, which
+    goes back as one ``createDataFrame(pandas, schema)``.
+
+    The bound matches the components frontier broadcast (a <= 2M-row
+    frontier is already collected to build its broadcast relation),
+    so the driver-memory profile is unchanged; only the per-round jobs
+    disappear. Every solver is exact integer arithmetic equal to its
+    distributed loop (forced-path tests + oracle hashes) and handles a
+    zero-edge graph.
+
+    Returns None when the frame is over the bound or `solve` returns
+    None because its input breaks a precondition it checks (pagerank's
+    int64 range); the caller then runs its distributed loop, which
+    stays the at-scale path. bfs, sssp and dbscan converge in 1-3
+    rounds and measured slower behind this gate, so they do not use it
+    (numbers at their call sites)."""
+    import numpy as np
+    import pandas as pd
+
+    if pairs.count() > _DRIVER_MAX_EDGES:
+        return None
+    pdf = pairs.select("doc_a", "doc_b").toPandas()
+    ea = pdf["doc_a"].to_numpy(dtype=np.int64)
+    eb = pdf["doc_b"].to_numpy(dtype=np.int64)
     ids = np.unique(np.concatenate([ea, eb]))
-    return ids, np.searchsorted(ids, ea), np.searchsorted(ids, eb)
+    cols = solve(ids, np.searchsorted(ids, ea), np.searchsorted(ids, eb))
+    if cols is None:
+        return None
+    return pairs.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
 
 
-def _min_label_components(ea, eb):
-    """Vectorized min-label union over dense edge index arrays:
-    returns lbl with lbl[i] = index of the minimum vertex in i's
-    component. Min-propagation over edges + pointer jumping converges
-    in O(log n) numpy passes — each O(|E|+|V|) — so a 500k-edge graph
-    takes a few ms, not a Spark job per round."""
+def _min_label_components(ids, ea, eb):
+    """Vectorized min-label union: (v, label) with label = the minimum
+    vertex id in v's component. Min-propagation over edges + pointer
+    jumping converges in O(log n) numpy passes — each O(|E|+|V|) — so a
+    500k-edge graph takes a few ms, not a Spark job per round."""
     import numpy as np
 
-    n = (
-        int(max(ea.max(initial=-1), eb.max(initial=-1))) + 1
-        if len(ea)
-        else 0
-    )
-    lbl = np.arange(n, dtype=np.int64)
+    lbl = np.arange(len(ids), dtype=np.int64)
     while True:
         m = np.minimum(lbl[ea], lbl[eb])
         new = lbl.copy()
@@ -697,16 +725,8 @@ def _min_label_components(ea, eb):
         np.minimum.at(new, eb, m)
         new = new[new]  # pointer jumping halves label-chain depth
         if (new == lbl).all():
-            return lbl
+            return {"v": ids, "label": ids[lbl]}
         lbl = new
-
-
-# Collect-and-solve gate for the component fixpoint: the SAME scale
-# rationale as the frontier broadcast below (a <= 2M-row frontier is
-# already collected to the driver to build the broadcast relation), so
-# the driver-memory profile is unchanged — only the per-round job
-# dispatch disappears.
-_COMPONENTS_DRIVER_MAX_EDGES = 500_000
 
 
 def dedup_components_from_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -717,32 +737,12 @@ def dedup_components_from_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     subtree per consumer.
 
     r13 (guide §1.2 "the distributed algorithm", r12 verdict #3): the
-    iterative min-label fixpoint pays ~0.5 s of job-dispatch + shuffle
-    latency PER ROUND regardless of data size (measured: 4 rounds x
-    0.55 s over a 907-edge graph at sf0.1 — the whole graph is smaller
-    than one task). When the materialized pair frame is under
-    _COMPONENTS_DRIVER_MAX_EDGES rows it is therefore collected and
-    solved with the vectorized numpy min-label union (exact same
-    min-reachable-id result, oracle-hash-proven), mirroring the
-    existing frontier-broadcast threshold: the distributed fixpoint
-    below remains the at-scale path and runs whenever the dup graph is
-    genuinely large."""
-    spark = docs.sparkSession
-    n_pairs = pairs.count()  # pairs is checkpointed: a cheap job
-    if n_pairs <= _COMPONENTS_DRIVER_MAX_EDGES:
-        rows = pairs.select("doc_a", "doc_b").collect()
-        if rows:
-            ids, ea, eb = _dense_edge_index(rows)
-            lbl = _min_label_components(ea, eb)
-            labels = spark.createDataFrame(
-                [
-                    (int(v), int(ids[li]))
-                    for v, li in zip(ids.tolist(), lbl.tolist())
-                ],
-                "v long, label long",
-            )
-        else:
-            labels = spark.createDataFrame([], "v long, label long")
+    min-label fixpoint below pays ~0.5 s per round whatever the data
+    size (measured: 4 rounds x 0.55 s over a 907-edge graph at sf0.1),
+    so a bounded pair frame goes through driver_solve with the numpy
+    min-label union instead (same min-reachable-id result)."""
+    labels = driver_solve(pairs, _min_label_components, "v long, label long")
+    if labels is not None:
         return _components_output(docs, labels)
 
     edges = pairs.union(
@@ -1107,16 +1107,15 @@ def _pagerank_oracle() -> str:
     return cte
 
 
-def _pagerank_driver(rows):
-    """The _PR_ITERS fixed-point rounds in numpy over collected pair
-    rows -> (ids, r), bit-identical to the distributed loop (int64
-    `div` == `//` on positive operands). Returns None when a round's
-    inflow breaks the int64 precondition 85 * m <= 2^63 - 1: numpy
-    would wrap silently where ANSI Spark raises, so the caller falls
-    through to the distributed loop instead."""
+def _pagerank_driver(ids, ea, eb):
+    """driver_solve solver: the _PR_ITERS fixed-point rounds in numpy
+    -> (v, r), bit-identical to the distributed loop (int64 `div` ==
+    `//` on positive operands). Returns None when a round's inflow
+    breaks the int64 precondition 85 * m <= 2^63 - 1: numpy would wrap
+    silently where ANSI Spark raises, so the caller falls through to
+    the distributed loop instead."""
     import numpy as np
 
-    ids, ea, eb = _dense_edge_index(rows)
     src = np.concatenate([ea, eb])
     dst = np.concatenate([eb, ea])
     deg = np.bincount(src, minlength=len(ids))
@@ -1128,39 +1127,27 @@ def _pagerank_driver(rows):
         if m.max(initial=0) > _PR_MAX_INFLOW:
             return None
         r = _PR_TELEPORT + (85 * m) // 100
-    return ids, r
+    return {"v": ids, "r": r}
 
 
-def _pagerank_ranks(
-    spark: SparkSession, verts: DataFrame, pairs: DataFrame
-) -> DataFrame:
+def _pagerank_ranks(verts: DataFrame, pairs: DataFrame) -> DataFrame:
     """Fixed-point PageRank (v, r) of every vertex in `verts` over the
     undirected edge list `pairs` (doc_a, doc_b).
 
-    r13 (the q_dedup_components collect-and-solve gate, same bound,
-    same rationale): the rounds are exact int64 arithmetic over ONLY
-    the dup-graph vertices — a vertex with no candidate edge receives
-    no inflow and settles at the teleport constant after round 1 (and
-    contributes nothing, having no out-edges), so a bounded pair frame
-    is collected and iterated in numpy (_pagerank_driver). The
-    distributed Pregel loop below stays the at-scale path and the
-    fallback when the driver solve's int64 range check fails.
-    Equivalence pinned by a forced-distributed test + the oracle hash;
-    the fallback by a synthetic-star overflow test."""
-    if pairs.count() <= _COMPONENTS_DRIVER_MAX_EDGES:
-        solved = _pagerank_driver(pairs.collect())
-        if solved is not None:
-            ids, r = solved
-            graph_rank = spark.createDataFrame(
-                [(int(v), int(rv)) for v, rv in zip(ids.tolist(), r.tolist())],
-                "v long, r long",
-            )
-            return verts.join(F.broadcast(graph_rank), "v", "left").select(
-                "v",
-                F.coalesce(F.col("r"), F.lit(_PR_TELEPORT))
-                .cast("bigint")
-                .alias("r"),
-            )
+    r13: the rounds are exact int64 arithmetic over ONLY the dup-graph
+    vertices — a vertex with no candidate edge receives no inflow and
+    settles at the teleport constant after round 1 — so a bounded pair
+    frame goes through driver_solve (_pagerank_driver) and the rest
+    join back at teleport (r13 bench at sf0.1: 4.92 -> 3.96 s for the
+    key's 5 rounds)."""
+    graph_rank = driver_solve(pairs, _pagerank_driver, "v long, r long")
+    if graph_rank is not None:
+        return verts.join(F.broadcast(graph_rank), "v", "left").select(
+            "v",
+            F.coalesce(F.col("r"), F.lit(_PR_TELEPORT))
+            .cast("bigint")
+            .alias("r"),
+        )
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).toDF("src", "dst")
@@ -1241,7 +1228,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(checkpoint, eager=True)
     )
     verts = docs.select(F.col("doc_id").alias("v"))
-    rank = _pagerank_ranks(spark, verts, pairs)
+    rank = _pagerank_ranks(verts, pairs)
     # global rank WITHOUT a node-scale single-partition window: count
     # per distinct fixed-point score, two-phase exclusive cumulative
     # count over the descending score order (rank() = strictly-greater

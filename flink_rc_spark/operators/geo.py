@@ -646,7 +646,7 @@ def q_dbscan(spark, sf_dir):
         .select("u", "v")
         .transform(checkpoint, eager=True)
     )
-    # r13 tried-and-REVERTED: the q_dedup_components collect-and-solve
+    # r13 tried-and-REVERTED: the driver_solve collect-and-solve
     # gate on this fixpoint measured SLOWER (4.01 -> 4.53 s min-of-4
     # at sf0.1) — like q_graph_bfs/q_graph_sssp, the loop converges in
     # ~1-2 rounds on the shipped data, less than the gate's fixed

@@ -40,9 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_rc_spark.llm.dedup import (
-    _COMPONENTS_DRIVER_MAX_EDGES as _DRIVER_MAX_EDGES,
     _MINHASH_PAIRS_CTE,
-    _dense_edge_index,
+    driver_solve,
     minhash_candidate_pairs,
 )
 from flink_rc_spark.plans.inspect import checkpoint
@@ -101,7 +100,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = docs.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("v"), F.lit(0).cast("bigint").alias("dist")
     )
-    # r13 tried-and-REVERTED: the q_dedup_components collect-and-solve
+    # r13 tried-and-REVERTED: the driver_solve collect-and-solve
     # gate (kept for pagerank/kcore) measured SLOWER here — 2.75 ->
     # 3.82 s min-of-3 at sf0.1 — because the frontier loop below
     # empties in ~2 rounds on the near-dup graph (isEmpty early-break)
@@ -542,6 +541,24 @@ def _kcore_oracle() -> str:
     )
 
 
+def _kcore_driver(ids, ea, eb):
+    """driver_solve solver: the _KCORE_ROUNDS synchronous peel rounds
+    as masked bincounts -> (doc_id, core_deg) of the survivors."""
+    import numpy as np
+
+    src = np.concatenate([ea, eb])
+    dst = np.concatenate([eb, ea])
+    act = np.ones(len(ids), dtype=bool)
+    for _ in range(_KCORE_ROUNDS):
+        live = act[src] & act[dst]
+        deg = np.bincount(src[live], minlength=len(ids))
+        act = deg >= _KCORE_K
+    live = act[src] & act[dst]
+    deg = np.bincount(src[live], minlength=len(ids))
+    sel = np.nonzero(act & (deg > 0))[0]
+    return {"doc_id": ids[sel], "core_deg": deg[sel]}
+
+
 @register(
     "q_graph_kcore",
     oracle=None,  # assembled below
@@ -579,36 +596,13 @@ def q_graph_kcore(spark, sf_dir):
         .distinct()
         .transform(checkpoint, eager=True)
     )
-    # r13 (the q_dedup_components collect-and-solve gate): the k-core
-    # peel is integer counting over dup-graph vertices only; each
-    # synchronous round is one masked bincount in numpy instead of a
-    # checkpointed two-semi-join round trip (10 rounds x ~0.3 s of
-    # job dispatch). The distributed peel below stays the at-scale
-    # path; equivalence pinned by a forced-distributed test + oracle.
-    if upairs.count() <= _DRIVER_MAX_EDGES:
-        import numpy as np
-
-        rows = upairs.collect()
-        out_rows = []
-        if rows:
-            ids, ea, eb = _dense_edge_index(rows)
-            src = np.concatenate([ea, eb])
-            dst = np.concatenate([eb, ea])
-            act = np.ones(len(ids), dtype=bool)
-            for _ in range(_KCORE_ROUNDS):
-                live = act[src] & act[dst]
-                deg = np.bincount(src[live], minlength=len(ids))
-                act = deg >= _KCORE_K
-            live = act[src] & act[dst]
-            deg = np.bincount(src[live], minlength=len(ids))
-            sel = np.nonzero(act & (deg > 0))[0]
-            out_rows = [
-                (int(ids[i]), int(deg[i])) for i in sel.tolist()
-            ]
-        return (
-            spark.createDataFrame(out_rows, "doc_id long, core_deg long")
-            .orderBy("doc_id")
-        )
+    # r13: the k-core peel is integer counting over dup-graph vertices
+    # only, so a bounded graph goes through driver_solve (_kcore_driver)
+    # instead of 10 checkpointed two-semi-join rounds x ~0.3 s of job
+    # dispatch.
+    solved = driver_solve(upairs, _kcore_driver, "doc_id long, core_deg long")
+    if solved is not None:
+        return solved.orderBy("doc_id")
 
     edges = upairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")

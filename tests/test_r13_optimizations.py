@@ -5,6 +5,11 @@ pin the mechanisms against the pre-r13 spellings they replaced:
 
 - the simhash signature kernel must equal the 60-column JVM bit-vote
   aggregate it replaced, doc for doc;
+- each bounded dup-graph driver solver behind ``dedup.driver_solve``
+  (components, pagerank, kcore) must equal the distributed loop it
+  short-circuits, forced by zeroing the one gate
+  ``dedup._DRIVER_MAX_EDGES``, on real graphs and on an empty one
+  (Arrow on and off); pagerank's int64 range check must fall through;
 - (the r13 setsim verify kernel and the pair-count kernel were both
   tried, measured SLOWER at the larger SF, and reverted — see the
   docstrings at q_join_setsim and pair_support_salted;)
@@ -12,6 +17,7 @@ pin the mechanisms against the pre-r13 spellings they replaced:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -82,7 +88,7 @@ def test_components_driver_union_equals_fixpoint(spark, monkeypatch):
         tuple(r)
         for r in _d.dedup_components_from_pairs(docs, pairs).collect()
     }
-    monkeypatch.setattr(_d, "_COMPONENTS_DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(_d, "_DRIVER_MAX_EDGES", -1)
     ref = {
         tuple(r)
         for r in _d.dedup_components_from_pairs(docs, pairs).collect()
@@ -90,32 +96,65 @@ def test_components_driver_union_equals_fixpoint(spark, monkeypatch):
     assert got == ref and len(got) == docs.count()
 
 
-import pytest
-
-
 @pytest.mark.parametrize(
-    "key,module,gate",
-    [
-        ("q_graph_pagerank", "flink_rc_spark.llm.dedup",
-         "_COMPONENTS_DRIVER_MAX_EDGES"),
-        ("q_graph_kcore", "flink_rc_spark.operators.graph",
-         "_DRIVER_MAX_EDGES"),
-    ],
+    "key", ["q_graph_modularity", "q_graph_pagerank", "q_graph_kcore"]
 )
-def test_graph_driver_solver_equals_distributed(
-    spark, monkeypatch, key, module, gate
-):
+def test_graph_driver_solver_equals_distributed(spark, monkeypatch, key):
     """Each bounded-subgraph driver solver == the distributed fixpoint
     it short-circuits (forced by zeroing the gate), row for row."""
-    import importlib
-
+    from flink_rc_spark.llm import dedup as _d
     from flink_rc_spark.registry import REGISTRY, load_all
 
     load_all()
     got = {tuple(r) for r in REGISTRY[key].builder(spark, SF_DIR).collect()}
-    monkeypatch.setattr(importlib.import_module(module), gate, -1)
+    monkeypatch.setattr(_d, "_DRIVER_MAX_EDGES", -1)
     ref = {tuple(r) for r in REGISTRY[key].builder(spark, SF_DIR).collect()}
     assert got == ref and len(got) > 0
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_driver_solve_empty_graph(spark, monkeypatch, arrow):
+    """A zero-row pair frame takes the gated path with no special case
+    and gives what the forced-distributed path gives: every doc its own
+    component, every vertex at the teleport rank, an empty k-core —
+    with the Arrow hand-off on and off (a vanilla session may have it
+    off)."""
+    from flink_rc_spark.llm import dedup as _d
+    from flink_rc_spark.operators import graph as _g
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, arrow)
+    try:
+        pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+        docs = spark.range(5).select(F.col("id").alias("doc_id"))
+        verts = docs.select(F.col("doc_id").alias("v"))
+        monkeypatch.setattr(_g, "minhash_candidate_pairs", lambda d: pairs)
+
+        def outcome():
+            return [
+                sorted(tuple(r) for r in df.collect())
+                for df in (
+                    _d.dedup_components_from_pairs(docs, pairs),
+                    _d._pagerank_ranks(verts, pairs),
+                    _g.q_graph_kcore(spark, SF_DIR),
+                )
+            ]
+
+        kcore = _d.driver_solve(
+            pairs, _g._kcore_driver, "doc_id long, core_deg long"
+        )
+        assert kcore is not None and kcore.collect() == []
+        gated = outcome()
+        assert gated == [
+            [(i, i, 1, True) for i in range(5)],
+            [(i, _d._PR_TELEPORT) for i in range(5)],
+            [],
+        ]
+        monkeypatch.setattr(_d, "_DRIVER_MAX_EDGES", -1)
+        assert gated == outcome()
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_simhash_kernel_partition_locality(spark):
@@ -152,13 +191,17 @@ def test_pagerank_driver_overflow_falls_back(spark, monkeypatch):
     silently, so the gate must fall through to the distributed loop,
     whose outcome (an ANSI overflow error, or the wrapped values with
     ANSI off) the gated path must then share exactly."""
+    import numpy as np
+
     from flink_rc_spark.llm import dedup as _d
 
+    def star(n):  # (ids, ea, eb): hub index 0, leaves 1..n
+        return np.arange(n + 1), np.zeros(n, dtype=np.int64), np.arange(1, n + 1)
+
     leaves = _d._PR_MAX_INFLOW // _d._PR_SCALE + 1_500  # ~110k
-    assert leaves + 1 <= _d._COMPONENTS_DRIVER_MAX_EDGES
-    star = [(0, i) for i in range(1, leaves + 1)]
-    assert _d._pagerank_driver(star) is None
-    assert _d._pagerank_driver(star[:1_000]) is not None
+    assert leaves <= _d._DRIVER_MAX_EDGES
+    assert _d._pagerank_driver(*star(leaves)) is None
+    assert _d._pagerank_driver(*star(1_000)) is not None
 
     pairs = spark.range(1, leaves + 1).select(
         F.lit(0).cast("long").alias("doc_a"), F.col("id").alias("doc_b")
@@ -168,14 +211,14 @@ def test_pagerank_driver_overflow_falls_back(spark, monkeypatch):
     def outcome():
         try:
             return sorted(
-                tuple(r) for r in _d._pagerank_ranks(spark, verts, pairs).collect()
+                tuple(r) for r in _d._pagerank_ranks(verts, pairs).collect()
             )
         except Exception as e:  # noqa: BLE001 - compared across paths
             assert "ARITHMETIC_OVERFLOW" in str(e), e
             return "overflow"
 
     gated = outcome()
-    monkeypatch.setattr(_d, "_COMPONENTS_DRIVER_MAX_EDGES", -1)
+    monkeypatch.setattr(_d, "_DRIVER_MAX_EDGES", -1)
     assert gated == outcome()
     if spark.conf.get("spark.sql.ansi.enabled").lower() == "true":
         assert gated == "overflow"
