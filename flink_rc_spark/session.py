@@ -1,6 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the test box (local[32], single JVM); every
+Local-mode defaults size themselves from the machine (one task slot per
+core, a driver heap capped from physical RAM, single JVM); every
 setting is chosen so the *same* logical plans scale to a real cluster:
 AQE handles runtime re-planning (partition coalescing, skew joins),
 shuffle partitions default to core count locally but would be
@@ -19,6 +20,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM in whole GiB, between 1g and 16g: the JVM
+    heap shares the box with the Python workers and the OS, so a fixed
+    16g would exceed a 15 GB machine's RAM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2**31))}g"
+
+
 def get_spark(app: str = "flink_rc_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -32,7 +41,10 @@ def get_spark(app: str = "flink_rc_spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # The in-memory status store retains ~1000 executions/jobs/

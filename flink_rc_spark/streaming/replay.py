@@ -19,7 +19,6 @@ source-agnostic. Memory sink is test-only — production sinks are
 
 from __future__ import annotations
 
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,17 +113,6 @@ def _stream_dir(sf_dir: str, n_splits: int = 1) -> str:
     return cached_fixture_dir("events_stream", f"{sf_dir}::{n_splits}", build)
 
 
-# Input volume of the most recent events_stream() call ON THIS THREAD,
-# read (and consumed) by run_to_memory's auto state-partition sizing.
-# THREAD-LOCAL + consume-once (r9 advice: the old module global was
-# last-writer-wins — concurrent builders, or a run_to_memory with no
-# preceding events_stream on the same thread, silently sized state
-# partitions from another query's volume). Builders call the two
-# back-to-back on one thread, which is the only flow that reads a
-# recorded value; any other flow falls back to the documented default.
-_REPLAY_TL = threading.local()
-
-
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -134,14 +122,6 @@ def events_stream(
     """Replay events as a stream. With n_splits>1 the replay defaults
     to one file per trigger (``maxFilesPerTrigger`` is a file-source
     OPTION, not a SQL conf), i.e. n_splits real micro-batches."""
-    import os
-
-    try:
-        _REPLAY_TL.bytes = sum(
-            os.path.getsize(f) for f in _events_parquet_files(sf_dir)
-        )
-    except OSError:  # pragma: no cover - defensive
-        _REPLAY_TL.bytes = None
     ts_is_nanos = _events_ts_is_nanos(sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(events_raw_schema(ts_is_nanos))
@@ -161,64 +141,47 @@ def run_to_memory(
     stream_df: DataFrame,
     output_mode: str = "append",
     stats: dict | None = None,
-    state_partitions: int | str | None = "auto",
 ) -> DataFrame:
     """Execute a bounded streaming query to completion; return results.
 
-    If ``stats`` is passed, records {"num_batches": <micro-batches that
-    consumed input rows>} so tests can assert the replay really was
-    incremental (state carry-over is only proven when num_batches > 1).
+    If ``stats`` is passed, it records:
 
-    ``state_partitions``: streaming state operators shuffle on
-    ``spark.sql.shuffle.partitions`` with NO AQE coalescing, so a
-    session tuned for batch (32-200 partitions) pays 32-200 state-store
-    tasks per micro-batch regardless of volume — measured 9.6 s -> 2.8 s
-    on the sf0.1 stream-stream join by sizing partitions to the replay.
-    The conf is set for the query's planning and restored afterwards
-    (harness queries run sequentially). At 100 TB the same knob goes UP
-    with key cardinality — the point is sizing it to the data, which
-    batch AQE does automatically and streaming does not.
+    - ``num_batches``: micro-batches that consumed input rows, so tests
+      can assert the replay really was incremental (state carry-over is
+      only proven when num_batches > 1);
+    - ``state_partitions``: the state stage's partition count;
+    - ``duration_ms``: ``StreamingQueryProgress.durationMs`` summed over
+      the batches for ``addBatch``, ``queryPlanning``, ``walCommit``
+      and ``triggerExecution``;
+    - ``rows_dropped_by_watermark`` and ``progress_window_saturated``.
 
-    ``"auto"`` (the default) sizes the knob to the replay's INPUT
-    VOLUME recorded by the preceding ``events_stream`` call on the
-    SAME THREAD (thread-local, consumed on read — a stream built on
-    another thread, or a second run with no fresh ``events_stream``,
-    gets the default instead of a stale volume): the r9 split
-    probe (tools/streaming_split_probe.py, BASELINE.md) measured the
-    NULL-kernel state-API overhead at sf1 dropping 6.1 s -> 2.9 s
-    when partitions went 8 -> 32 while sf0.1 was flat — the fixed
-    8 that was right for sf0.1 is the bottleneck at 10x. One state
-    partition per ~512 KB of compressed input, clamped to [8, 32]
-    locally (the cap is the local core count; on a real cluster it
-    scales with executor cores).
+    State partitions: streaming state operators shuffle on
+    ``spark.sql.shuffle.partitions`` with NO AQE coalescing, and the
+    count is fixed for the query's life (it is stored in the
+    checkpoint), so a session tuned for batch (32-200 partitions) pays
+    32-200 state-store tasks per micro-batch regardless of volume. The
+    count is one state partition per task slot,
+    ``sparkContext.defaultParallelism`` read when the query starts:
+    every state-store task runs in the first wave, and each slot holds
+    one partition's keys. On ``local[N]`` that is N. On a cluster it is
+    the executor cores registered at that moment (at least 2), which
+    can be fewer than the cluster will have under dynamic allocation;
+    only ``local[N]`` has been measured. On a 4-core box this rule alone
+    took the perfbench ``stream_replay`` pass from 6.02 s to ~4.7 s
+    against 8 partitions (one per 512 KB of input, clamped to [8, 32]),
+    and ``q_stream_tumbling`` at sf1 from 2.69 s to 1.24 s against 32
+    (BASELINE.md, "State partitions: one per task slot"). The conf is
+    set for the query's planning and restored afterwards, or unset again
+    if the session never set it (harness queries run sequentially).
     """
     spark = stream_df.sparkSession
-    if isinstance(state_partitions, str) and state_partitions != "auto":
-        # fail at the call site, not batches later inside conf.set
-        # (r9 advice: a typo like 'Auto' used to flow into
-        # spark.sql.shuffle.partitions as a literal string)
-        raise ValueError(
-            "state_partitions must be an int, None, or 'auto';"
-            f" got {state_partitions!r}"
-        )
-    if state_partitions == "auto":
-        # consume-once, thread-local: only a same-thread, not-yet-used
-        # events_stream volume sizes the knob — anything else gets the
-        # documented default
-        replay_bytes = getattr(_REPLAY_TL, "bytes", None)
-        _REPLAY_TL.bytes = None
-        if replay_bytes is not None:
-            state_partitions = max(8, min(32, replay_bytes // (512 * 1024)))
-        else:
-            state_partitions = 8
+    state_partitions = spark.sparkContext.defaultParallelism
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    prev_parts = None
-    if state_partitions is not None:
-        # restored only after the bounded replay completes: batch
-        # planning reads the conf lazily, so restoring right after the
-        # async start() would race batch 0
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    # restored only after the bounded replay completes: batch planning
+    # reads the conf lazily, so restoring right after the async start()
+    # would race batch 0
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     q = None
     try:
         # start() lives INSIDE the try: if analysis fails, the finally
@@ -245,6 +208,14 @@ def run_to_memory(
                 1 for p in progress if p["numInputRows"] > 0
             )
             stats["progress_window_saturated"] = len(progress) >= 100
+            stats["state_partitions"] = state_partitions
+            stats["duration_ms"] = {
+                phase: sum(p["durationMs"].get(phase, 0) for p in progress)
+                for phase in (
+                    "addBatch", "queryPlanning", "walCommit",
+                    "triggerExecution",
+                )
+            }
             stats["rows_dropped_by_watermark"] = sum(
                 so.get("numRowsDroppedByWatermark", 0)
                 for p in progress
@@ -253,7 +224,9 @@ def run_to_memory(
     finally:
         if q is not None:
             q.stop()
-        if prev_parts is not None:
+        if prev_parts is None:
+            spark.conf.unset("spark.sql.shuffle.partitions")
+        else:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # The memory sink's rows are driver-held and the registered table
     # SURVIVES q.stop(), later queries, and catalog.clearCache()

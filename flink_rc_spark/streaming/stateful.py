@@ -32,6 +32,7 @@ flink_rc_spark/rc for the batch twins.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,15 +71,25 @@ def has_transform_with_state() -> bool:
         return False
 
 
+def _event_order(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One user's micro-batch slice in event-time order: ts, then
+    event_id, the total order each per-user kernel and its batch oracle
+    fold in. One stable ``np.lexsort`` plus ``take`` gives the same
+    rows in the same order as ``sort_values(["ts", "event_id"],
+    kind="mergesort")`` at ~1/4 of its per-group cost (~0.1 ms vs
+    ~0.4-0.6 ms for a 67-row group)."""
+    return pdf.take(
+        np.lexsort((pdf["event_id"].to_numpy(), pdf["ts"].to_numpy()))
+    )
+
+
 def _advance(n: int, cents: int, pdf: pd.DataFrame):
     """Shared state-transition kernel: fold one micro-batch slice of a
     single user's events into (n, cents) running state, emitting the
     per-row running count/sum. Vectorized exact arithmetic: np.round
     and Python round are both round-half-even, and the accumulation is
     integer cents, so this is bit-identical to a per-row loop."""
-    import numpy as np
-
-    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    pdf = _event_order(pdf)
     vals = np.round(pdf["value"].to_numpy() * 100).astype(np.int64)
     cum = cents + np.cumsum(vals)
     nn = n + np.arange(1, len(vals) + 1, dtype=np.int64)
@@ -205,7 +216,7 @@ def _ewma_kernel(key, pdf_iter, state):
     s = state.get[0] if state.exists else None
     outs = []
     for pdf in pdf_iter:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        pdf = _event_order(pdf)
         ew = []
         for x in pdf["value"].to_numpy():
             x = float(x)
@@ -298,7 +309,7 @@ def _funnel_kernel(key, pdf_iter, state):
     t1, t2, t3 = state.get if state.exists else (None, None, None)
     outs = []
     for pdf in pdf_iter:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        pdf = _event_order(pdf)
         for _, row in pdf.iterrows():
             et, ts = row["event_type"], row["ts"]
             if t1 is None:
@@ -389,7 +400,7 @@ ESN_STATE_SCHEMA = T.StructType(
 
 def _esn_weights():
     """Deterministic small reservoir shared by the streaming kernel
-    and the batch-twin test (seeded init, closure-captured)."""
+    and the batch-twin test (seeded init)."""
     from flink_rc_spark.rc.reservoir import ReservoirConfig, init_weights
 
     cfg = ReservoirConfig(n_u=1, n_x=_ESN_NX, seed=7, spectral_radius=0.8)
@@ -397,38 +408,42 @@ def _esn_weights():
     return cfg, w_in, w
 
 
-def _esn_kernel(key, pdf_iter, state):
+def _esn_kernel(cfg, w_in, w):
     """Per-series reservoir state transition across micro-batches: the
     reference's R4 operator state (x(t-1) held in the Flink operator
     instance) becomes a state-store array<double>. The kernel calls
     the SAME ``reservoir_scan`` the batch RC module runs, seeded from
     stored state, so stream and batch trajectories are bit-identical
-    float-for-float (asserted in tests/test_streaming.py)."""
-    import numpy as np
+    float-for-float (asserted in tests/test_streaming.py).
 
+    The weights are built once on the driver and closure-captured, as
+    ``run_reservoir`` does: building them runs an ``eigvals``, which
+    cost ~70 us per group."""
     from flink_rc_spark.rc.reservoir import reservoir_scan
 
-    cfg, w_in, w = _esn_weights()
-    x = np.array(state.get[0], dtype=float) if state.exists else None
-    outs = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        u = pdf[["value"]].to_numpy(dtype=float)
-        states = reservoir_scan(u, w_in, w, cfg.include_bias, x0=x)
-        if len(states):
-            x = states[-1]
-        outs.append(
-            pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"].to_numpy(),
-                    "event_id": pdf["event_id"].to_numpy(),
-                    "x0": states[:, 0],
-                    "state_norm": np.sqrt((states * states).sum(axis=1)),
-                }
+    def kernel(key, pdf_iter, state):
+        x = np.array(state.get[0], dtype=float) if state.exists else None
+        outs = []
+        for pdf in pdf_iter:
+            pdf = _event_order(pdf)
+            u = pdf[["value"]].to_numpy(dtype=float)
+            states = reservoir_scan(u, w_in, w, cfg.include_bias, x0=x)
+            if len(states):
+                x = states[-1]
+            outs.append(
+                pd.DataFrame(
+                    {
+                        "user_id": pdf["user_id"].to_numpy(),
+                        "event_id": pdf["event_id"].to_numpy(),
+                        "x0": states[:, 0],
+                        "state_norm": np.sqrt((states * states).sum(axis=1)),
+                    }
+                )
             )
-        )
-    state.update((list(map(float, x)) if x is not None else None,))
-    return iter(outs)
+        state.update((list(map(float, x)) if x is not None else None,))
+        return iter(outs)
+
+    return kernel
 
 
 @register("q_stream_esn", oracle=None)
@@ -455,7 +470,7 @@ def q_stream_esn(spark, sf_dir):
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
     out = s.groupBy("user_id").applyInPandasWithState(
-        _esn_kernel,
+        _esn_kernel(*_esn_weights()),
         outputStructType=ESN_OUT_SCHEMA,
         stateStructType=ESN_STATE_SCHEMA,
         outputMode="append",
@@ -498,8 +513,6 @@ def _topk_kernel(key, pdf_iter, state):
     Values accumulate as integer cents (events.value is 2-decimal), so
     ranking ties and emitted doubles are exact; ties break on
     event_id, making the board independent of micro-batch slicing."""
-    import numpy as np
-
     seq, cents, ids = state.get if state.exists else (0, [], [])
     pairs = list(zip(cents, ids))
     for pdf in pdf_iter:
@@ -615,8 +628,6 @@ def _upsert_kernel(key, pdf_iter, state):
     carries only the newest entry's coordinates plus the applied-op
     counter, so redelivered or re-sliced batches fold to the same
     answer — event-time ordering, not arrival ordering, decides."""
-    import numpy as np
-
     seq, bts, beid, bop, bcents, nops = (
         state.get if state.exists else (0, -1, -1, "", 0, 0)
     )
@@ -1207,7 +1218,7 @@ def _anomaly_kernel(key, pdf_iter, state):
     n, s, q = state.get if state.exists else (0, 0, 0)
     outs = []
     for pdf in pdf_iter:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        pdf = _event_order(pdf)
         for uid, eid, c in zip(
             pdf["user_id"].to_numpy(),
             pdf["event_id"].to_numpy(),
@@ -1447,7 +1458,7 @@ def _first_touch_kernel(key, pdf_iter, state):
     for pdf in pdf_iter:
         if seen or not len(pdf):
             continue
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        pdf = _event_order(pdf)
         r = pdf.iloc[0]
         outs.append(
             (int(r["user_id"]), int(r["event_id"]), r["ts"],

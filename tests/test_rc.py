@@ -47,6 +47,28 @@ def test_echo_state_property():
     assert np.linalg.norm(sa[250] - sb[250]) < 1e-6
 
 
+@pytest.mark.parametrize("n_u,n_x,leak", [(1, 16, 1.0), (3, 100, 0.3)])
+def test_scan_in_chained_blocks_is_bit_exact(n_u, n_x, leak):
+    """A series scanned whole must equal the same series scanned as
+    chained blocks (each seeded with the previous block's last state),
+    bit for bit. This is how the streaming ESN advances one micro-batch
+    at a time; the blocks include length-1 ones, where a matrix product
+    may take a different BLAS path than for many rows."""
+    cfg = ReservoirConfig(n_u=n_u, n_x=n_x, seed=3)
+    w_in, w = init_weights(cfg)
+    u = np.random.default_rng(11).normal(scale=5.0, size=(300, n_u))
+    whole = reservoir_scan(u, w_in, w, True, leak_rate=leak)
+    parts, x, start = [], None, 0
+    for n in (1, 1, 2, 67, 1, 3, 8, 1, 150, 1, 65):
+        part = reservoir_scan(
+            u[start : start + n], w_in, w, True, x0=x, leak_rate=leak
+        )
+        parts.append(part)
+        x, start = part[-1], start + n
+    assert start == len(u)
+    assert np.array_equal(whole, np.concatenate(parts))
+
+
 def test_output_dims(spark):
     cfg = ReservoirConfig(n_u=1, n_x=20)
     df = series_df(spark, sine_noise(50))

@@ -129,9 +129,102 @@ def test_stateful_counter_state_survives_batches(spark, sf_dir):
     split = run_to_memory(out, output_mode="append", stats=stats)
 
     assert stats["num_batches"] >= 3, f"replay was not incremental: {stats}"
+    assert stats["state_partitions"] == spark.sparkContext.defaultParallelism
+    assert stats["duration_ms"]["addBatch"] > 0, stats
     a = one_batch.orderBy("user_id", "event_id").toPandas()
     b = split.orderBy("user_id", "event_id").toPandas()
     assert a.equals(b)
+
+
+@pytest.mark.parametrize("kernel", ["counter", "esn"])
+def test_state_partition_count_does_not_change_output(
+    spark, sf_dir, kernel, monkeypatch
+):
+    """The per-user kernels' output on a 4-micro-batch replay must not
+    depend on how the state store is partitioned: one state partition
+    (one task slot) gives exactly the rows of the default (one per task
+    slot of this session). The ESN rows must also equal the batch
+    reservoir scan bit for bit: each series is then scanned in
+    micro-batch-sized blocks on the stream side and whole on the batch
+    side."""
+    from pyspark import SparkContext
+
+    from flink_rc_spark.streaming import stateful as st
+    from flink_rc_spark.streaming.replay import events_stream, run_to_memory
+    from flink_rc_spark.util import ensure_package_shipped
+
+    ensure_package_shipped(spark)
+    fn, out_schema, state_schema = {
+        "counter": (st._counter, st.OUT_SCHEMA, st.STATE_SCHEMA),
+        "esn": (
+            st._esn_kernel(*st._esn_weights()),
+            st.ESN_OUT_SCHEMA,
+            st.ESN_STATE_SCHEMA,
+        ),
+    }[kernel]
+
+    def run():
+        out = events_stream(spark, sf_dir, n_splits=4).groupBy(
+            "user_id"
+        ).applyInPandasWithState(
+            fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf="NoTimeout",
+        )
+        stats: dict = {}
+        df = run_to_memory(out, stats=stats)
+        return stats, df.orderBy("user_id", "event_id").toPandas()
+
+    default_stats, default = run()
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "defaultParallelism", property(lambda sc: 1))
+        one_stats, one = run()
+    assert default_stats["state_partitions"] == (
+        spark.sparkContext.defaultParallelism
+    )
+    assert one_stats["state_partitions"] == 1
+    assert one_stats["num_batches"] >= 3, one_stats
+    assert len(default) > 0 and default.equals(one)
+    if kernel == "esn":
+        expected = _batch_esn_trajectories(spark, sf_dir)
+        got = {
+            (r.user_id, r.event_id): (r.x0, r.state_norm)
+            for r in one.itertuples()
+        }
+        assert got == expected
+
+
+def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
+    """run_to_memory sets spark.sql.shuffle.partitions for the state
+    stage only: afterwards the session's own value is back — or the
+    conf is unset again if the session never set it — both after a
+    completed replay and when start() fails analysis (append mode on an
+    aggregation without a watermark)."""
+    from pyspark.errors import AnalysisException
+
+    from flink_rc_spark.streaming.replay import events_stream, run_to_memory
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    try:
+        for setting in ("7", None):
+            if setting is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, setting)
+            s = events_stream(spark, sf_dir)
+            assert run_to_memory(s.select("event_id")).count() > 0
+            assert spark.conf.get(key, None) == setting
+            with pytest.raises(AnalysisException):
+                run_to_memory(s.groupBy("user_id").count(), output_mode="append")
+            assert spark.conf.get(key, None) == setting
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_watermark_drops_late_row_across_batches(spark, tmp_path):
@@ -724,42 +817,43 @@ def test_foreachbatch_parquet_sink_equals_batch(spark, sf_dir, tmp_path):
     assert expect.exceptAll(back).count() == 0
 
 
+def _batch_esn_trajectories(spark, sf_dir):
+    """{(user_id, event_id): (x0, state_norm)} from the batch reservoir
+    scan of each user's whole series, in (ts, event_id) order."""
+    import numpy as np
+
+    from flink_rc_spark.rc.reservoir import reservoir_scan
+    from flink_rc_spark.streaming.stateful import _esn_weights
+
+    cfg, w_in, w = _esn_weights()
+    pdf = (
+        load(spark, sf_dir, "events")
+        .select("user_id", "event_id", "ts", "value")
+        .toPandas()
+        .sort_values(["user_id", "ts", "event_id"])
+    )
+    expected = {}
+    for uid, g in pdf.groupby("user_id"):
+        u = g[["value"]].to_numpy(dtype=float)
+        states = reservoir_scan(u, w_in, w, cfg.include_bias)
+        norms = np.sqrt((states * states).sum(axis=1))
+        for i, eid in enumerate(g["event_id"].to_numpy()):
+            expected[(uid, eid)] = (states[i, 0], norms[i])
+    return expected
+
+
 def test_stream_esn_matches_batch_reservoir_bit_exact(spark, sf_dir):
     """The streaming reservoir must produce the SAME float trajectory
     as the batch scan on every series — bit-identical, no tolerance:
     the stream seeds each micro-batch from stored state and both paths
     run the identical numpy kernel, so any divergence means state
     carry-over broke (e.g. fresh state per batch)."""
-    import numpy as np
-
-    from flink_rc_spark.registry import REGISTRY, load_all
-    from flink_rc_spark.rc.reservoir import reservoir_scan
-    from flink_rc_spark.sources.tables import load
-    from flink_rc_spark.streaming.stateful import _esn_weights
-
-    load_all()
     streamed = (
         REGISTRY["q_stream_esn"].builder(spark, sf_dir).collect()
     )
     got = {(r.user_id, r.event_id): (r.x0, r.state_norm) for r in streamed}
-
-    cfg, w_in, w = _esn_weights()
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    import pandas as pd
-
-    pdf = ev.toPandas().sort_values(["user_id", "ts", "event_id"])
-    n_checked = 0
-    for uid, g in pdf.groupby("user_id"):
-        u = g[["value"]].to_numpy(dtype=float)
-        states = reservoir_scan(u, w_in, w, cfg.include_bias)
-        norms = np.sqrt((states * states).sum(axis=1))
-        for i, eid in enumerate(g["event_id"].to_numpy()):
-            x0, nrm = got[(uid, eid)]
-            assert x0 == states[i, 0] and nrm == norms[i], (uid, eid)
-            n_checked += 1
-    assert n_checked == len(got) and n_checked > 0
+    expected = _batch_esn_trajectories(spark, sf_dir)
+    assert len(got) > 0 and got == expected
 
 
 def test_stream_topk_state_survives_batches(spark, sf_dir):
