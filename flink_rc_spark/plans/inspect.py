@@ -165,21 +165,32 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     into `PRE_CHECKPOINT_VIOLATIONS` for the plan-audit tests to
     assert on. The walk reuses the optimizedPlan the checkpoint needs
     anyway, so the added cost is the node traversal only.
+
+    The checkpoint's jobs carry the call site as their job description
+    (``checkpoint <file>:<line> in <function>``), so a builder's eager
+    jobs name their origin in the status store; the caller's own
+    description is restored afterwards.
     """
+    # call sites invoke this via df.transform(checkpoint, ...) to
+    # keep method chains intact — walk past pyspark's own frames
+    # to attribute the checkpoint to the package call site
+    f = sys._getframe(1)  # noqa: SLF001
+    while f is not None and "/pyspark/" in f.f_code.co_filename:
+        f = f.f_back
+    site = "<unknown>" if f is None else (
+        f"{f.f_code.co_filename.rsplit('/', 1)[-1]}:{f.f_lineno}"
+        f" in {f.f_code.co_name}"
+    )
     violations = global_window_violations(df)
     if violations:
-        # call sites invoke this via df.transform(checkpoint, ...) to
-        # keep method chains intact — walk past pyspark's own frames
-        # to attribute the finding to the package call site
-        f = sys._getframe(1)  # noqa: SLF001
-        while f is not None and "/pyspark/" in f.f_code.co_filename:
-            f = f.f_back
-        site = "<unknown>" if f is None else (
-            f"{f.f_code.co_filename.rsplit('/', 1)[-1]}:{f.f_lineno}"
-            f" in {f.f_code.co_name}"
-        )
         PRE_CHECKPOINT_VIOLATIONS.setdefault(site, []).extend(violations)
-    return df.localCheckpoint(eager=eager)
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"checkpoint {site}")
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def codegen_stage_count(df: DataFrame) -> int:

@@ -22,49 +22,13 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_parquet_files(sf_dir: str) -> list[str]:
-    """``events.parquet`` may be a single file (the shipped testdata)
-    or a Spark-written DIRECTORY of part files (e.g. the sf1 set from
-    tools/make_sf1.py) — return the concrete file list either way."""
-    import os
-
-    path = f"{sf_dir.rstrip('/')}/events.parquet"
-    if os.path.isdir(path):
-        return sorted(
-            f"{path}/{f}" for f in os.listdir(path) if f.endswith(".parquet")
-        )
-    return [path]
-
-
-def _events_ts_is_nanos(sf_dir: str) -> bool:
-    """Probe the parquet footer (driver-side metadata only) for the
-    physical type of ``events.ts``. The test data has shipped as either
-    TIMESTAMP(NANOS) (Spark needs legacy nanosAsLong + µs truncation)
-    or TIMESTAMP(MICROS) (read natively as TIMESTAMP_NTZ)."""
-    import pyarrow.parquet as pq
-    import pyarrow as pa
-
-    t = pq.read_schema(_events_parquet_files(sf_dir)[0]).field("ts").type
-    return pa.types.is_timestamp(t) and t.unit == "ns"
-
-
-def events_raw_schema(ts_is_nanos: bool) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            # raw nanos (legacy nanosAsLong) or native µs TIMESTAMP_NTZ
-            T.StructField(
-                "ts", T.LongType() if ts_is_nanos else T.TimestampNTZType()
-            ),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+from flink_rc_spark.sources.tables import (
+    events_raw_schema,
+    events_ts_is_nanos,
+    normalize_events_ts,
+    parquet_files,
+)
 
 
 def _stream_dir(sf_dir: str, n_splits: int = 1) -> str:
@@ -88,7 +52,7 @@ def _stream_dir(sf_dir: str, n_splits: int = 1) -> str:
     sf_dir = sf_dir.rstrip("/")
 
     def build(d: str) -> None:
-        files = _events_parquet_files(sf_dir)
+        files = parquet_files(f"{sf_dir}/events.parquet")
         if n_splits <= 1:
             # single-file AND directory-shaped events tables both
             # become one symlink per concrete part file (zero copy)
@@ -122,19 +86,16 @@ def events_stream(
     """Replay events as a stream. With n_splits>1 the replay defaults
     to one file per trigger (``maxFilesPerTrigger`` is a file-source
     OPTION, not a SQL conf), i.e. n_splits real micro-batches."""
-    ts_is_nanos = _events_ts_is_nanos(sf_dir)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts_is_nanos = events_ts_is_nanos(sf_dir)
+    if ts_is_nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(events_raw_schema(ts_is_nanos))
     if max_files_per_trigger is None and n_splits > 1:
         max_files_per_trigger = 1
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.parquet(_stream_dir(sf_dir, n_splits))
-    if ts_is_nanos:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    # native µs NTZ → session-TZ (UTC) TimestampType, matching the
-    # nanos path's output type so every downstream consumer is unchanged
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_events_ts(raw, ts_is_nanos)
 
 
 def run_to_memory(

@@ -467,3 +467,37 @@ def test_no_unbounded_global_windows(spark, sf_dir):
             stale.append(k)
     PRE_CHECKPOINT_VIOLATIONS.clear()
     assert not stale, f"exemptions no longer needed (remove): {stale}"
+
+
+def test_checkpoint_jobs_name_their_call_site(spark):
+    """An eager checkpoint's jobs carry ``checkpoint <file>:<line> in
+    <function>`` as their job description, and the caller's own
+    description comes back afterwards."""
+    import time
+
+    from flink_rc_spark.plans.inspect import checkpoint
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()  # noqa: SLF001
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    prev = {k: sc.getLocalProperty(k) for k in keys}
+    group = "test_plans:checkpoint_site"
+    try:
+        sc.setJobGroup(group, "caller description")
+        spark.range(100).transform(checkpoint)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        deadline = time.monotonic() + 10
+        tracker = sc.statusTracker()
+        while not tracker.getJobIdsForGroup(group) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        ids = list(tracker.getJobIdsForGroup(group))
+        assert ids, "the eager checkpoint ran no job"
+        descs = {str(store.job(j).description().get()) for j in ids}
+        assert all(
+            d.startswith("checkpoint test_plans.py:")
+            and d.endswith("in test_checkpoint_jobs_name_their_call_site")
+            for d in descs
+        ), descs
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)

@@ -239,7 +239,8 @@ def test_watermark_drops_late_row_across_batches(spark, tmp_path):
     numRowsDroppedByWatermark) plus a 15:00 row."""
     import os
 
-    from flink_rc_spark.streaming.replay import events_raw_schema, run_to_memory
+    from flink_rc_spark.sources.tables import events_raw_schema
+    from flink_rc_spark.streaming.replay import run_to_memory
 
     # this test writes its own raw-nanos files, so it always exercises
     # the legacy long-nanos schema regardless of the shipped testdata
@@ -909,11 +910,12 @@ def test_stateful_state_survives_query_RESTART(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from flink_rc_spark.streaming.replay import (
-        _events_ts_is_nanos,
-        _stream_dir,
+    from flink_rc_spark.sources.tables import (
         events_raw_schema,
+        events_ts_is_nanos,
+        normalize_events_ts,
     )
+    from flink_rc_spark.streaming.replay import _stream_dir
     from flink_rc_spark.streaming.stateful import stateful_counter_stream
     from flink_rc_spark.util import ensure_package_shipped
 
@@ -930,17 +932,15 @@ def test_stateful_state_survives_query_RESTART(spark, sf_dir, tmp_path):
         os.utime(dst, (1_700_000_000 + seq, 1_700_000_000 + seq))
 
     def run_once():
-        ts_is_nanos = _events_ts_is_nanos(sf_dir)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ts_is_nanos = events_ts_is_nanos(sf_dir)
+        if ts_is_nanos:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         reader = (
             spark.readStream.schema(events_raw_schema(ts_is_nanos))
             .option("maxFilesPerTrigger", "1")
             .parquet(str(src))
         )
-        if ts_is_nanos:
-            s = reader.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        else:
-            s = reader.withColumn("ts", F.col("ts").cast("timestamp"))
+        s = normalize_events_ts(reader, ts_is_nanos)
         prev = spark.conf.get("spark.sql.shuffle.partitions", None)
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
