@@ -38,8 +38,9 @@ Tail keys slower than twice their wall in the committed
 re-executed once and the min kept; ``calib.retried_keys`` lists every
 re-executed key.
 
-``tools/key_probe.py`` and ``tools/kernel_ab_probe.py`` time keys with
-this module's ``execute``, ``codegen_probe`` and ``warm_session``.
+``tools/key_probe.py`` times keys with this module's ``execute``,
+``codegen_probe`` and ``warm_session``, and passes ``execute`` a
+``perfbench/tracer.py::Tracer`` to split each wall into layers.
 """
 
 from __future__ import annotations
@@ -85,18 +86,30 @@ def _noop_wall(df) -> float:
     return round(time.perf_counter() - t0, 4)
 
 
-def execute(spark, key: str, sf_dir: str) -> float:
-    """Wall of one registry key: builder call plus noop-sink execution."""
+def execute(spark, key: str, sf_dir: str, tracer=None):
+    """Wall of one registry key: builder call plus noop-sink execution.
+
+    With a ``tracer`` (``perfbench/tracer.py::Tracer``) the builder's
+    and the sink's jobs are tagged as the key's builder and exec phases,
+    and the tracer's reading of the key is returned instead of the
+    wall: a dict of layer readings whose ``builder_s`` and ``exec_s``
+    sum to it."""
+    if tracer is not None:
+        tracer.set_phase(key, "builder")
     t0 = time.perf_counter()
-    REGISTRY[key].builder(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    elapsed = time.perf_counter() - t0
+    df = REGISTRY[key].builder(spark, sf_dir)
+    t1 = time.perf_counter()
+    if tracer is not None:
+        tracer.set_phase(key, "exec")
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
     # drop persisted RDDs a builder left behind (e.g. the RC pipeline's
     # reservoir-state persist): across ~120 keys the accumulated blocks
     # skew later keys' times with GC/memory pressure
     spark.catalog.clearCache()
-    return elapsed
+    if tracer is not None:
+        return tracer.finish_key(key, t1 - t0, t2 - t1)
+    return t2 - t0
 
 
 def codegen_probe(spark) -> float:

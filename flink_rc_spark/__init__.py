@@ -11,7 +11,7 @@ Echo State Networks on Apache Flink), re-expressed Spark-first:
 - RC/ML surface: stateful recurrence + readout fitting (``rc/``) —
   the reference's ESN pipeline (its ``rc_core``/``lm`` modules,
   SURVEY.md §2.1 R4–R8) rebuilt on applyInPandas /
-  transformWithStateInPandas;
+  applyInPandasWithState;
 - LLM-data-pipeline surface: dedup / similarity / text analysis /
   multimodal plumbing (``llm/``).
 

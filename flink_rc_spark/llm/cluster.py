@@ -59,21 +59,17 @@ _DIST_SPARK = (
     "aggregate(zip_with(m, cm, (a, b) -> (a - b) * (a - b)),"
     " 0L, (acc, x) -> acc + x)"
 )
-# The SAME integer distance as 64 FLAT squared-difference terms
-# (int64 addition is exact/associative, so values are bit-identical
-# either way). The r10 claim that this form beat the HOF on the fit
-# was a count()-probe artifact: r11 noop-sink A/Bs measured the
-# 64-term tree EQUAL at sf1 (10.5 vs 10.3 s fit) and 1.5-5x SLOWER
-# everywhere else (q_kmeans 3.1 vs 2.0 s sf0.1, q_sample_coreset 5.4
-# vs 3.8, q_ivf_pq_search 3.4 vs 2.3, semdedup pairs 18 vs 3.3 s at
-# sf1) — a 64-term tree blows the whole-stage-codegen budget of its
-# enclosing stage, and an INTERPRETED flat tree (per-node dispatch)
-# is slower than the interpreted HOF fold. 16-term trees (PQ subdims,
+# A HOF fold, not 64 flat squared-difference terms (int64 addition is
+# exact, so values would be bit-identical): the r10 claim that the flat
+# form beat the HOF on the fit was a count()-probe artifact. The flat
+# tree measured EQUAL on the sf1 fit (10.5 vs 10.3 s) and 1.5-5x
+# SLOWER everywhere else in the r11 noop-sink A/Bs (q_kmeans 3.1 vs
+# 2.0 s sf0.1, q_sample_coreset 5.4 vs 3.8, q_ivf_pq_search 3.4 vs
+# 2.3, semdedup pairs 18 vs 3.3 s at sf1): a 64-term tree blows the whole-stage-codegen budget of its
+# enclosing stage, and an INTERPRETED flat tree (per-node dispatch) is
+# slower than the interpreted HOF fold. 16-term trees (PQ subdims,
 # matryoshka prefix) stay under the budget and DO win — see
-# similarity.py. Kept for the probe tools; no production consumer.
-_DIST_SPARK_FLAT = " + ".join(
-    f"(m[{i}] - cm[{i}]) * (m[{i}] - cm[{i}])" for i in range(DIM)
-)
+# similarity.py.
 _DIST_DUCK = (
     f"list_sum(list_transform(range(1, {DIM + 1}),"
     " i -> (m[i] - cm[i]) * (m[i] - cm[i])))"

@@ -33,9 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# HOF norm everywhere: 64-term flat trees lose at every probed shape
+# HOF dot and norm everywhere: 64-term flat trees lose at every probed shape
 # (similarity.py kernel note, r11 A/B)
-from flink_rc_spark.llm.similarity import _NORM_HOF
+from flink_rc_spark.llm.similarity import _DOT_SPARK, _NORM_SPARK
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -573,7 +573,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = v.withColumn(
         "nrm",
-        F.expr(_NORM_HOF),
+        F.expr(_NORM_SPARK),
     )
     a = n.select(
         F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"), F.col("nrm").alias("na")
@@ -583,9 +583,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # small fixed block (vec_id < 200): HOF kernel — the r10 unroll
     # regressed this key 0.79 -> 2.20 s at sf0.1 (plan-build cost)
-    from flink_rc_spark.llm.similarity import _DOT_HOF as _dot
-
-    cos = F.expr(_dot) / (F.col("na") * F.col("nb"))
+    cos = F.expr(_DOT_SPARK) / (F.col("na") * F.col("nb"))
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .filter(cos >= 0.35)
@@ -929,15 +927,12 @@ def _semantic_planes(n: int) -> int:
     )
 
 
-def semantic_candidates(
-    spark: SparkSession, sf_dir: str, planes: int | None = None
-) -> DataFrame:
+def semantic_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_dedup_semantic's candidate stage: corpus-scaled LSH bucket
     assignment + in-bucket pair cosines via the shared Arrow kernel
-    (llm/pairkern.py, pairs mode, cos >= 0.30). Factored out so the
-    scale probe (tools/semantic_scale_probe.py) and the recall audit
-    can measure exactly the shipped stage, including with a pinned
-    ``planes`` for the fixed-vs-scaled counterfactual.
+    (llm/pairkern.py, pairs mode, cos >= 0.30). The fixed-vs-scaled
+    plane-count measurement is in BASELINE.md, "r12: q_dedup_semantic's
+    LSH blocking is occupancy-bounded".
 
     Each bucket's vectors cross the Arrow boundary ONCE and the pair
     matrix is tiled, replacing the r10 bucket self-join whose
@@ -952,9 +947,8 @@ def semantic_candidates(
     )
     from flink_rc_spark.llm.similarity import _lsh_bit_spark, _vectors
 
-    if planes is None:
-        # planning-time scalar (one count, not a data pass per row)
-        planes = _semantic_planes(load(spark, sf_dir, "embeddings").count())
+    # planning-time scalar (one count, not a data pass per row)
+    planes = _semantic_planes(load(spark, sf_dir, "embeddings").count())
     n = _vectors(spark, sf_dir)
     bucket_expr = " + ".join(
         f"({_lsh_bit_spark(j)}) * {2 ** j}" for j in range(planes)
@@ -1595,7 +1589,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nv = emb.withColumn(
         "nrm",
-        F.expr(_NORM_HOF),
+        F.expr(_NORM_SPARK),
     )
     mem = asg.join(nv, "vec_id")
 

@@ -35,11 +35,11 @@ from flink_rc_spark.sources.tables import load
 _DIM = 64
 _N_PLANES = 8
 
-# Kernel-spelling policy (r11, measured — BASELINE.md r11 section):
+# Kernel-spelling policy (r11, measured — BASELINE.md "r11: the
+# kernel unroll un-blanketed — and then fully reverted at 64 terms"):
 # the r10 blanket unroll of all vector kernels into flat arithmetic
 # was built on a count()-probe artifact and regressed every consumer
-# it touched with a 64-TERM tree. The r11 noop-sink A/Bs
-# (tools/kernel_ab_probe.py + per-stage probes) show a clean
+# it touched with a 64-TERM tree. The r11 noop-sink A/Bs show a clean
 # tree-size threshold:
 #
 #  - 64-term flat trees LOSE everywhere (q_sim_cosine_topk 2.5 vs
@@ -58,16 +58,9 @@ _N_PLANES = 8
 # order left-associatively, and the HOF's leading `0d +` is
 # IEEE-exact (0.0 + x == x), so the repo's sequential-fold double
 # policy — what the DuckDB oracles' list_reduce mirrors — is
-# unchanged by the choice. The _FLAT forms are kept for the probe
-# tools (no production consumer).
-_DOT_FLAT = " + ".join(f"(ea[{i}] * eb[{i}])" for i in range(_DIM))
-_NORM_FLAT = (
-    "sqrt(" + " + ".join(f"(e[{i}] * e[{i}])" for i in range(_DIM)) + ")"
-)
-_DOT_HOF = "aggregate(zip_with(ea, eb, (x, y) -> x * y), 0d, (acc, x) -> acc + x)"
-_NORM_HOF = "sqrt(aggregate(transform(e, x -> x*x), 0d, (acc, x) -> acc + x))"
-_DOT_SPARK = _DOT_HOF
-_NORM_SPARK = _NORM_HOF
+# unchanged by the choice.
+_DOT_SPARK = "aggregate(zip_with(ea, eb, (x, y) -> x * y), 0d, (acc, x) -> acc + x)"
+_NORM_SPARK = "sqrt(aggregate(transform(e, x -> x*x), 0d, (acc, x) -> acc + x))"
 
 _DOT_DUCK = (
     f"list_reduce(list_transform(range(1, {_DIM + 1}),"

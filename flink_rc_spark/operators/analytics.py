@@ -2372,16 +2372,17 @@ def _mkv_round_sql(r: int) -> str:
 
 
 def _mkv_transition_counts(spark, sf_dir):
-    """The data-touching stage of q_attribution_markov, shared with
-    tools/markov_split_probe.py: journey transitions (from_s, to_s,
-    cnt) for journeys truncated at the first purchase. ONE window
-    exchange on user_id carries row_number, lead, AND a running
-    prior-purchase count (same partition + order ⇒ one sort); a row
-    is kept iff no purchase precedes it. Each kept row then emits its
-    ≤ 2 transitions (journey start at rn=1; step out of a
-    non-purchase state — the full-order lead IS the kept successor by
-    the prefix property) in one compacted-array explode pass, so the
-    window subtree is read once, not twice."""
+    """The data-touching stage of q_attribution_markov (its stage split
+    is in BASELINE.md, "r9: the last two weak plans, measured dead"):
+    journey transitions (from_s, to_s, cnt) for journeys truncated at
+    the first purchase. ONE window exchange on user_id carries
+    row_number, lead, AND a running prior-purchase count (same
+    partition + order ⇒ one sort); a row is kept iff no purchase
+    precedes it. Each kept row then emits its ≤ 2 transitions (journey
+    start at rn=1; step out of a non-purchase state — the full-order
+    lead IS the kept successor by the prefix property) in one
+    compacted-array explode pass, so the window subtree is read once,
+    not twice."""
     ev = load(spark, sf_dir, "events")
     wuser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wprior = wuser.rowsBetween(Window.unboundedPreceding, -1)

@@ -396,8 +396,9 @@ def q_tpch_q18(spark, sf_dir):
     one lineitem shuffle total, the filtered survivors (top few % of
     orders; threshold 300, max ≈ 458 in this data) join orders and
     customer directly, and no second aggregate exists. The driver
-    hash proves the rewrite exact. Measured at the 10× fact probe
-    (tools/scale_probe_tpch.py): 4.2× → ~1.6× time at 10× data.
+    hash proves the rewrite exact. Measured at 10× fact volume
+    (BASELINE.md, "TPC-H-wave scale probe"): 4.2× → ~1.6× time at
+    10× data.
     """
     li = load(spark, sf_dir, "lineitem")
     big = (

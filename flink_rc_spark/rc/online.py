@@ -8,7 +8,7 @@ acyclic, so the loop is re-architected as *model-in-state*: the weight
 vector lives in per-key state and is updated record-by-record inside a
 grouped sequential scan (batch: ``applyInPandas`` per series ordered
 by seq; streaming: the same update inside
-``transformWithStateInPandas``, flink_rc_spark/streaming/stateful.py).
+``applyInPandasWithState``, flink_rc_spark/streaming/stateful.py).
 The update sequence — and therefore the learned weights — matches the
 reference's semantics; only the mechanism is Spark-idiomatic.
 

@@ -191,8 +191,9 @@ def run_to_memory(
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # The memory sink's rows are driver-held and the registered table
     # SURVIVES q.stop(), later queries, and catalog.clearCache()
-    # (probed r13: tools/streaming_fixed_cost_probe.py session) — the
-    # former defensive `cache() + count()` tail only copied the rows
-    # into block-manager storage and paid one extra job per key,
-    # ~0.2-0.3 s x 21 streaming keys of pure overhead.
+    # (probed r13, OPTIMIZATION_r13.md "Streaming replay — the
+    # fixed-cost split") — the former defensive `cache() + count()`
+    # tail only copied the rows into block-manager storage and paid
+    # one extra job per key, ~0.2-0.3 s x 21 streaming keys of pure
+    # overhead.
     return spark.table(name)

@@ -4,20 +4,12 @@ q_stream_stateful_counter) — the reference's operator-state pattern
 a per-user running count/sum held in the streaming state store,
 surviving across micro-batches.
 
-Two API paths, one kernel (``_advance``):
-
-- ``transformWithStateInPandas`` (Spark 4.x's current stateful API,
-  ``_build_tws``) — used automatically when the Python ``protobuf``
-  package is importable. Its state-server protocol needs protobuf;
-  this container lacks it and cannot pip-install, so here the adapter
-  falls back (verified r2: the API crashes with ``ImportError:
-  cannot import name 'descriptor' from 'google.protobuf'``).
-- ``applyInPandasWithState`` (``_build_apws``) — the fallback with
-  identical state-store semantics and no protobuf dependency.
-
-A deployment with protobuf gets the newer API with no code change;
-``tests/test_streaming.py`` runs an equality check between the two
-paths when possible and skips cleanly here.
+The counter runs on ``applyInPandasWithState``. Spark 4.x's
+``transformWithStateInPandas`` is not used: its state-server protocol
+imports protobuf-generated classes at worker startup, and this
+deployment has no Python ``protobuf`` (the API crashes with
+``ImportError: cannot import name 'descriptor' from
+'google.protobuf'``). The state-store semantics are the same.
 
 Exactness: the running sum accumulates in integer *cents* inside the
 state (events.value is 2-decimal), so the emitted double equals the
@@ -58,19 +50,6 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def has_transform_with_state() -> bool:
-    """True when transformWithStateInPandas can actually run: its
-    state-server protocol imports protobuf-generated message classes at
-    worker startup, so a bare ``import google.protobuf`` is not enough
-    — probe the symbol the traceback named."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
 def _event_order(pdf: pd.DataFrame) -> pd.DataFrame:
     """One user's micro-batch slice in event-time order: ts, then
     event_id, the total order each per-user kernel and its batch oracle
@@ -84,7 +63,7 @@ def _event_order(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _advance(n: int, cents: int, pdf: pd.DataFrame):
-    """Shared state-transition kernel: fold one micro-batch slice of a
+    """State-transition kernel: fold one micro-batch slice of a
     single user's events into (n, cents) running state, emitting the
     per-row running count/sum. Vectorized exact arithmetic: np.round
     and Python round are both round-half-even, and the accumulation is
@@ -116,7 +95,8 @@ def _counter(key, pdf_iter, state):
     state.update((n, cents))
 
 
-def _build_apws(s):
+def stateful_counter_stream(s):
+    """The per-user running count/sum of ``s`` as a stateful stream."""
     return s.groupBy("user_id").applyInPandasWithState(
         _counter,
         outputStructType=OUT_SCHEMA,
@@ -124,51 +104,6 @@ def _build_apws(s):
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-
-
-def _build_tws(s):
-    """transformWithStateInPandas path. Imports live inside the
-    function: the stateful_processor module itself needs protobuf, so
-    a module-level import would break the fallback container."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _CounterProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("counter", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, cents = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n, cents, out = _advance(n, cents, pdf)
-                yield out
-            self._state.update((n, cents))
-
-        def close(self) -> None:
-            pass
-
-    return s.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_CounterProcessor(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
-def stateful_counter_stream(s, force_api: str | None = None):
-    """Route the counter through the best available stateful API.
-
-    ``force_api``: "tws" / "apws" pins a path (tests); default
-    auto-detects protobuf and prefers transformWithStateInPandas.
-    """
-    api = force_api or ("tws" if has_transform_with_state() else "apws")
-    if api == "tws":
-        return _build_tws(s)
-    return _build_apws(s)
 
 
 @register(
@@ -580,8 +515,8 @@ def q_stream_topk(spark, sf_dir):
     number; the final board (max seq per key) is the result and equals
     the batch window top-K exactly — the oracle. The state is O(K) per
     key no matter how many events stream through: the aggregation is
-    the pruning. Uses the applyInPandasWithState path (see the module
-    docstring for the transformWithStateInPandas adapter note)."""
+    the pruning. Uses applyInPandasWithState (see the module docstring
+    for why not transformWithStateInPandas)."""
     from pyspark.sql import Window
 
     ensure_package_shipped(spark)

@@ -1,10 +1,11 @@
 """Synthesize an sf1-scale dataset (10x the sf0.1 facts) for the
 headline scaling run — VERDICT r4 item 5.
 
-Growth shape mirrors tools/scale_probe_tpch.py (facts grow,
-dimensions don't — the realistic warehouse curve), but MATERIALIZED
-as a parquet directory so the unmodified bench.py harness runs
-against it via SPARK_GRAFT_SF_DIR:
+Growth shape is the one BASELINE.md's 10x probes measured ("TPC-H-wave
+scale probe", "Streaming scale probe"): facts grow, dimensions don't —
+the realistic warehouse curve. It is MATERIALIZED as a parquet
+directory so the unmodified bench.py harness and
+``tools/key_probe.py --sf`` run against it:
 
 - lineitem / orders: 10 replicas with DISJOINT order keys
   (l_orderkey/o_orderkey += r * 1e9); o_custkey untouched so join
@@ -32,6 +33,7 @@ Replica 0 is the identity, so sf0.1 is a literal subset. Output:
     python tools/make_sf1.py
     SPARK_GRAFT_SF_DIR=/root/repo/.localdata/sf1 \
         SPARK_GRAFT_BENCH_HEADLINE_ONLY=1 python bench.py
+    python tools/key_probe.py q_tpch_q18 --sf .localdata/sf1
 
 Results recorded in BASELINE.md ("sf1 headline scaling run").
 """
