@@ -27,6 +27,13 @@ from pyspark.sql import functions as F
 
 MONEY = "decimal(12,2)"
 
+# Integer cents of the 2-decimal double ``value``, spelled exactly as
+# the oracles spell it: the DECIMAL cast rounds half away from zero in
+# both engines (numpy's np.round rounds half to even, so exact half
+# cents would disagree). Kernels that fold cents in Python read a
+# column projected in the JVM with F.expr(CENTS_SQL).
+CENTS_SQL = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
 
 def dlit(x, prec: int = 12, scale: int = 2) -> Column:
     """Literal cast to decimal (lazy — safe at import time only if not

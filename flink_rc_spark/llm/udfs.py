@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from flink_rc_spark.functions.exact import CENTS_SQL
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 from flink_rc_spark.util import ensure_package_shipped
@@ -202,13 +203,11 @@ def q_udtf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @pandas_udf(T.LongType())
 def _cents_sum(v: pd.Series) -> int:
-    """Exact event-value total in integer cents (the stateful-counter
-    kernel's quantization): np.round on 2-decimal doubles lands on the
-    same integer as the oracle's DECIMAL(18,2) route regardless of the
-    half-rounding mode, so the Python aggregate is hash-exact."""
-    import numpy as np
-
-    return int(np.round(v.to_numpy() * 100).astype("int64").sum())
+    """Exact total of a ``cents`` column projected with ``CENTS_SQL``,
+    the oracle's own DECIMAL(18,2) cast. Rounding in Python instead
+    would not match: np.round rounds exact half cents to even, the
+    cast rounds them away from zero. The integer sum is hash-exact."""
+    return int(v.sum())
 
 
 # Spark refuses to mix GROUPED_AGG pandas UDFs with JVM aggregates in
@@ -263,16 +262,18 @@ def q_udaf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension surface, like the rest of the udf family).
     """
     ensure_package_shipped(spark)
-    ev = load(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.expr(CENTS_SQL).alias("cents")
+    )
     from pyspark.sql import Window
 
     wu = Window.partitionBy("user_id")
-    with_user = ev.withColumn("user_cents", _cents_sum("value").over(wu))
+    with_user = ev.withColumn("user_cents", _cents_sum("cents").over(wu))
     return (
         with_user.groupBy("event_type")
         .agg(
-            _count_rows("value").alias("n"),
-            _cents_sum("value").alias("total_cents"),
+            _count_rows("cents").alias("n"),
+            _cents_sum("cents").alias("total_cents"),
             _max_long("user_cents").alias("max_user_cents"),
         )
         .orderBy("event_type")

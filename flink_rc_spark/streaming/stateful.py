@@ -11,10 +11,15 @@ deployment has no Python ``protobuf`` (the API crashes with
 ``ImportError: cannot import name 'descriptor' from
 'google.protobuf'``). The state-store semantics are the same.
 
-Exactness: the running sum accumulates in integer *cents* inside the
-state (events.value is 2-decimal), so the emitted double equals the
-batch oracle's decimal-window cumulative sum bit-for-bit — no float
-drift however many micro-batches the stream is split into.
+Exactness: kernels that sum money fold integer *cents*, read from a
+``cents`` column the JVM projects with the oracles' own cast
+(``functions.exact.CENTS_SQL``, DECIMAL(18,2) rounding half away from
+zero), so the emitted doubles equal the batch oracle's decimal sums
+bit-for-bit — no float drift however many micro-batches the stream is
+split into, and no second rounding rule in Python. Kernels that fold a
+user's events in order read them through ``_in_event_order``, which
+decides the (ts, event_id) order of a group's whole micro-batch in one
+place.
 
 100 TB story: state is partitioned by user_id in the state store
 (RocksDB in production), sized O(distinct keys); the same operator
@@ -29,6 +34,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_rc_spark.functions.exact import CENTS_SQL
 from flink_rc_spark.registry import register
 from flink_rc_spark.streaming.replay import events_stream, run_to_memory
 from flink_rc_spark.util import ensure_package_shipped
@@ -50,54 +56,49 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _event_order(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One user's micro-batch slice in event-time order: ts, then
-    event_id, the total order each per-user kernel and its batch oracle
-    fold in. One stable ``np.lexsort`` plus ``take`` gives the same
-    rows in the same order as ``sort_values(["ts", "event_id"],
-    kind="mergesort")`` at ~1/4 of its per-group cost (~0.1 ms vs
-    ~0.4-0.6 ms for a 67-row group)."""
+def _in_event_order(pdf_iter) -> pd.DataFrame:
+    """One group's rows for this micro-batch as one frame, in event-time
+    order: ts, then event_id, the total order each per-user kernel and
+    its batch oracle fold in.
+
+    Chunk contract: Spark hands a group over in Arrow chunks of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, in arrival
+    order, and arrival order is not event-time order. So every chunk is
+    read before the one stable ``np.lexsort``; sorting each chunk on its
+    own folds a group wrongly as soon as it spans two chunks. A group
+    with no rows (only a timed-out call has none) is not read here."""
+    pdfs = list(pdf_iter)
+    pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
     return pdf.take(
         np.lexsort((pdf["event_id"].to_numpy(), pdf["ts"].to_numpy()))
     )
 
 
-def _advance(n: int, cents: int, pdf: pd.DataFrame):
-    """State-transition kernel: fold one micro-batch slice of a
-    single user's events into (n, cents) running state, emitting the
-    per-row running count/sum. Vectorized exact arithmetic: np.round
-    and Python round are both round-half-even, and the accumulation is
-    integer cents, so this is bit-identical to a per-row loop."""
-    pdf = _event_order(pdf)
-    vals = np.round(pdf["value"].to_numpy() * 100).astype(np.int64)
-    cum = cents + np.cumsum(vals)
-    nn = n + np.arange(1, len(vals) + 1, dtype=np.int64)
-    if len(vals):
-        n = int(nn[-1])
-        cents = int(cum[-1])
-    out = pd.DataFrame(
+def _counter(key, pdf_iter, state):
+    """State transition of the per-user running count/sum: fold the
+    group's micro-batch into (n, cents) state, emitting the per-row
+    running count/sum. The accumulation is integer cents, so the
+    vectorized cumsum is bit-identical to a per-row loop."""
+    n, cents = state.get if state.exists else (0, 0)
+    pdf = _in_event_order(pdf_iter)
+    cum = cents + np.cumsum(pdf["cents"].to_numpy())
+    state.update((n + len(pdf), cents + int(pdf["cents"].sum())))
+    yield pd.DataFrame(
         {
             "user_id": pdf["user_id"].to_numpy(),
             "event_id": pdf["event_id"].to_numpy(),
-            "running_n": nn,
+            "running_n": n + np.arange(1, len(pdf) + 1, dtype=np.int64),
             "running_sum": cum / 100.0,
         }
     )
-    return n, cents, out
-
-
-def _counter(key, pdf_iter, state):
-    """applyInPandasWithState wrapper around _advance."""
-    n, cents = state.get if state.exists else (0, 0)
-    for pdf in pdf_iter:
-        n, cents, out = _advance(n, cents, pdf)
-        yield out
-    state.update((n, cents))
 
 
 def stateful_counter_stream(s):
     """The per-user running count/sum of ``s`` as a stateful stream."""
-    return s.groupBy("user_id").applyInPandasWithState(
+    rows = s.select(
+        "user_id", "event_id", "ts", F.expr(CENTS_SQL).alias("cents")
+    )
+    return rows.groupBy("user_id").applyInPandasWithState(
         _counter,
         outputStructType=OUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -149,25 +150,20 @@ def _ewma_kernel(key, pdf_iter, state):
     loop is bit-identical. Rows per (user, micro-batch) are bounded by
     the batch size, so the loop is short by construction."""
     s = state.get[0] if state.exists else None
-    outs = []
-    for pdf in pdf_iter:
-        pdf = _event_order(pdf)
-        ew = []
-        for x in pdf["value"].to_numpy():
-            x = float(x)
-            s = x if s is None else 0.25 * x + 0.75 * s
-            ew.append(s)
-        outs.append(
-            pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"].to_numpy(),
-                    "event_id": pdf["event_id"].to_numpy(),
-                    "ewma": ew,
-                }
-            )
-        )
+    pdf = _in_event_order(pdf_iter)
+    ew = []
+    for x in pdf["value"].to_numpy():
+        x = float(x)
+        s = x if s is None else 0.25 * x + 0.75 * s
+        ew.append(s)
     state.update((s,))
-    return iter(outs)
+    yield pd.DataFrame(
+        {
+            "user_id": pdf["user_id"].to_numpy(),
+            "event_id": pdf["event_id"].to_numpy(),
+            "ewma": ew,
+        }
+    )
 
 
 @register(
@@ -203,7 +199,8 @@ def q_stream_ewma(spark, sf_dir):
     """
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
-    out = s.groupBy("user_id").applyInPandasWithState(
+    rows = s.select("user_id", "event_id", "ts", "value")
+    out = rows.groupBy("user_id").applyInPandasWithState(
         _ewma_kernel,
         outputStructType=EWMA_OUT_SCHEMA,
         stateStructType=EWMA_STATE_SCHEMA,
@@ -243,22 +240,20 @@ def _funnel_kernel(key, pdf_iter, state):
     bake batch boundaries into the result)."""
     t1, t2, t3 = state.get if state.exists else (None, None, None)
     outs = []
-    for pdf in pdf_iter:
-        pdf = _event_order(pdf)
-        for _, row in pdf.iterrows():
-            et, ts = row["event_type"], row["ts"]
-            if t1 is None:
-                if et == "view":
-                    t1 = ts
-                    outs.append((row["user_id"], 1, ts))
-            elif t2 is None:
-                if et == "click" and ts > t1:
-                    t2 = ts
-                    outs.append((row["user_id"], 2, ts))
-            elif t3 is None:
-                if et == "purchase" and ts > t2:
-                    t3 = ts
-                    outs.append((row["user_id"], 3, ts))
+    for _, row in _in_event_order(pdf_iter).iterrows():
+        et, ts = row["event_type"], row["ts"]
+        if t1 is None:
+            if et == "view":
+                t1 = ts
+                outs.append((row["user_id"], 1, ts))
+        elif t2 is None:
+            if et == "click" and ts > t1:
+                t2 = ts
+                outs.append((row["user_id"], 2, ts))
+        elif t3 is None:
+            if et == "purchase" and ts > t2:
+                t3 = ts
+                outs.append((row["user_id"], 3, ts))
     state.update((t1, t2, t3))
     if outs:
         yield pd.DataFrame(outs, columns=["user_id", "step", "ts"])
@@ -303,7 +298,8 @@ def q_stream_funnel(spark, sf_dir):
     """
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
-    out = s.groupBy("user_id").applyInPandasWithState(
+    rows = s.select("user_id", "event_id", "ts", "event_type")
+    out = rows.groupBy("user_id").applyInPandasWithState(
         _funnel_kernel,
         outputStructType=FUNNEL_OUT_SCHEMA,
         stateStructType=FUNNEL_STATE_SCHEMA,
@@ -358,27 +354,32 @@ def _esn_kernel(cfg, w_in, w):
 
     def kernel(key, pdf_iter, state):
         x = np.array(state.get[0], dtype=float) if state.exists else None
-        outs = []
-        for pdf in pdf_iter:
-            pdf = _event_order(pdf)
-            u = pdf[["value"]].to_numpy(dtype=float)
-            states = reservoir_scan(u, w_in, w, cfg.include_bias, x0=x)
-            if len(states):
-                x = states[-1]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"].to_numpy(),
-                        "event_id": pdf["event_id"].to_numpy(),
-                        "x0": states[:, 0],
-                        "state_norm": np.sqrt((states * states).sum(axis=1)),
-                    }
-                )
-            )
-        state.update((list(map(float, x)) if x is not None else None,))
-        return iter(outs)
+        pdf = _in_event_order(pdf_iter)
+        u = pdf[["value"]].to_numpy(dtype=float)
+        states = reservoir_scan(u, w_in, w, cfg.include_bias, x0=x)
+        state.update((list(map(float, states[-1])),))
+        yield pd.DataFrame(
+            {
+                "user_id": pdf["user_id"].to_numpy(),
+                "event_id": pdf["event_id"].to_numpy(),
+                "x0": states[:, 0],
+                "state_norm": np.sqrt((states * states).sum(axis=1)),
+            }
+        )
 
     return kernel
+
+
+def esn_stream(s):
+    """The per-user streaming reservoir trajectory of ``s``."""
+    rows = s.select("user_id", "event_id", "ts", "value")
+    return rows.groupBy("user_id").applyInPandasWithState(
+        _esn_kernel(*_esn_weights()),
+        outputStructType=ESN_OUT_SCHEMA,
+        stateStructType=ESN_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf="NoTimeout",
+    )
 
 
 @register("q_stream_esn", oracle=None)
@@ -404,14 +405,7 @@ def q_stream_esn(spark, sf_dir):
     """
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
-    out = s.groupBy("user_id").applyInPandasWithState(
-        _esn_kernel(*_esn_weights()),
-        outputStructType=ESN_OUT_SCHEMA,
-        stateStructType=ESN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-    return run_to_memory(out, output_mode="append")
+    return run_to_memory(esn_stream(s), output_mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -445,23 +439,13 @@ def _topk_kernel(key, pdf_iter, state):
     tagged with a batch sequence number. State is O(K) per key — the
     leaderboard IS the state, the classic bounded-state streaming
     aggregate (contrast with the unbounded raw stream it summarizes).
-    Values accumulate as integer cents (events.value is 2-decimal), so
-    ranking ties and emitted doubles are exact; ties break on
-    event_id, making the board independent of micro-batch slicing."""
+    Values are integer cents (the ``cents`` column), so ranking ties
+    and emitted doubles are exact; ties break on event_id, making the
+    board independent of micro-batch slicing."""
     seq, cents, ids = state.get if state.exists else (0, [], [])
     pairs = list(zip(cents, ids))
     for pdf in pdf_iter:
-        # Round-half-AWAY-FROM-ZERO, matching the oracle's
-        # CAST(.. AS DECIMAL(18,2)) on BOTH signs — np.round is
-        # banker's rounding and diverges on exact .xx5 inputs, and
-        # plain floor(v*100+0.5) is half-up toward +inf, which would
-        # diverge from DECIMAL on negative exact halves (fixture
-        # values are positive, but the kernel shouldn't rely on it).
-        raw = pdf["value"].to_numpy() * 100
-        v = np.where(raw >= 0, np.floor(raw + 0.5), np.ceil(raw - 0.5)).astype(
-            np.int64
-        )
-        for c, e in zip(v, pdf["event_id"].to_numpy()):
+        for c, e in zip(pdf["cents"].to_numpy(), pdf["event_id"].to_numpy()):
             pairs.append((int(c), int(e)))
     pairs.sort(key=lambda t: (-t[0], t[1]))
     pairs = pairs[:TOPK_K]
@@ -480,7 +464,10 @@ def _topk_kernel(key, pdf_iter, state):
 
 
 def stream_topk(s):
-    return s.groupBy("event_type").applyInPandasWithState(
+    rows = s.select(
+        "event_type", "event_id", F.expr(CENTS_SQL).alias("cents")
+    )
+    return rows.groupBy("event_type").applyInPandasWithState(
         _topk_kernel,
         outputStructType=TOPK_OUT_SCHEMA,
         stateStructType=TOPK_STATE_SCHEMA,
@@ -567,10 +554,7 @@ def _upsert_kernel(key, pdf_iter, state):
         state.get if state.exists else (0, -1, -1, "", 0, 0)
     )
     for pdf in pdf_iter:
-        raw = pdf["value"].to_numpy() * 100
-        cents = np.where(
-            raw >= 0, np.floor(raw + 0.5), np.ceil(raw - 0.5)
-        ).astype(np.int64)
+        cents = pdf["cents"].to_numpy()
         ts_us = pdf["ts_us"].to_numpy()
         eids = pdf["event_id"].to_numpy()
         ops = pdf["event_type"].to_numpy()
@@ -600,7 +584,7 @@ def stream_upsert(s):
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
         "event_type",
-        "value",
+        F.expr(CENTS_SQL).alias("cents"),
     )
     return slim.groupBy("user_id").applyInPandasWithState(
         _upsert_kernel,
@@ -687,16 +671,14 @@ def _cep_kernel(key, pdf_iter, state):
     the OPEN run (first view's id + ts and the run length); a click
     arriving while a run is open closes and emits a match, any other
     type resets the run. Events are scanned in event-time order
-    (batch rows sorted here; batches arrive in event-time order by
-    the replay contract), so the machine's transitions are exactly
-    the batch gaps-and-islands decomposition's."""
+    (``_in_event_order`` within a batch; batches arrive in event-time
+    order by the replay contract), so the machine's transitions are
+    exactly the batch gaps-and-islands decomposition's."""
     first_id, first_ts, run_len = (
         state.get if state.exists else (-1, -1, 0)
     )
     out = []
-    pdfs = list(pdf_iter)
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
+    pdf = _in_event_order(pdf_iter)
     for ts_us, eid, etype in zip(
         pdf["ts_us"].to_numpy(), pdf["event_id"].to_numpy(), pdf["event_type"]
     ):
@@ -730,6 +712,7 @@ def _cep_kernel(key, pdf_iter, state):
 def stream_cep(s):
     slim = s.select(
         "user_id",
+        "ts",
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
         "event_type",
@@ -843,9 +826,7 @@ def _timeout_kernel(key, pdf_iter, state):
         return
     pending = state.get if state.exists else None
     out = []
-    pdfs = list(pdf_iter)
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    pdf = pdf.sort_values(["ts_us", "event_id"], kind="mergesort")
+    pdf = _in_event_order(pdf_iter)
     for ts_us, eid, etype in zip(
         pdf["ts_us"].to_numpy(), pdf["event_id"].to_numpy(), pdf["event_type"]
     ):
@@ -1152,28 +1133,21 @@ def _anomaly_kernel(key, pdf_iter, state):
 
     n, s, q = state.get if state.exists else (0, 0, 0)
     outs = []
-    for pdf in pdf_iter:
-        pdf = _event_order(pdf)
-        for uid, eid, c in zip(
-            pdf["user_id"].to_numpy(),
-            pdf["event_id"].to_numpy(),
-            pdf["cents"].to_numpy(),
-        ):
-            c = int(c)
-            if n >= _ANOM_MIN_PRIOR:
-                den = n * q - s * s
-                num = c * n - s
-                if den > 0 and num * num > 9 * den:
-                    outs.append(
-                        (
-                            int(uid),
-                            int(eid),
-                            c,
-                            n,
-                            float(num) / math.sqrt(float(den)),
-                        )
-                    )
-            n, s, q = n + 1, s + c, q + c * c
+    pdf = _in_event_order(pdf_iter)
+    for uid, eid, c in zip(
+        pdf["user_id"].to_numpy(),
+        pdf["event_id"].to_numpy(),
+        pdf["cents"].to_numpy(),
+    ):
+        c = int(c)
+        if n >= _ANOM_MIN_PRIOR:
+            den = n * q - s * s
+            num = c * n - s
+            if den > 0 and num * num > 9 * den:
+                outs.append(
+                    (int(uid), int(eid), c, n, float(num) / math.sqrt(float(den)))
+                )
+        n, s, q = n + 1, s + c, q + c * c
     state.update((n, s, q))
     if outs:
         yield pd.DataFrame(
@@ -1186,9 +1160,7 @@ def stream_anomaly(s):
         "user_id",
         "event_id",
         "ts",
-        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias(
-            "cents"
-        ),
+        F.expr(CENTS_SQL).alias("cents"),
     )
     return rows.groupBy("user_id").applyInPandasWithState(
         _anomaly_kernel,
@@ -1388,23 +1360,10 @@ def _first_touch_kernel(key, pdf_iter, state):
     at a state TRANSITION (unseen → seen), so it is invariant to
     micro-batch boundaries on the ordered replay — the q_stream_funnel
     discipline with a 1-bit machine."""
-    seen = state.exists
-    outs = []
-    for pdf in pdf_iter:
-        if seen or not len(pdf):
-            continue
-        pdf = _event_order(pdf)
-        r = pdf.iloc[0]
-        outs.append(
-            (int(r["user_id"]), int(r["event_id"]), r["ts"],
-             str(r["event_type"]))
-        )
-        seen = True
-    state.update((1,))
-    if outs:
-        yield pd.DataFrame(
-            outs, columns=["user_id", "event_id", "ts", "event_type"]
-        )
+    first = _in_event_order(pdf_iter).iloc[:1]
+    if not state.exists:
+        state.update((1,))
+        yield first
 
 
 def stream_first_touch(s):

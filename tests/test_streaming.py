@@ -111,20 +111,13 @@ def test_stateful_counter_state_survives_batches(spark, sf_dir):
     (n, cents) state survives between batches. Fails if state resets:
     running_n would restart at 1 inside later batches."""
     from flink_rc_spark.streaming.replay import events_stream, run_to_memory
-    from flink_rc_spark.streaming.stateful import OUT_SCHEMA, STATE_SCHEMA, _counter
+    from flink_rc_spark.streaming.stateful import stateful_counter_stream
     from flink_rc_spark.util import ensure_package_shipped
 
     ensure_package_shipped(spark)
     one_batch = REGISTRY["q_stream_stateful_counter"].builder(spark, sf_dir)
 
-    s = events_stream(spark, sf_dir, n_splits=4)
-    out = s.groupBy("user_id").applyInPandasWithState(
-        _counter,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    out = stateful_counter_stream(events_stream(spark, sf_dir, n_splits=4))
     stats: dict = {}
     split = run_to_memory(out, output_mode="append", stats=stats)
 
@@ -154,25 +147,10 @@ def test_state_partition_count_does_not_change_output(
     from flink_rc_spark.util import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    fn, out_schema, state_schema = {
-        "counter": (st._counter, st.OUT_SCHEMA, st.STATE_SCHEMA),
-        "esn": (
-            st._esn_kernel(*st._esn_weights()),
-            st.ESN_OUT_SCHEMA,
-            st.ESN_STATE_SCHEMA,
-        ),
-    }[kernel]
+    build = {"counter": st.stateful_counter_stream, "esn": st.esn_stream}[kernel]
 
     def run():
-        out = events_stream(spark, sf_dir, n_splits=4).groupBy(
-            "user_id"
-        ).applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+        out = build(events_stream(spark, sf_dir, n_splits=4))
         stats: dict = {}
         df = run_to_memory(out, stats=stats)
         return stats, df.orderBy("user_id", "event_id").toPandas()
@@ -1472,3 +1450,96 @@ def test_stream_hll_slicing_invariant_and_equals_batch(spark, sf_dir):
         2 ** (41 - reg_map.get(b, 0)) for b in range(_SHLL_M)
     )
     assert scaled == one.scaled_power_sum
+
+
+# Keys whose oracle parity must survive a row-shuffled events table
+# delivered to each group in Arrow chunks of 8 rows, with every value
+# on an exact half cent.
+_SHUFFLED_HALF_CENT_KEYS = [
+    "q_stream_stateful_counter",
+    "q_stream_ewma",
+    "q_stream_funnel",
+    "q_stream_anomaly",
+    "q_stream_first_touch",
+    "q_stream_cep",
+    "q_stream_timeout",
+    "q_stream_upsert",
+    "q_stream_topk",
+    "q_udaf_surface",
+]
+
+
+@pytest.fixture(scope="module")
+def shuffled_half_cent_dir(sf_dir, tmp_path_factory):
+    """An sf dir of symlinks to ``sf_dir``'s tables, except events: a
+    seeded row permutation of them with every value set to
+    floor(value) + 0.125, which sits exactly on a half cent (x.125 is a
+    binary fraction, so ``value * 100`` ends in .5 with no float error).
+    The order exposes kernels that sort each Arrow chunk on its own;
+    the half cents expose cents rounded half to even where the oracles'
+    ``CAST(value AS DECIMAL(18,2))`` rounds half away from zero."""
+    import os
+
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flink_rc_spark.sources.tables import TABLES
+
+    d = tmp_path_factory.mktemp("shuffled_half_cent")
+    for t in TABLES:
+        if t != "events":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), d / f"{t}.parquet")
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    tbl = tbl.take(np.random.default_rng(9).permutation(tbl.num_rows))
+    i = tbl.schema.get_field_index("value")
+    tbl = tbl.set_column(
+        i, tbl.schema.field(i), pc.add(pc.floor(tbl["value"]), 0.125)
+    )
+    pq.write_table(tbl, str(d / "events.parquet"))
+    return str(d)
+
+
+@pytest.fixture
+def arrow_chunks_of_8(spark):
+    """Python workers receive each group in Arrow chunks of 8 rows for
+    the test's duration; the session's setting is restored after."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "8")
+    yield
+    if prev is not None:
+        spark.conf.set(key, prev)
+    else:
+        spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("key", _SHUFFLED_HALF_CENT_KEYS)
+def test_oracle_parity_on_shuffled_half_cent_events(
+    spark, shuffled_half_cent_dir, arrow_chunks_of_8, key
+):
+    """Stream == batch must not depend on the order rows reach a group
+    or on how Spark chunks them: each kernel folds a group's whole
+    micro-batch in (ts, event_id) order, and takes its cents from the
+    oracle's own cast."""
+    from tests.parity import duck_connect, run_parity
+
+    spec = REGISTRY[key]
+    con = duck_connect(shuffled_half_cent_dir)
+    try:
+        run_parity(
+            spark, con, shuffled_half_cent_dir, key, spec.builder, spec.oracle
+        )
+    finally:
+        con.close()
+
+
+def test_stream_esn_on_shuffled_events_matches_batch(
+    spark, shuffled_half_cent_dir, arrow_chunks_of_8
+):
+    """The streamed reservoir trajectories equal the batch scan on the
+    row-shuffled, 8-row-chunked replay too."""
+    d = shuffled_half_cent_dir
+    streamed = REGISTRY["q_stream_esn"].builder(spark, d).collect()
+    got = {(r.user_id, r.event_id): (r.x0, r.state_norm) for r in streamed}
+    assert len(got) > 0 and got == _batch_esn_trajectories(spark, d)
