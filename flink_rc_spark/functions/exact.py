@@ -18,6 +18,20 @@ price*(1-disc)*(1+tax) lands at scale 6 / width ≤ 38 exactly.
 At 100 TB this costs nothing extra: decimal(≤18,2) aggregation is
 still codegen'd JVM-side with partial aggregation (map-side combine);
 only the 128-bit path (>18 digits) is marginally slower than double.
+
+Two more values are spelled here once, for both engines:
+
+- cents: ``CENTS_SQL``, the DECIMAL cast that rounds half away from
+  zero in both engines;
+- md5-derived integers: ``hex_int``/``md5_int`` render the BIGINT
+  value of ``n`` hex digits (1 <= n <= 15; 16 would overflow BIGINT)
+  as ``CAST(conv(substr(h, s, n), 16, 10) AS BIGINT)`` in Spark and
+  ``('0x' || substr(h, s, n))::BIGINT`` in DuckDB. Hash buckets,
+  sampling thresholds, bootstrap weights and sketch positions all read
+  their integers through them, and call sites spell the hashed key
+  once, in the subset both engines parse:
+  ``'u' || CAST(user_id AS STRING)`` (``||``, not ``concat``: on a
+  NULL argument Spark's ``concat`` returns NULL, DuckDB's skips it).
 """
 
 from __future__ import annotations
@@ -33,6 +47,27 @@ MONEY = "decimal(12,2)"
 # cents would disagree). Kernels that fold cents in Python read a
 # column projected in the JVM with F.expr(CENTS_SQL).
 CENTS_SQL = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
+
+def hex_int(hex_sql: str, start: int | str, n: int, *, duck: bool = False) -> str:
+    """SQL for the BIGINT value of ``n`` hex digits of the hex-string
+    expression ``hex_sql``, read from 1-based position ``start`` (an
+    int or an SQL expression, e.g. ``2*i-1`` inside a DuckDB lambda).
+    Spark by default, DuckDB with ``duck=True``; ``hex_sql`` is
+    evaluated once either way."""
+    if not isinstance(n, int) or not 1 <= n <= 15:
+        raise ValueError(
+            f"hex_int: n={n!r} is outside 1..15 (16 hex digits overflow BIGINT)"
+        )
+    digits = f"substr({hex_sql}, {start}, {n})"
+    if duck:
+        return f"('0x' || {digits})::BIGINT"
+    return f"CAST(conv({digits}, 16, 10) AS BIGINT)"
+
+
+def md5_int(key_sql: str, start: int | str, n: int, *, duck: bool = False) -> str:
+    """``hex_int`` of ``md5(key_sql)``."""
+    return hex_int(f"md5({key_sql})", start, n, duck=duck)
 
 
 def dlit(x, prec: int = 12, scale: int = 2) -> Column:

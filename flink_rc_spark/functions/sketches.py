@@ -28,23 +28,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import dsum
+from flink_rc_spark.functions.exact import dsum, md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
 _DEPTH = 4
 _WIDTH = 256
 
-# md5-derived uniform byte (bucket in [0, 256)) of '<depth>|<token>' —
-# the sampling.py/profile.py idiom, reused as the CMS hash family
-_BUCKET_SPARK = (
-    "(instr('0123456789abcdef', substr(md5(concat(depth, '|', tok)), 1, 1)) - 1)"
-    " * 16 + instr('0123456789abcdef', substr(md5(concat(depth, '|', tok)), 2, 1)) - 1"
-)
-_BUCKET_DUCK = (
-    "(strpos('0123456789abcdef', substr(md5(depth || '|' || tok), 1, 1)) - 1)"
-    " * 16 + strpos('0123456789abcdef', substr(md5(depth || '|' || tok), 2, 1)) - 1"
-)
+
+def _cms_bucket(depth: str = "depth", tok: str = "tok", duck: bool = False) -> str:
+    """md5-derived uniform byte (bucket in [0, 256)) of '<depth>|<token>'
+    — the sampling.py/profile.py idiom, reused as the CMS hash family."""
+    return md5_int(f"{depth} || '|' || {tok}", 1, 2, duck=duck)
 
 
 @register(
@@ -58,7 +53,7 @@ _BUCKET_DUCK = (
         FROM toks, range({_DEPTH}) r(d)
     ),
     sketch AS (
-        SELECT depth, {_BUCKET_DUCK} AS bucket, COUNT(*) AS c
+        SELECT depth, {_cms_bucket(duck=True)} AS bucket, COUNT(*) AS c
         FROM cells
         GROUP BY depth, bucket
     ),
@@ -77,7 +72,7 @@ _BUCKET_DUCK = (
     FROM probe_cells pc
     JOIN sketch s
       ON s.depth = pc.depth
-     AND s.bucket = {_BUCKET_DUCK.replace("tok", "pc.tok").replace("depth", "pc.depth")}
+     AND s.bucket = {_cms_bucket("pc.depth", "pc.tok", duck=True)}
     GROUP BY pc.tok, pc.true_n
     ORDER BY true_n DESC, tok
     """,
@@ -99,7 +94,7 @@ def q_sketch_cms(spark, sf_dir):
         "tok",
     )
     sketch = (
-        cells.withColumn("bucket", F.expr(_BUCKET_SPARK))
+        cells.withColumn("bucket", F.expr(_cms_bucket()))
         .groupBy("depth", "bucket")
         .agg(F.count("*").alias("c"))
     )
@@ -115,7 +110,7 @@ def q_sketch_cms(spark, sf_dir):
         F.explode(
             F.array(*[F.lit(str(d)) for d in range(_DEPTH)])
         ).alias("depth"),
-    ).withColumn("bucket", F.expr(_BUCKET_SPARK))
+    ).withColumn("bucket", F.expr(_cms_bucket()))
     return (
         probe_cells.join(F.broadcast(sketch), ["depth", "bucket"])
         .groupBy("tok", "true_n")
@@ -140,6 +135,56 @@ _HLL_ALPHA = 0.7213 / (1.0 + 1.079 / _HLL_M)
 _HLL_NUMERATOR = _HLL_ALPHA * float(_HLL_M * _HLL_M) * float(1 << 41)
 
 
+def hll_bucket(key: str, duck: bool = False) -> str:
+    """HLL bucket of the string ``key``: its first two md5 hex digits."""
+    return md5_int(key, 1, 2, duck=duck)
+
+
+def hll_w(key: str, duck: bool = False) -> str:
+    """The 40-bit rho window of the string ``key``: md5 hex digits 3..12."""
+    return md5_int(key, 3, 10, duck=duck)
+
+
+def hll_rho(w: str) -> str:
+    """HLL rho of the window value ``w``: leading zeros + 1, in [1, 41]
+    (INT; the same text in both dialects). ``w`` is read twice:
+    q_sketch_hll projects ``hll_w`` as a column first, because with it
+    inlined the key took 1.52-1.74 s against 1.19-1.47 s (sf0.1, 4
+    cores, 4 runs each)."""
+    return f"CASE WHEN {w} = 0 THEN 41 ELSE 40 - length(bin({w})) + 1 END"
+
+
+# The estimate row of a frame of `register` values: empty buckets,
+# register sum, the harmonic denominator SUM(2^(41-r)) scaled to
+# integers (float powers would sum in engine-specific order; bigints
+# cannot drift) and one double division of exactly-agreed numbers.
+HLL_ESTIMATE_DUCK = f"""
+           CAST(SUM(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS empty_buckets,
+           CAST(SUM(register) AS BIGINT) AS register_sum,
+           CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS BIGINT)
+               AS scaled_power_sum,
+           CAST({_HLL_NUMERATOR!r} AS DOUBLE)
+               / CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS DOUBLE)
+               AS hll_estimate
+"""
+
+
+def hll_estimate() -> list:
+    """Spark twin of ``HLL_ESTIMATE_DUCK``: the four aggregate columns."""
+    scaled = F.sum(F.expr("CAST(pow(2, 41 - register) AS BIGINT)"))
+    return [
+        F.sum(F.when(F.col("register") == 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("empty_buckets"),
+        F.sum("register").cast("bigint").alias("register_sum"),
+        scaled.cast("bigint").alias("scaled_power_sum"),
+        (F.lit(_HLL_NUMERATOR).cast("double") / scaled.cast("double")).alias(
+            "hll_estimate"
+        ),
+    ]
+
+
 @register(
     "q_sketch_hll",
     oracle=f"""
@@ -147,16 +192,11 @@ _HLL_NUMERATOR = _HLL_ALPHA * float(_HLL_M * _HLL_M) * float(1 << 41)
         SELECT unnest(string_split(text, ' ')) AS tok FROM documents
     ),
     cells AS (
-        SELECT CAST(('0x' || substr(md5(tok), 1, 2))::BIGINT AS BIGINT) AS bucket,
-               ('0x' || substr(md5(tok), 3, 10))::BIGINT AS w
+        SELECT {hll_bucket("tok", duck=True)} AS bucket,
+               {hll_w("tok", duck=True)} AS w
         FROM toks
     ),
-    rho AS (
-        SELECT bucket,
-               CASE WHEN w = 0 THEN 41
-                    ELSE 40 - length(bin(w)) + 1 END AS r
-        FROM cells
-    ),
+    rho AS (SELECT bucket, {hll_rho("w")} AS r FROM cells),
     regs AS (
         SELECT g.bucket,
                CAST(COALESCE(MAX(rho.r), 0) AS BIGINT) AS register
@@ -164,16 +204,7 @@ _HLL_NUMERATOR = _HLL_ALPHA * float(_HLL_M * _HLL_M) * float(1 << 41)
         LEFT JOIN rho ON rho.bucket = g.bucket
         GROUP BY g.bucket
     )
-    SELECT CAST(SUM(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS empty_buckets,
-           CAST(SUM(register) AS BIGINT) AS register_sum,
-           -- SUM(2^(41-r)) scaled to integers: float powers would sum in
-           -- engine-specific order; bigints cannot drift
-           CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS BIGINT)
-               AS scaled_power_sum,
-           CAST({_HLL_NUMERATOR!r} AS DOUBLE)
-               / CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS DOUBLE)
-               AS hll_estimate
+    SELECT {HLL_ESTIMATE_DUCK}
     FROM regs
     """,
     tags=("sketch", "llm"),
@@ -196,36 +227,17 @@ def q_sketch_hll(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("tok"))
     cells = toks.select(
-        F.expr("CAST(conv(substring(md5(tok), 1, 2), 16, 10) AS BIGINT)").alias(
-            "bucket"
-        ),
-        F.expr("CAST(conv(substring(md5(tok), 3, 10), 16, 10) AS BIGINT)").alias(
-            "w"
-        ),
+        F.expr(hll_bucket("tok")).alias("bucket"),
+        F.expr(hll_w("tok")).alias("w"),
     )
-    rho = cells.select(
-        "bucket",
-        F.when(F.col("w") == 0, F.lit(41))
-        .otherwise(F.lit(40) - F.length(F.expr("bin(w)")) + F.lit(1))
-        .alias("r"),
-    )
+    rho = cells.select("bucket", F.expr(hll_rho("w")).alias("r"))
     spine = spark.range(_HLL_M).select(F.col("id").alias("bucket"))
     regs = (
         spine.join(rho, "bucket", "left")
         .groupBy("bucket")
         .agg(F.coalesce(F.max("r"), F.lit(0)).cast("bigint").alias("register"))
     )
-    scaled = F.sum(F.expr("CAST(pow(2, 41 - register) AS BIGINT)"))
-    return regs.agg(
-        F.sum(F.when(F.col("register") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("empty_buckets"),
-        F.sum("register").cast("bigint").alias("register_sum"),
-        scaled.cast("bigint").alias("scaled_power_sum"),
-        (
-            F.lit(_HLL_NUMERATOR).cast("double") / scaled.cast("double")
-        ).alias("hll_estimate"),
-    )
+    return regs.agg(*hll_estimate())
 
 
 # ---------------------------------------------------------------------------
@@ -239,14 +251,12 @@ _BLOOM_K = 3         # hash functions
 # bit differently across engines' typing rules)
 _BLOOM_WORD_BITS = 32
 
-# md5-derived position in [0, 2048): first 3 hex chars of md5('<i>|<tok>')
-_POS_SPARK = (
-    "CAST(conv(substring(md5(concat(i, '|', tok)), 1, 3), 16, 10) AS BIGINT)"
-    f" % {_BLOOM_BITS}"
-)
-_POS_DUCK = (
-    f"(('0x' || substr(md5(i || '|' || tok), 1, 3))::BIGINT % {_BLOOM_BITS})"
-)
+
+def _bloom_pos(x: str, i: str = "i", duck: bool = False) -> str:
+    """md5-derived position in [0, 2048) of the string ``x`` under hash
+    ``i``: the first 3 hex chars of md5('<i>|<x>')."""
+    key = f"{i} || '|' || {x}"
+    return f"({md5_int(key, 1, 3, duck=duck)} % {_BLOOM_BITS})"
 
 
 @register(
@@ -261,8 +271,9 @@ _POS_DUCK = (
         FROM build, range({_BLOOM_K}) r(i)
     ),
     sketch AS (
-        SELECT {_POS_DUCK} // {_BLOOM_WORD_BITS} AS word,
-               bit_or((1::BIGINT) << ({_POS_DUCK} % {_BLOOM_WORD_BITS}))
+        SELECT {_bloom_pos("tok", duck=True)} // {_BLOOM_WORD_BITS} AS word,
+               bit_or((1::BIGINT)
+                      << ({_bloom_pos("tok", duck=True)} % {_BLOOM_WORD_BITS}))
                    AS word_val
         FROM build_cells
         GROUP BY word
@@ -286,12 +297,12 @@ _POS_DUCK = (
         SELECT pc.tok,
                bool_and(
                    COALESCE(s.word_val, 0)
-                   & ((1::BIGINT) << ({_POS_DUCK.replace("tok", "pc.tok")}
+                   & ((1::BIGINT) << ({_bloom_pos("pc.tok", duck=True)}
                                       % {_BLOOM_WORD_BITS})) <> 0
                ) AS bloom_hit
         FROM probe_cells pc
         LEFT JOIN sketch s
-          ON s.word = {_POS_DUCK.replace("tok", "pc.tok")} // {_BLOOM_WORD_BITS}
+          ON s.word = {_bloom_pos("pc.tok", duck=True)} // {_BLOOM_WORD_BITS}
         GROUP BY pc.tok
     )
     SELECT h.tok,
@@ -325,7 +336,7 @@ def q_sketch_bloom(spark, sf_dir):
     )
     ks = F.array(*[F.lit(str(i)) for i in range(_BLOOM_K)])
     build_cells = build.select(F.explode(ks).alias("i"), "tok").withColumn(
-        "pos", F.expr(_POS_SPARK)
+        "pos", F.expr(_bloom_pos("tok"))
     )
     sketch = (
         build_cells.select(
@@ -351,7 +362,7 @@ def q_sketch_bloom(spark, sf_dir):
     )
     probe_cells = (
         probes.select("tok", F.explode(ks).alias("i"))
-        .withColumn("pos", F.expr(_POS_SPARK))
+        .withColumn("pos", F.expr(_bloom_pos("tok")))
         .withColumn("word", (F.col("pos") / _BLOOM_WORD_BITS).cast("bigint"))
         .withColumn(
             "bitval",
@@ -380,18 +391,6 @@ def q_sketch_bloom(spark, sf_dir):
         )
         .orderBy(F.desc("truly_in"), "tok")
     )
-
-
-# Bloom positions for a BIGINT key (same family as the token filter,
-# over the key's decimal string)
-_KPOS_SPARK = (
-    "CAST(conv(substring(md5(concat(i, '|', CAST(k AS STRING))), 1, 3), 16, 10)"
-    f" AS BIGINT) % {_BLOOM_BITS}"
-)
-_KPOS_DUCK = (
-    "(('0x' || substr(md5(i || '|' || CAST(k AS VARCHAR)), 1, 3))::BIGINT"
-    f" % {_BLOOM_BITS})"
-)
 
 
 @register(
@@ -431,7 +430,7 @@ def q_bloom_prune_join(spark, sf_dir):
     build_cells = (
         cust.select(F.col("c_custkey").alias("k"))
         .select(F.explode(ks).alias("i"), "k")
-        .withColumn("pos", F.expr(_KPOS_SPARK))
+        .withColumn("pos", F.expr(_bloom_pos("CAST(k AS STRING)")))
     )
     words = (
         build_cells.select(
@@ -453,11 +452,7 @@ def q_bloom_prune_join(spark, sf_dir):
     orders = load(spark, sf_dir, "orders").withColumn("_bw", lit_words)
     probe = orders
     for i in range(_BLOOM_K):
-        pos = (
-            f"CAST(conv(substring(md5(concat('{i}', '|',"
-            f" CAST(o_custkey AS STRING))), 1, 3), 16, 10) AS BIGINT)"
-            f" % {_BLOOM_BITS}"
-        )
+        pos = _bloom_pos("CAST(o_custkey AS STRING)", i=f"'{i}'")
         probe = probe.filter(
             F.expr(
                 f"(element_at(_bw, CAST(({pos}) / {_BLOOM_WORD_BITS} AS INT) + 1)"
@@ -482,6 +477,7 @@ def q_bloom_prune_join(spark, sf_dir):
 
 _KMV_K = 64
 _POW40 = 1099511627776  # 2^40; hv = first 10 md5 hex chars as bigint
+_KMV_KEY = "CAST(doc_id AS STRING)"
 
 # est(S) from a KMV sketch: exact when the set is smaller than k,
 # else (k-1) / frac(h_k) — one double division of exactly-agreed ints
@@ -500,7 +496,7 @@ _EST_SPARK = (
     oracle=f"""
     WITH hv AS (
         SELECT doc_id, lang, source,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 10))::BIGINT AS h
+               {md5_int(_KMV_KEY, 1, 10, duck=True)} AS h
         FROM documents
     ),
     a AS (SELECT h FROM hv WHERE lang = 'en'),
@@ -563,10 +559,7 @@ def q_sketch_kmv_setops(spark, sf_dir):
     hv = docs.select(
         "lang",
         "source",
-        F.expr(
-            "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 10), 16, 10)"
-            " AS BIGINT)"
-        ).alias("h"),
+        F.expr(md5_int(_KMV_KEY, 1, 10)).alias("h"),
     )
     a = hv.filter(F.col("lang") == "en").select("h")
     b = hv.filter(F.col("source").like("src1%")).select("h")
@@ -624,21 +617,6 @@ def q_sketch_kmv_setops(spark, sf_dir):
 # q_sketch_hll_merge — per-source sub-sketches + register-max merge
 # ---------------------------------------------------------------------------
 
-# shared estimate text on the exact (register) frame: scaled-integer
-# harmonic denominator (the q_sketch_hll discipline), one double
-# division of exactly-agreed numbers
-_HLL_EST_COLS = f"""
-           CAST(SUM(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS empty_buckets,
-           CAST(SUM(register) AS BIGINT) AS register_sum,
-           CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS BIGINT)
-               AS scaled_power_sum,
-           CAST({_HLL_NUMERATOR!r} AS DOUBLE)
-               / CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS DOUBLE)
-               AS hll_estimate
-"""
-
-
 @register(
     "q_sketch_hll_merge",
     oracle=f"""
@@ -648,11 +626,8 @@ _HLL_EST_COLS = f"""
     ),
     rho AS (
         SELECT source,
-               CAST(('0x' || substr(md5(tok), 1, 2))::BIGINT AS BIGINT)
-                   AS bucket,
-               CASE WHEN ('0x' || substr(md5(tok), 3, 10))::BIGINT = 0 THEN 41
-                    ELSE 40 - length(bin(('0x' || substr(md5(tok), 3, 10))::BIGINT)) + 1
-               END AS r
+               {hll_bucket("tok", duck=True)} AS bucket,
+               {hll_rho(hll_w("tok", duck=True))} AS r
         FROM toks
     ),
     srcs AS (SELECT DISTINCT source FROM toks),
@@ -670,11 +645,11 @@ _HLL_EST_COLS = f"""
         FROM per_src GROUP BY bucket
     ),
     src_rows AS (
-        SELECT 'source:' || source AS scope, {_HLL_EST_COLS}
+        SELECT 'source:' || source AS scope, {HLL_ESTIMATE_DUCK}
         FROM per_src GROUP BY source
     ),
     merged_row AS (
-        SELECT 'zz_merged' AS scope, {_HLL_EST_COLS} FROM merged
+        SELECT 'zz_merged' AS scope, {HLL_ESTIMATE_DUCK} FROM merged
     )
     SELECT * FROM src_rows
     UNION ALL
@@ -710,15 +685,8 @@ def q_sketch_hll_merge(spark, sf_dir):
     )
     rho = toks.select(
         "source",
-        F.expr("CAST(conv(substring(md5(tok), 1, 2), 16, 10) AS BIGINT)").alias(
-            "bucket"
-        ),
-        F.expr(
-            """CASE WHEN CAST(conv(substring(md5(tok), 3, 10), 16, 10) AS BIGINT) = 0
-                    THEN 41
-                    ELSE 40 - length(bin(CAST(conv(substring(md5(tok), 3, 10), 16, 10) AS BIGINT))) + 1
-               END"""
-        ).alias("r"),
+        F.expr(hll_bucket("tok")).alias("bucket"),
+        F.expr(hll_rho(hll_w("tok"))).alias("r"),
     )
     srcs = toks.select("source").distinct()
     spine = spark.range(_HLL_M).select(F.col("id").alias("bucket"))
@@ -732,47 +700,14 @@ def q_sketch_hll_merge(spark, sf_dir):
         F.max("register").cast("bigint").alias("register")
     )
 
-    def estimate(df, scope_col):
-        scaled = F.sum(F.expr("CAST(pow(2, 41 - register) AS BIGINT)"))
-        return df.agg(
-            F.sum(F.when(F.col("register") == 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("empty_buckets"),
-            F.sum("register").cast("bigint").alias("register_sum"),
-            scaled.cast("bigint").alias("scaled_power_sum"),
-            (F.lit(_HLL_NUMERATOR).cast("double") / scaled.cast("double")).alias(
-                "hll_estimate"
-            ),
-        ).select(scope_col.alias("scope"), "*")
-
     src_rows = (
         per_src.groupBy("source")
-        .agg(
-            F.sum(F.when(F.col("register") == 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("empty_buckets"),
-            F.sum("register").cast("bigint").alias("register_sum"),
-            F.sum(F.expr("CAST(pow(2, 41 - register) AS BIGINT)"))
-            .cast("bigint")
-            .alias("scaled_power_sum"),
-            (
-                F.lit(_HLL_NUMERATOR).cast("double")
-                / F.sum(F.expr("CAST(pow(2, 41 - register) AS BIGINT)")).cast(
-                    "double"
-                )
-            ).alias("hll_estimate"),
-        )
-        .select(
-            F.concat(F.lit("source:"), F.col("source")).alias("scope"),
-            "empty_buckets",
-            "register_sum",
-            "scaled_power_sum",
-            "hll_estimate",
-        )
+        .agg(*hll_estimate())
+        .withColumn("source", F.concat(F.lit("source:"), F.col("source")))
+        .withColumnRenamed("source", "scope")
     )
-    merged_row = estimate(merged, F.lit("zz_merged")).select(
-        "scope", "empty_buckets", "register_sum", "scaled_power_sum",
-        "hll_estimate",
+    merged_row = merged.agg(*hll_estimate()).select(
+        F.lit("zz_merged").alias("scope"), "*"
     )
     return src_rows.unionByName(merged_row).orderBy("scope")
 

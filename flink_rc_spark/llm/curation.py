@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
+from flink_rc_spark.llm.profile import doc_split_byte
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -252,16 +254,8 @@ def q_pii_scrub(spark, sf_dir):
 # q_doc_shuffle — deterministic sharded training order
 # ---------------------------------------------------------------------------
 
-# md5-derived uniform byte of the doc_id (the sampling.py idiom):
+# the q_split_assign byte of the doc_id (profile.doc_split_byte):
 # shard = byte % 8 — partitioning-independent and re-ingest-stable.
-_HASHBYTE_SPARK = (
-    "(instr('0123456789abcdef', substr(md5(cast(doc_id AS STRING)), 1, 1)) - 1)"
-    " * 16 + instr('0123456789abcdef', substr(md5(cast(doc_id AS STRING)), 2, 1)) - 1"
-)
-_HASHBYTE_DUCK = (
-    "(strpos('0123456789abcdef', substr(md5(cast(doc_id AS VARCHAR)), 1, 1)) - 1)"
-    " * 16 + strpos('0123456789abcdef', substr(md5(cast(doc_id AS VARCHAR)), 2, 1)) - 1"
-)
 _N_SHARDS = 8
 
 
@@ -271,7 +265,7 @@ _N_SHARDS = 8
     WITH h AS (
         SELECT doc_id,
                md5(cast(doc_id AS VARCHAR)) AS hkey,
-               CAST(({_HASHBYTE_DUCK}) % {_N_SHARDS} AS BIGINT) AS shard
+               CAST({doc_split_byte(duck=True)} % {_N_SHARDS} AS BIGINT) AS shard
         FROM documents
     )
     SELECT doc_id, shard,
@@ -299,7 +293,7 @@ def q_doc_shuffle(spark, sf_dir):
     h = docs.select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("hkey"),
-        (F.expr(_HASHBYTE_SPARK) % _N_SHARDS).cast("bigint").alias("shard"),
+        (F.expr(doc_split_byte()) % _N_SHARDS).cast("bigint").alias("shard"),
     )
     win = W.partitionBy("shard").orderBy("hkey", "doc_id")
     return (
@@ -388,7 +382,6 @@ def q_embedding_quantize(spark, sf_dir):
     )
 
 
-from flink_rc_spark.llm.profile import _SPLITV_DUCK
 from flink_rc_spark.llm.text import _STOPWORDS, _marker_count_sql
 
 _CURATION_ORACLE = f"""
@@ -412,8 +405,8 @@ _CURATION_ORACLE = f"""
             FROM gated
         ) WHERE rn = 1
     )
-    SELECT CASE WHEN ({_SPLITV_DUCK}) < 205 THEN 'train'
-                WHEN ({_SPLITV_DUCK}) < 230 THEN 'val'
+    SELECT CASE WHEN {doc_split_byte(duck=True)} < 205 THEN 'train'
+                WHEN {doc_split_byte(duck=True)} < 230 THEN 'val'
                 ELSE 'test' END AS split,
            lang,
            COUNT(*) AS n_docs,
@@ -453,7 +446,6 @@ def q_curation_pipeline(spark, sf_dir):
     shuffle (hash of text); the manifest agg is tiny. This plan IS the
     production job minus the final write.
     """
-    from flink_rc_spark.llm.profile import _SPLITV_SPARK
     from flink_rc_spark.llm.text import _STOPWORDS, _marker_count_expr
 
     docs = load(spark, sf_dir, "documents")
@@ -471,7 +463,7 @@ def q_curation_pipeline(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    v = F.expr(_SPLITV_SPARK)
+    v = F.expr(doc_split_byte())
     split = (
         F.when(v < 205, "train").when(v < 230, "val").otherwise("test")
     ).alias("split")
@@ -640,17 +632,9 @@ def q_mixture_plan(spark, sf_dir):
 # q_dsir_weights — hashed-feature importance weights (DSIR-style)
 # ---------------------------------------------------------------------------
 
-_DSIR_B = 64  # hashed feature buckets
-
-# token -> bucket in [0, 63]: the sampling wave's md5 [0,255] bucket mod 64
-_DSIR_BUCKET_SPARK = (
-    "((instr('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(tok), 2, 1)) - 1) % 64"
-)
-_DSIR_BUCKET_DUCK = (
-    "((strpos('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(tok), 2, 1)) - 1) % 64"
-)
+# hashed feature buckets: token -> the sampling wave's md5 [0,255]
+# byte mod 64
+_DSIR_B = 64
 
 
 @register(
@@ -665,7 +649,7 @@ _DSIR_BUCKET_DUCK = (
         ),
         bucketed AS (
             SELECT doc_id, lang,
-                   CAST({_DSIR_BUCKET_DUCK} AS BIGINT) AS b
+                   {md5_int('tok', 1, 2, duck=True)} % {_DSIR_B} AS b
             FROM tokens
         ),
         stats AS (
@@ -733,7 +717,7 @@ def q_dsir_weights(spark, sf_dir):
     bucketed = tokens.select(
         "doc_id",
         "lang",
-        F.expr(_DSIR_BUCKET_SPARK).cast("bigint").alias("b"),
+        F.expr(f"{md5_int('tok', 1, 2)} % {_DSIR_B}").alias("b"),
     )
     stats = bucketed.groupBy("b").agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_f"),

@@ -33,9 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import hex_int
 # HOF dot and norm everywhere: 64-term flat trees lose at every probed shape
 # (similarity.py kernel note, r11 A/B)
-from flink_rc_spark.llm.similarity import _DOT_SPARK, _NORM_SPARK
+from flink_rc_spark.llm.similarity import _DOT_SPARK, _LSH_BIT_DUCK, _NORM_SPARK
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -62,8 +63,8 @@ _N_BANDS = 4
 # (The Spark side emits the same arithmetic as 60 flat codegen'd
 # columns with p constant-folded — see q_dedup_simhash.)
 _SIMHASH_BIT_VOTE_DUCK = (
-    "(CAST(floor((strpos('0123456789abcdef',"
-    " substr(x, CAST(floor(p / 4) AS INT) + 1, 1)) - 1)"
+    "(CAST(floor("
+    f"{hex_int('x', 'CAST(floor(p / 4) AS INT) + 1', 1, duck=True)}"
     " / power(2, p % 4)) AS INT) % 2) * 2 - 1"
 )
 
@@ -977,10 +978,7 @@ def semantic_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM v),
     h AS (SELECT vec_id, e, nrm,
                  CAST(list_sum(list_transform(range(0, (SELECT p FROM np)), j ->
-                      (CASE WHEN list_reduce(list_transform(range(1, 65), i ->
-                         (strpos('0123456789abcdef',
-                          substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 8.5)
-                         * e[i]), (acc, x) -> acc + x) >= 0 THEN 1 ELSE 0 END)
+                      ({_LSH_BIT_DUCK})
                       * CAST(power(2, j) AS BIGINT)))
                       AS BIGINT) AS bucket
           FROM n),

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_rc_spark.functions.exact import hex_int, md5_int
 from flink_rc_spark.llm.codec import decode_image, encode_bmp, encode_png
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -46,6 +47,12 @@ from flink_rc_spark.sources.tables import load
 _W = _H = 2
 _BMP_HEADER = encode_bmp(np.zeros((_H, _W, 3), dtype=np.uint8))[:54]
 _BMP_SIZE = 54 + 2 * 8  # 70 bytes
+
+
+def _md5_byte(i, key: str = "text") -> str:
+    """Byte ``i`` (1-based; an int or a DuckDB lambda variable) of
+    md5(key) as an integer, DuckDB spelling."""
+    return md5_int(key, f"2*{i}-1", 2, duck=True)
 
 
 def with_media_columns(docs: DataFrame) -> DataFrame:
@@ -120,9 +127,7 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
            CAST({_W} AS INT) AS width,
            CAST({_H} AS INT) AS height,
            'bmp' AS format,
-           CAST(list_sum(list_transform(range(1, 13), i ->
-                (strpos('0123456789abcdef', substr(md5(text), 2*i-1, 1)) - 1) * 16
-                + strpos('0123456789abcdef', substr(md5(text), 2*i, 1)) - 1))
+           CAST(list_sum(list_transform(range(1, 13), i -> {_md5_byte('i')}))
                 AS BIGINT) AS brightness
     FROM documents
     ORDER BY doc_id
@@ -201,12 +206,10 @@ def _formats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 @register(
     "q_multimodal_formats",
-    oracle="""
+    oracle=f"""
     WITH b AS (
         SELECT doc_id,
-               CAST(list_sum(list_transform(range(1, 13), i ->
-                   (strpos('0123456789abcdef', substr(md5(text), 2*i-1, 1)) - 1) * 16
-                   + strpos('0123456789abcdef', substr(md5(text), 2*i, 1)) - 1))
+               CAST(list_sum(list_transform(range(1, 13), i -> {_md5_byte('i')}))
                    AS BIGINT) AS bright
         FROM documents
     )
@@ -287,12 +290,7 @@ def _array_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         SELECT doc_id,
                CAST(i AS INT) AS image_idx,
                CAST(list_sum(list_transform(range(1, 13), j ->
-                   (strpos('0123456789abcdef',
-                           substr(md5(text || '#' || CAST(i AS VARCHAR)),
-                                  2*j-1, 1)) - 1) * 16
-                   + strpos('0123456789abcdef',
-                            substr(md5(text || '#' || CAST(i AS VARCHAR)),
-                                   2*j, 1)) - 1))
+                   {_md5_byte('j', "text || '#' || CAST(i AS STRING)")}))
                     AS BIGINT) AS brightness
         FROM documents, range(0, 3) r(i)
     )
@@ -388,15 +386,8 @@ def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield out
 
 
-# md5 byte i (1-based) as an integer, DuckDB spelling
-_MD5_BYTE = (
-    "((strpos('0123456789abcdef', substr(md5(text), 2*{i}-1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(text), 2*{i}, 1)) - 1)"
-)
-
-
 def _chan_sum(byte_idxs) -> str:
-    return " + ".join(_MD5_BYTE.format(i=i) for i in byte_idxs)
+    return " + ".join(_md5_byte(i) for i in byte_idxs)
 
 
 @register(
@@ -496,13 +487,9 @@ def _ahash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 # DuckDB expression for stored pixel byte j (0-based) of the 96-char
-# concatenated md5 hex: two hex digits via strpos arithmetic, as in
-# q_multimodal_decode's oracle.
+# concatenated md5 hex, as in q_multimodal_decode's oracle.
 def _duck_byte(j: str) -> str:
-    return (
-        f"((strpos('0123456789abcdef', substr(hx, 2*({j})+1, 1)) - 1) * 16"
-        f" + strpos('0123456789abcdef', substr(hx, 2*({j})+2, 1)) - 1)"
-    )
+    return hex_int("hx", f"2*({j})+1", 2, duck=True)
 
 
 # decoded row y maps to stored row 3-y (BMP rows are bottom-up);

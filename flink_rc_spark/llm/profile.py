@@ -22,20 +22,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
 # md5-derived uniform byte in [0,255] over the doc_id — the same
 # deterministic-hash idiom as llm/sampling.py, reused for split
 # assignment so splits are stable under any partitioning / re-ingest.
-_SPLITV_SPARK = (
-    "(instr('0123456789abcdef', substr(md5(cast(doc_id AS STRING)), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(cast(doc_id AS STRING)), 2, 1)) - 1"
-)
-_SPLITV_DUCK = (
-    "(strpos('0123456789abcdef', substr(md5(cast(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(cast(doc_id AS VARCHAR)), 2, 1)) - 1"
-)
+# Every doc-split and doc-shard key reads this one byte.
+def doc_split_byte(duck: bool = False) -> str:
+    return md5_int("CAST(doc_id AS STRING)", 1, 2, duck=duck)
 
 
 @register(
@@ -135,8 +131,8 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assigned AS (
         SELECT doc_id, n_chars,
-               CASE WHEN ({_SPLITV_DUCK}) < 205 THEN 'train'
-                    WHEN ({_SPLITV_DUCK}) < 230 THEN 'val'
+               CASE WHEN {doc_split_byte(duck=True)} < 205 THEN 'train'
+                    WHEN {doc_split_byte(duck=True)} < 230 THEN 'val'
                     ELSE 'test' END AS split
         FROM documents
     )
@@ -158,7 +154,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     this does not). Output: per-split doc/char totals.
     """
     docs = load(spark, sf_dir, "documents")
-    v = F.expr(_SPLITV_SPARK)
+    v = F.expr(doc_split_byte())
     split = (
         F.when(v < 205, "train").when(v < 230, "val").otherwise("test")
     ).alias("split")

@@ -24,19 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
-# v = int(first two md5 hex chars of the key), range [0, 255]
-_HASHV_SPARK = (
-    "(instr('0123456789abcdef', substr(md5(k), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(k), 2, 1)) - 1"
-)
-_HASHV_DUCK = (
-    "(strpos('0123456789abcdef', substr(md5(k), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(k), 2, 1)) - 1"
-)
+# A row is sampled on v = md5_int('k', 1, 2), the first md5 byte of its
+# key column k, in [0, 255]; a document's 40-bit hv is the first ten
+# hex digits of md5 of its _DOC_KEY.
+_DOC_KEY = "CAST(doc_id AS STRING)"
 
 # per-segment sampling rates (x/256) for the stratified query
 _RATES = {
@@ -48,11 +44,11 @@ _RATES = {
 }
 
 
-def _rate_case_sql(dialect_hashv: str) -> str:
+def _rate_case_sql(duck: bool = False) -> str:
     whens = " ".join(
         f"WHEN c_mktsegment = '{seg}' THEN {thr}" for seg, thr in _RATES.items()
     )
-    return f"({dialect_hashv}) < (CASE {whens} ELSE 0 END)"
+    return f"{md5_int('k', 1, 2, duck=duck)} < (CASE {whens} ELSE 0 END)"
 
 
 @register(
@@ -66,7 +62,7 @@ def _rate_case_sql(dialect_hashv: str) -> str:
     )
     SELECT l_orderkey, l_linenumber, l_quantity
     FROM keyed
-    WHERE ({_HASHV_DUCK}) < 26
+    WHERE {md5_int('k', 1, 2, duck=True)} < 26
     """,
     tags=("llm", "sampling"),
 )
@@ -82,7 +78,7 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # no ORDER BY: the driver compare is order-insensitive, and a
     # global sort of the sample would be the only shuffle in the plan
-    return li.filter(F.expr(_HASHV_SPARK) < 26).select(
+    return li.filter(F.expr(md5_int("k", 1, 2)) < 26).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
 
@@ -97,7 +93,7 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c_mktsegment, COUNT(*) AS n_sampled
     FROM keyed
-    WHERE {_rate_case_sql(_HASHV_DUCK)}
+    WHERE {_rate_case_sql(duck=True)}
     GROUP BY c_mktsegment
     ORDER BY c_mktsegment
     """,
@@ -116,7 +112,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both dialects generated from the ONE _rate_case_sql builder so
     # _RATES edits can never drift between engines
     return (
-        cust.filter(F.expr(_rate_case_sql(_HASHV_SPARK)))
+        cust.filter(F.expr(_rate_case_sql()))
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_sampled"))
         .orderBy("c_mktsegment")
@@ -132,7 +128,7 @@ _BOTTOMK_K = 64
     WITH hashed AS (
         SELECT doc_id,
                md5(CAST(doc_id AS VARCHAR)) AS h,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 10))::BIGINT AS hv
+               {md5_int(_DOC_KEY, 1, 10, duck=True)} AS hv
         FROM documents
     ),
     bottom AS (
@@ -171,10 +167,7 @@ def q_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = docs.select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("h"),
-        F.expr(
-            "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 10), 16, 10)"
-            " AS BIGINT)"
-        ).alias("hv"),
+        F.expr(md5_int(_DOC_KEY, 1, 10)).alias("hv"),
     )
     bottom = hashed.orderBy("h", "doc_id").limit(_BOTTOMK_K)
     w = Window.orderBy("h", "doc_id")
@@ -199,8 +192,8 @@ _WEIGHTED_K = 20
     oracle=f"""
     WITH keyed AS (
         SELECT doc_id, n_chars,
-               -ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 10))::BIGINT
-                    + 1.0) / 1099511627776.0)
+               -ln(({md5_int(_DOC_KEY, 1, 10, duck=True)} + 1.0)
+                   / 1099511627776.0)
                    / CAST(n_chars AS DOUBLE) AS ekey
         FROM documents
     )
@@ -234,10 +227,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampler.
     """
     docs = load(spark, sf_dir, "documents")
-    hv = F.expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 10), 16, 10)"
-        " AS BIGINT)"
-    )
+    hv = F.expr(md5_int(_DOC_KEY, 1, 10))
     ekey = -F.log((hv.cast("double") + F.lit(1.0)) / F.lit(float(1 << 40))) / F.col(
         "n_chars"
     ).cast("double")

@@ -10,8 +10,8 @@ then every dot product / norm folds sequentially in index order
 lambda), so both engines produce bit-identical doubles; ranking and
 thresholding therefore agree exactly and ROUND(x, 4) is hash-stable.
 
-LSH hyperplanes are derived from md5 — w[j][i] =
-instr(hexdigits, first_hex_char(md5(j || '_' || i))) - 8.5 — i.e. a
+LSH hyperplanes are derived from md5 — w[j][i] = (the first hex digit
+of md5(j || '_' || i)) - 7.5 — i.e. a
 deterministic pseudo-random value in [-7.5, 7.5] computable identically
 in Spark and DuckDB with no external randomness and no literal blobs.
 
@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -68,8 +69,16 @@ _DOT_DUCK = (
 )
 _NORM_DUCK = "sqrt(list_reduce(list_transform(e, x -> x*x), (acc, x) -> acc + x))"
 
+
+def _plane_weight_duck(j: str) -> str:
+    """DuckDB spelling of ``_plane_weight(j, i)`` for the lambda
+    variable ``i``."""
+    key = f"CAST({j} AS STRING) || '_' || CAST(i AS STRING)"
+    return f"({md5_int(key, 1, 1, duck=True)} - 7.5)"
+
+
 # Sign bit of <w_j, e> for md5-derived hyperplane j, where
-# w[j][i] = hexval(md5(j||'_'||i)[0]) - 8.5 (an exact half in
+# w[j][i] = hexval(md5(j||'_'||i)[0]) - 7.5 (an exact half in
 # [-7.5, 7.5]). The oracle derives the weights in SQL; the Spark side
 # inlines the identical values as literals (hashlib.md5 == SQL md5),
 # turning 8 x 64 per-row md5 calls into a constant-folded codegen'd
@@ -78,15 +87,12 @@ _NORM_DUCK = "sqrt(list_reduce(list_transform(e, x -> x*x), (acc, x) -> acc + x)
 # doubles stay bit-identical.
 _LSH_BIT_DUCK = (
     f"CASE WHEN list_reduce(list_transform(range(1, {_DIM + 1}), i ->"
-    " (strpos('0123456789abcdef',"
-    " substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 8.5)"
-    " * e[i]), (acc, x) -> acc + x) >= 0 THEN 1 ELSE 0 END"
+    f" {_plane_weight_duck('j')} * e[i]), (acc, x) -> acc + x) >= 0"
+    " THEN 1 ELSE 0 END"
 )
 
 
 def _plane_weight(j: int, i: int) -> float:
-    # strpos/instr are 1-based: hex value v maps to position v+1,
-    # so the SQL's (strpos - 8.5) equals (v + 1) - 8.5 = v - 7.5.
     import hashlib
 
     return int(hashlib.md5(f"{j}_{i}".encode()).hexdigest()[0], 16) - 7.5
@@ -566,9 +572,7 @@ _BANDED_ORACLE = f"""
     n AS (SELECT vec_id, e, {_NORM_DUCK} AS nrm FROM v),
     w AS (
         SELECT g,
-               list(strpos('0123456789abcdef',
-                     substr(md5(CAST(g AS VARCHAR) || '_' || CAST(i AS VARCHAR)),
-                            1, 1)) - 8.5 ORDER BY i) AS wv
+               list({_plane_weight_duck('g')} ORDER BY i) AS wv
         FROM range(0, {_BANDED_PPB * _BANDED_NB}) t1(g),
              range(1, {_DIM + 1}) t2(i)
         GROUP BY g

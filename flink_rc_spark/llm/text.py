@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
+from flink_rc_spark.llm.profile import doc_split_byte
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -742,10 +744,10 @@ _RRF_TOPK = 20
 def _rrf_qdot_duck() -> str:
     # md5-derived deterministic query vector (the hyperplane idiom:
     # q[i] = hexval(md5('rrf_<i>')) - 7.5), sequential fold
+    key = "'rrf_' || CAST(i AS STRING)"
+    w = f"({md5_int(key, 1, 1, duck=True)} - 7.5)"
     return (
-        "list_reduce(list_transform(range(1, 65), i ->"
-        " (strpos('0123456789abcdef',"
-        " substr(md5('rrf_' || CAST(i AS VARCHAR)), 1, 1)) - 8.5)"
+        f"list_reduce(list_transform(range(1, 65), i -> {w}"
         " * e[i]), (acc, x) -> acc + x)"
     )
 
@@ -1402,14 +1404,6 @@ def q_str_ngram_sim(spark, sf_dir):
 
 # the q_split_assign hash (first md5 byte of doc_id, thresholds
 # 205/230 of 256) so the split here IS the declared corpus split
-_COV_SPLITV_SPARK = (
-    "(instr('0123456789abcdef', substr(md5(cast(doc_id AS STRING)), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(cast(doc_id AS STRING)), 2, 1)) - 1"
-)
-_COV_SPLITV_DUCK = (
-    "(strpos('0123456789abcdef', substr(md5(cast(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(cast(doc_id AS VARCHAR)), 2, 1)) - 1"
-)
 
 
 @register(
@@ -1417,7 +1411,7 @@ _COV_SPLITV_DUCK = (
     oracle=f"""
         WITH split_docs AS (
             SELECT doc_id, lang, text,
-                   CASE WHEN ({_COV_SPLITV_DUCK}) < 205 THEN 'train'
+                   CASE WHEN {doc_split_byte(duck=True)} < 205 THEN 'train'
                         ELSE 'heldout' END AS split
             FROM documents
         ), grams AS (
@@ -1469,7 +1463,7 @@ def q_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs; the heldout side is a (lang, gram) hash agg.
     """
     docs = load(spark, sf_dir, "documents")
-    v = F.expr(_COV_SPLITV_SPARK)
+    v = F.expr(doc_split_byte())
     split_docs = docs.select(
         "doc_id",
         "lang",

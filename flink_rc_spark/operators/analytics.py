@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -1426,17 +1427,17 @@ def q_markov_transitions(spark, sf_dir):
 # saturates to 100% on the small-sf fixtures (every user eventually
 # purchases), which degenerates the pooled variance to 0 — event-grain
 # conversion (~20% purchases) is well-conditioned at every sf.
-_AB_KEY_DUCK = "concat('e', CAST(event_id AS VARCHAR))"
-_AB_KEY_SPARK = "concat('e', CAST(event_id AS STRING))"
+def ab_arm(duck: bool = False) -> str:
+    """The 0/1 experiment arm of an event (q_ab_ztest, q_effect_size)."""
+    key = "'e' || CAST(event_id AS STRING)"
+    return f"{md5_int(key, 1, 2, duck=duck)} % 2"
 
 
 @register(
     "q_ab_ztest",
     oracle=f"""
         WITH armed AS (
-            SELECT CAST(((strpos('0123456789abcdef', substr(md5({_AB_KEY_DUCK}), 1, 1)) - 1) * 16
-                   + strpos('0123456789abcdef', substr(md5({_AB_KEY_DUCK}), 2, 1)) - 1) % 2
-                   AS BIGINT) AS arm,
+            SELECT {ab_arm(duck=True)} AS arm,
                    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
             FROM events
         ),
@@ -1486,15 +1487,7 @@ def q_ab_ztest(spark, sf_dir):
     """
     ev = load(spark, sf_dir, "events")
     armed = ev.select(
-        (
-            F.expr(
-                f"(instr('0123456789abcdef', substr(md5({_AB_KEY_SPARK}), 1, 1)) - 1) * 16"
-                f" + instr('0123456789abcdef', substr(md5({_AB_KEY_SPARK}), 2, 1)) - 1"
-            )
-            % 2
-        )
-        .cast("bigint")
-        .alias("arm"),
+        F.expr(ab_arm()).alias("arm"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
     )
     s = armed.agg(

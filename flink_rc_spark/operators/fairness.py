@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -227,14 +228,14 @@ def q_fairness_gaps(spark, sf_dir):
     ).orderBy("grp")
 
 
+_SRM_KEY = "'u' || CAST(user_id AS STRING)"
+
+
 @register(
     "q_ab_srm",
-    oracle="""
+    oracle=f"""
         WITH assigned AS (
-            SELECT CASE WHEN
-                (strpos('0123456789abcdef',
-                        substr(md5('u' || CAST(user_id AS VARCHAR)), 1, 1))
-                 - 1) % 2 = 0
+            SELECT CASE WHEN {md5_int(_SRM_KEY, 1, 1, duck=True)} % 2 = 0
                 THEN 'A' ELSE 'B' END AS arm
             FROM (SELECT DISTINCT user_id FROM events)
         ), counts AS (
@@ -274,13 +275,7 @@ def q_ab_srm(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     arm = F.when(
-        F.expr(
-            "(instr('0123456789abcdef',"
-            " substr(md5(concat('u', CAST(user_id AS STRING))), 1, 1))"
-            " - 1) % 2"
-        )
-        == 0,
-        "A",
+        F.expr(f"{md5_int(_SRM_KEY, 1, 1)} % 2") == 0, "A"
     ).otherwise("B")
     counts = users.select(arm.alias("arm")).agg(
         F.sum(F.when(F.col("arm") == "A", 1).otherwise(0))

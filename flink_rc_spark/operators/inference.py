@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -40,20 +41,7 @@ from flink_rc_spark.sources.tables import load
 _POIS = [385749, 771499, 964373, 1028665, 1044738, 1047952]
 _B = 40  # replicates; 90% CI picks order stats 2 and 38
 
-_HEX5_SPARK = (
-    "(((((instr('0123456789abcdef', substr(md5({k}), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5({k}), 2, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5({k}), 3, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5({k}), 4, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5({k}), 5, 1)) - 1)"
-)
-_HEX5_DUCK = (
-    "(((((strpos('0123456789abcdef', substr(md5({k}), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5({k}), 2, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5({k}), 3, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5({k}), 4, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5({k}), 5, 1)) - 1)"
-)
+
 
 
 def _pois_case(u: str) -> str:
@@ -64,8 +52,7 @@ def _pois_case(u: str) -> str:
     return f"(CASE {branches} ELSE 6 END)"
 
 
-_BS_KEY_SPARK = "concat('bs', CAST(event_id AS STRING), '_', CAST(b AS STRING))"
-_BS_KEY_DUCK = "concat('bs', CAST(event_id AS VARCHAR), '_', CAST(b AS VARCHAR))"
+_BS_KEY = "'bs' || CAST(event_id AS STRING) || '_' || CAST(b AS STRING)"
 
 
 @register(
@@ -77,7 +64,7 @@ _BS_KEY_DUCK = "concat('bs', CAST(event_id AS VARCHAR), '_', CAST(b AS VARCHAR))
             FROM events
         ), drawn AS (
             SELECT t.b AS b, x.cents,
-                   {_pois_case(_HEX5_DUCK.format(k=_BS_KEY_DUCK))} AS w
+                   {_pois_case(md5_int(_BS_KEY, 1, 5, duck=True))} AS w
             FROM x, (SELECT CAST(range AS BIGINT) AS b FROM range({_B})) t
         ), rep AS (
             SELECT b,
@@ -133,7 +120,7 @@ def q_bootstrap_ci(spark, sf_dir):
     ).select(
         "b",
         "cents",
-        F.expr(_pois_case(_HEX5_SPARK.format(k=_BS_KEY_SPARK))).alias("w"),
+        F.expr(_pois_case(md5_int(_BS_KEY, 1, 5))).alias("w"),
     )
     rep = (
         drawn.groupBy("b")

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -162,25 +163,14 @@ _UA_CATALOG = [
     " Safari/604.1",
     "curl/8.4.0",
 ]
-_UA_IDX_DUCK = (
-    "((strpos('0123456789abcdef', substr(md5('u' ||"
-    " CAST(user_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5('u' ||"
-    " CAST(user_id AS VARCHAR)), 2, 1)) - 1) % 6"
-)
-_UA_IDX_SPARK = (
-    "((instr('0123456789abcdef', substr(md5(concat('u',"
-    " CAST(user_id AS STRING))), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(concat('u',"
-    " CAST(user_id AS STRING))), 2, 1)) - 1) % 6"
-)
+_UA_KEY = "'u' || CAST(user_id AS STRING)"
 
 
-def _ua_case(idx_expr: str) -> str:
+def _ua_case(duck: bool = False) -> str:
     whens = " ".join(
         f"WHEN {i} THEN '{ua}'" for i, ua in enumerate(_UA_CATALOG)
     )
-    return f"CASE {idx_expr} {whens} END"
+    return f"CASE {md5_int(_UA_KEY, 1, 2, duck=duck)} % 6 {whens} END"
 
 
 _UA_FAMILY = """
@@ -210,7 +200,7 @@ _UA_MAJOR = r"""
     "q_useragent_parse",
     oracle=f"""
         WITH hits AS (
-            SELECT user_id, {_ua_case(_UA_IDX_DUCK)} AS ua FROM events
+            SELECT user_id, {_ua_case(duck=True)} AS ua FROM events
         ), parsed AS (
             SELECT user_id, ua,
                    {_UA_FAMILY} AS family,
@@ -246,7 +236,7 @@ def q_useragent_parse(spark, sf_dir):
     """
     ev = load(spark, sf_dir, "events")
     hits = ev.select(
-        "user_id", F.expr(_ua_case(_UA_IDX_SPARK)).alias("ua")
+        "user_id", F.expr(_ua_case()).alias("ua")
     )
     parsed = hits.select(
         "user_id",

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.exact import md5_int
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -635,18 +636,7 @@ def q_confusion_matrix(spark, sf_dir):
 # q_crossval_folds — k-fold cross-validation of the mean predictor
 # ---------------------------------------------------------------------------
 
-_FOLD_DUCK = (
-    "((strpos('0123456789abcdef', substr(md5('o' ||"
-    " CAST(o_orderkey AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5('o' ||"
-    " CAST(o_orderkey AS VARCHAR)), 2, 1)) - 1) % 5"
-)
-_FOLD_SPARK = (
-    "((instr('0123456789abcdef', substr(md5(concat('o',"
-    " CAST(o_orderkey AS STRING))), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(concat('o',"
-    " CAST(o_orderkey AS STRING))), 2, 1)) - 1) % 5"
-)
+_FOLD_KEY = "'o' || CAST(o_orderkey AS STRING)"
 # test MSE of the train-mean predictor, expanded so it needs only the
 # fold moments: MSE = q/n − 2·m·(s/n) + m², m = (S−s)/(N−n) train mean
 _CV_MSE_EXPR = """
@@ -662,7 +652,7 @@ _CV_MSE_EXPR = """
     "q_crossval_folds",
     oracle=f"""
         WITH x AS (
-            SELECT {_FOLD_DUCK} AS fold,
+            SELECT {md5_int(_FOLD_KEY, 1, 2, duck=True)} % 5 AS fold,
                    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
                      AS c
             FROM orders
@@ -708,7 +698,7 @@ def q_crossval_folds(spark, sf_dir):
     """
     o = load(spark, sf_dir, "orders")
     x = o.select(
-        F.expr(_FOLD_SPARK).alias("fold"),
+        F.expr(f"{md5_int(_FOLD_KEY, 1, 2)} % 5").cast("int").alias("fold"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")
         .alias("c"),
@@ -743,16 +733,7 @@ def q_crossval_folds(spark, sf_dir):
 # q_feature_hashing — hashing-trick buckets with collision audit
 # ---------------------------------------------------------------------------
 
-_FH_DUCK = (
-    "((strpos('0123456789abcdef', substr(md5('f' || token), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5('f' || token), 2, 1)) - 1) % 64"
-)
-_FH_SPARK = (
-    "((instr('0123456789abcdef', substr(md5(concat('f', token)), 1, 1)) - 1)"
-    " * 16"
-    " + instr('0123456789abcdef', substr(md5(concat('f', token)), 2, 1)) - 1)"
-    " % 64"
-)
+_FH_KEY = "'f' || token"
 
 
 @register(
@@ -763,7 +744,7 @@ _FH_SPARK = (
             FROM documents, unnest(string_split(text, ' ')) AS t(tok)
             WHERE t.tok <> ''
         ), bucketed AS (
-            SELECT token, {_FH_DUCK} AS bucket FROM toks
+            SELECT token, {md5_int(_FH_KEY, 1, 2, duck=True)} % 64 AS bucket FROM toks
         )
         SELECT bucket,
                CAST(COUNT(*) AS BIGINT) AS n_occ,
@@ -795,7 +776,10 @@ def q_feature_hashing(spark, sf_dir):
     toks = docs.select(
         F.explode(F.split("text", " ")).alias("token")
     ).filter(F.col("token") != "")
-    bucketed = toks.select("token", F.expr(_FH_SPARK).alias("bucket"))
+    bucketed = toks.select(
+        "token",
+        F.expr(f"{md5_int(_FH_KEY, 1, 2)} % 64").cast("int").alias("bucket"),
+    )
     return (
         bucketed.groupBy("bucket")
         .agg(

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.operators.analytics import ab_arm
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -1656,19 +1657,6 @@ def q_welch_ttest(spark, sf_dir):
 # q_effect_size — Cohen's d / Hedges' g for the hash-armed A/B metric
 # ---------------------------------------------------------------------------
 
-_ARM_DUCK = (
-    "CAST(((strpos('0123456789abcdef', substr(md5(concat('e',"
-    " CAST(event_id AS VARCHAR))), 1, 1)) - 1) * 16"
-    " + strpos('0123456789abcdef', substr(md5(concat('e',"
-    " CAST(event_id AS VARCHAR))), 2, 1)) - 1) % 2 AS BIGINT)"
-)
-_ARM_SPARK = (
-    "CAST(((instr('0123456789abcdef', substr(md5(concat('e',"
-    " CAST(event_id AS STRING))), 1, 1)) - 1) * 16"
-    " + instr('0123456789abcdef', substr(md5(concat('e',"
-    " CAST(event_id AS STRING))), 2, 1)) - 1) % 2 AS BIGINT)"
-)
-
 # pooled-variance effect size from the same six exact moments; sp² uses
 # the (n−1)-weighted pooled estimator, g applies the small-sample
 # correction 1 − 3/(4N − 9)
@@ -1691,7 +1679,7 @@ _EFFECT_D_EXPR = """
     "q_effect_size",
     oracle=f"""
         WITH armed AS (
-            SELECT {_ARM_DUCK} AS arm,
+            SELECT {ab_arm(duck=True)} AS arm,
                    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
             FROM events
         ),
@@ -1735,7 +1723,7 @@ def q_effect_size(spark, sf_dir):
     """
     ev = load(spark, sf_dir, "events")
     armed = ev.select(
-        F.expr(_ARM_SPARK).alias("arm"),
+        F.expr(ab_arm()).alias("arm"),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("c"),
     )
     a = F.when(F.col("arm") == 0, 1).otherwise(0)

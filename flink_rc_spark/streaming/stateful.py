@@ -35,6 +35,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_rc_spark.functions.exact import CENTS_SQL
+from flink_rc_spark.functions.sketches import (
+    _HLL_M,
+    HLL_ESTIMATE_DUCK,
+    hll_bucket,
+    hll_estimate,
+    hll_rho,
+    hll_w,
+)
 from flink_rc_spark.registry import register
 from flink_rc_spark.streaming.replay import events_stream, run_to_memory
 from flink_rc_spark.util import ensure_package_shipped
@@ -961,22 +969,10 @@ def q_stream_timeout(spark, sf_dir):
 # q_stream_hll — streaming distinct-user cardinality (HLL state)
 # ---------------------------------------------------------------------------
 
-_SHLL_P = 8
-_SHLL_M = 1 << _SHLL_P
-_SHLL_ALPHA = 0.7213 / (1.0 + 1.079 / _SHLL_M)
-_SHLL_NUMERATOR = _SHLL_ALPHA * float(_SHLL_M * _SHLL_M) * float(1 << 41)
-
 # md5-derived bucket/rho of the user token 'u<user_id>' — the
 # q_sketch_hll derivation on a keyed stream column (computed JVM-side
 # BEFORE the stateful operator, so the kernel only folds integers)
-_SHLL_BUCKET = (
-    "CAST(conv(substring(md5(concat('u', CAST(user_id AS STRING))), 1, 2),"
-    " 16, 10) AS BIGINT)"
-)
-_SHLL_W = (
-    "CAST(conv(substring(md5(concat('u', CAST(user_id AS STRING))), 3, 10),"
-    " 16, 10) AS BIGINT)"
-)
+_SHLL_KEY = "'u' || CAST(user_id AS STRING)"
 
 SHLL_OUT_SCHEMA = T.StructType(
     [
@@ -1003,11 +999,8 @@ def _hll_kernel(key, pdf_iter, state):
 
 def stream_hll(s):
     rho = s.select(
-        F.expr(_SHLL_BUCKET).alias("bucket"),
-        F.expr(
-            f"""CASE WHEN {_SHLL_W} = 0 THEN CAST(41 AS BIGINT)
-                 ELSE CAST(40 - length(bin({_SHLL_W})) + 1 AS BIGINT) END"""
-        ).alias("r"),
+        F.expr(hll_bucket(_SHLL_KEY)).alias("bucket"),
+        F.expr(hll_rho(hll_w(_SHLL_KEY))).cast("bigint").alias("r"),
     )
     return rho.groupBy("bucket").applyInPandasWithState(
         _hll_kernel,
@@ -1022,32 +1015,19 @@ def stream_hll(s):
     "q_stream_hll",
     oracle=f"""
     WITH cells AS (
-        SELECT CAST(('0x' || substr(md5('u' || CAST(user_id AS VARCHAR)), 1, 2))::BIGINT
-                    AS BIGINT) AS bucket,
-               ('0x' || substr(md5('u' || CAST(user_id AS VARCHAR)), 3, 10))::BIGINT AS w
+        SELECT {hll_bucket(_SHLL_KEY, duck=True)} AS bucket,
+               {hll_w(_SHLL_KEY, duck=True)} AS w
         FROM events
     ),
-    rho AS (
-        SELECT bucket,
-               CASE WHEN w = 0 THEN 41
-                    ELSE 40 - length(bin(w)) + 1 END AS r
-        FROM cells
-    ),
+    rho AS (SELECT bucket, {hll_rho("w")} AS r FROM cells),
     regs AS (
         SELECT g.bucket,
                CAST(COALESCE(MAX(rho.r), 0) AS BIGINT) AS register
-        FROM range({_SHLL_M}) g(bucket)
+        FROM range({_HLL_M}) g(bucket)
         LEFT JOIN rho ON rho.bucket = g.bucket
         GROUP BY g.bucket
     )
-    SELECT CAST(SUM(CASE WHEN register = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS empty_buckets,
-           CAST(SUM(register) AS BIGINT) AS register_sum,
-           CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS BIGINT)
-               AS scaled_power_sum,
-           CAST({_SHLL_NUMERATOR!r} AS DOUBLE)
-               / CAST(SUM(CAST(2 AS BIGINT) ** (41 - register)) AS DOUBLE)
-               AS hll_estimate
+    SELECT {HLL_ESTIMATE_DUCK}
     FROM regs
     """,
 )
@@ -1075,7 +1055,7 @@ def q_stream_hll(spark, sf_dir):
     regs = out.groupBy("bucket").agg(
         F.max("register").cast("bigint").alias("register")
     )
-    spine = spark.range(_SHLL_M).select(F.col("id").alias("bucket"))
+    spine = spark.range(_HLL_M).select(F.col("id").alias("bucket"))
     full = (
         spine.join(regs, "bucket", "left")
         .select(
@@ -1083,17 +1063,7 @@ def q_stream_hll(spark, sf_dir):
             F.coalesce("register", F.lit(0)).cast("bigint").alias("register"),
         )
     )
-    scaled = F.sum(F.expr("CAST(pow(2, 41 - register) AS BIGINT)"))
-    return full.agg(
-        F.sum(F.when(F.col("register") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("empty_buckets"),
-        F.sum("register").cast("bigint").alias("register_sum"),
-        scaled.cast("bigint").alias("scaled_power_sum"),
-        (F.lit(_SHLL_NUMERATOR).cast("double") / scaled.cast("double")).alias(
-            "hll_estimate"
-        ),
-    )
+    return full.agg(*hll_estimate())
 
 
 # ---------------------------------------------------------------------------

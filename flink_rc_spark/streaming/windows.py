@@ -220,159 +220,13 @@ def q_stream_join(spark, sf_dir):
     return run_to_memory(joined, output_mode="append")
 
 
-@register(
-    "q_stream_stream_join",
-    oracle="""
-        SELECT a.user_id, a.event_id AS view_id, b.event_id AS click_id
-        FROM events a JOIN events b
-          ON a.user_id = b.user_id
-         AND a.event_type = 'view' AND b.event_type = 'click'
-         AND b.ts >= a.ts
-         AND b.ts <= a.ts + INTERVAL 1 HOUR
-    """,
-)
-def q_stream_stream_join(spark, sf_dir):
-    """Stream-stream inner join with watermarks: click attribution —
-    each view joined to same-user clicks within the following hour.
-
-    Both sides carry a 2h watermark so the state store evicts rows
-    older than the join window (Spark requires the watermark + time
-    bound to reason about state cleanup); inner-join results stream
-    out as matches arrive, so the bounded replay's output equals the
-    batch self-join oracle exactly. 100 TB story: state is bounded by
-    (watermark horizon x per-user event rate); the join shuffles both
-    streams on user_id — the same equi-key-plus-range-residual shape
-    as the batch interval join (q_join_selfjoin).
-    """
-    s = events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("vts"),
-        )
-        .withWatermark("vts", "2 hours")
-    )
-    clicks = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("cts"),
-        )
-        .withWatermark("cts", "2 hours")
-    )
-    joined = views.join(
-        clicks,
-        F.expr(
-            "user_id = c_user_id AND cts >= vts AND cts <= vts + INTERVAL 1 HOUR"
-        ),
-    ).select("user_id", "view_id", "click_id")
-    return run_to_memory(joined, output_mode="append")
-
-
-@register(
-    "q_stream_join_outer",
-    oracle="""
-        WITH mx AS (
-            -- the global watermark is the MIN of the per-side
-            -- watermarks, each computed on its FILTERED stream
-            SELECT LEAST(
-                (SELECT MAX(ts) FROM events WHERE event_type = 'view'),
-                (SELECT MAX(ts) FROM events WHERE event_type = 'click')
-            ) AS m
-        ),
-        views AS (
-            SELECT user_id, event_id AS view_id, ts AS vts
-            FROM events WHERE event_type = 'view'
-        ),
-        clicks AS (
-            SELECT user_id AS c_user_id, event_id AS click_id, ts AS cts
-            FROM events WHERE event_type = 'click'
-        ),
-        matched AS (
-            SELECT v.user_id, v.view_id, c.click_id
-            FROM views v JOIN clicks c
-              ON c.c_user_id = v.user_id
-             AND c.cts >= v.vts
-             AND c.cts <= v.vts + INTERVAL 1 HOUR
-        ),
-        unmatched AS (
-            SELECT v.user_id, v.view_id, CAST(NULL AS BIGINT) AS click_id
-            FROM views v, mx
-            WHERE NOT EXISTS (
-                SELECT 1 FROM clicks c
-                WHERE c.c_user_id = v.user_id
-                  AND c.cts >= v.vts
-                  AND c.cts <= v.vts + INTERVAL 1 HOUR
-            )
-            AND v.vts + INTERVAL 1 HOUR < mx.m - INTERVAL 2 HOUR
-        )
-        SELECT user_id, view_id, click_id FROM matched
-        UNION ALL
-        SELECT user_id, view_id, click_id FROM unmatched
-    """,
-)
-def q_stream_join_outer(spark, sf_dir):
-    """Stream-stream LEFT OUTER join with watermark-gated null
-    emission — the attribution query that also reports views that
-    NEVER converted. The semantics the oracle must model (and the
-    reason outer stream joins are subtle): an unmatched view is
-    emitted null-padded only when the watermark proves no future
-    click can match — i.e. the GLOBAL watermark (the MIN of the two
-    sides' watermarks, each max-event-time-of-that-filtered-side −
-    2h, advanced by the trailing no-data micro-batch) has passed the
-    view's match horizon vts + 1h. Parity found the subtlety the
-    first spelling missed: the watermark is per-side-then-min, not
-    max-over-all-events — a view stalls behind the SLOWER side's
-    clock (here the click stream ends hours before the view stream),
-    exactly the multi-stream skew behavior operators fight in
-    production. Views younger than that remain in
-    state at shutdown and are NOT emitted — so the bounded replay's
-    result is the batch left join RESTRICTED to decidable rows, which
-    is exactly what the oracle spells (strict <, Spark's state-
-    eviction comparison). The hash match proves the eviction boundary
-    to the row.
-
-    100 TB: same state bound as the inner join (watermark horizon ×
-    per-user rate); the no-data batch discipline is what drains outer
-    results on a real cluster too — a stream that stops receiving
-    data still flushes its decidable unmatched rows.
-    """
-    s = events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("vts"),
-        )
-        .withWatermark("vts", "2 hours")
-    )
-    clicks = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("cts"),
-        )
-        .withWatermark("cts", "2 hours")
-    )
-    joined = views.join(
-        clicks,
-        F.expr(
-            "user_id = c_user_id AND cts >= vts AND cts <= vts + INTERVAL 1 HOUR"
-        ),
-        "leftOuter",
-    ).select("user_id", "view_id", "click_id")
-    return run_to_memory(joined, output_mode="append")
-
-
-@register(
-    "q_stream_full_outer",
-    oracle="""
-        WITH mx AS (
+# The batch twin of _view_click_join, shared by its three oracles:
+# views, clicks, their matches, and the views decidably unmatched. A
+# view is decided once the global watermark passes its match horizon
+# vts + 1h; the global watermark is the MIN of the per-side watermarks,
+# each computed on its FILTERED stream (mx.m - 2h).
+_VIEW_CLICK_CTES = """
+        mx AS (
             SELECT LEAST(
                 (SELECT MAX(ts) FROM events WHERE event_type = 'view'),
                 (SELECT MAX(ts) FROM events WHERE event_type = 'click')
@@ -403,7 +257,113 @@ def q_stream_join_outer(spark, sf_dir):
                   AND c.cts <= v.vts + INTERVAL 1 HOUR
             )
             AND v.vts + INTERVAL 1 HOUR < mx.m - INTERVAL 2 HOUR
+        )
+"""
+
+
+def _view_click_join(s, how: str):
+    """The event stream ``s``'s views joined (``how``) to same-user
+    clicks within the following hour, both sides under a 2h watermark.
+    ``user_id`` is the view's, or the click's on a full-outer row with
+    no view."""
+    views = (
+        s.filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("vts"),
+        )
+        .withWatermark("vts", "2 hours")
+    )
+    clicks = (
+        s.filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user_id"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("cts"),
+        )
+        .withWatermark("cts", "2 hours")
+    )
+    return views.join(
+        clicks,
+        F.expr(
+            "user_id = c_user_id AND cts >= vts AND cts <= vts + INTERVAL 1 HOUR"
         ),
+        how,
+    ).select(
+        F.coalesce("user_id", "c_user_id").alias("user_id"),
+        "view_id",
+        "click_id",
+    )
+
+
+@register(
+    "q_stream_stream_join",
+    oracle=f"""
+        WITH {_VIEW_CLICK_CTES}
+        SELECT user_id, view_id, click_id FROM matched
+    """,
+)
+def q_stream_stream_join(spark, sf_dir):
+    """Stream-stream inner join with watermarks: click attribution —
+    each view joined to same-user clicks within the following hour.
+
+    Both sides carry a 2h watermark so the state store evicts rows
+    older than the join window (Spark requires the watermark + time
+    bound to reason about state cleanup); inner-join results stream
+    out as matches arrive, so the bounded replay's output equals the
+    batch self-join oracle exactly. 100 TB story: state is bounded by
+    (watermark horizon x per-user event rate); the join shuffles both
+    streams on user_id — the same equi-key-plus-range-residual shape
+    as the batch interval join (q_join_selfjoin).
+    """
+    joined = _view_click_join(events_stream(spark, sf_dir), "inner")
+    return run_to_memory(joined, output_mode="append")
+
+
+@register(
+    "q_stream_join_outer",
+    oracle=f"""
+        WITH {_VIEW_CLICK_CTES}
+        SELECT user_id, view_id, click_id FROM matched
+        UNION ALL
+        SELECT user_id, view_id, click_id FROM unmatched_views
+    """,
+)
+def q_stream_join_outer(spark, sf_dir):
+    """Stream-stream LEFT OUTER join with watermark-gated null
+    emission — the attribution query that also reports views that
+    NEVER converted. The semantics the oracle must model (and the
+    reason outer stream joins are subtle): an unmatched view is
+    emitted null-padded only when the watermark proves no future
+    click can match — i.e. the GLOBAL watermark (the MIN of the two
+    sides' watermarks, each max-event-time-of-that-filtered-side −
+    2h, advanced by the trailing no-data micro-batch) has passed the
+    view's match horizon vts + 1h. Parity found the subtlety the
+    first spelling missed: the watermark is per-side-then-min, not
+    max-over-all-events — a view stalls behind the SLOWER side's
+    clock (here the click stream ends hours before the view stream),
+    exactly the multi-stream skew behavior operators fight in
+    production. Views younger than that remain in
+    state at shutdown and are NOT emitted — so the bounded replay's
+    result is the batch left join RESTRICTED to decidable rows, which
+    is exactly what the oracle spells (strict <, Spark's state-
+    eviction comparison). The hash match proves the eviction boundary
+    to the row.
+
+    100 TB: same state bound as the inner join (watermark horizon ×
+    per-user rate); the no-data batch discipline is what drains outer
+    results on a real cluster too — a stream that stops receiving
+    data still flushes its decidable unmatched rows.
+    """
+    joined = _view_click_join(events_stream(spark, sf_dir), "leftOuter")
+    return run_to_memory(joined, output_mode="append")
+
+
+@register(
+    "q_stream_full_outer",
+    oracle=f"""
+        WITH {_VIEW_CLICK_CTES},
         unmatched_clicks AS (
             -- a click's match horizon is its OWN timestamp (it joins
             -- views with vts in [cts - 1h, cts]), so it is decidably
@@ -448,34 +408,5 @@ def q_stream_full_outer(spark, sf_dir):
     100 TB: state identical to the inner join (watermark horizon x
     per-user rate per side); both sides shuffle on user_id once.
     """
-    s = events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("vts"),
-        )
-        .withWatermark("vts", "2 hours")
-    )
-    clicks = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("cts"),
-        )
-        .withWatermark("cts", "2 hours")
-    )
-    joined = views.join(
-        clicks,
-        F.expr(
-            "user_id = c_user_id AND cts >= vts AND cts <= vts + INTERVAL 1 HOUR"
-        ),
-        "fullOuter",
-    ).select(
-        F.coalesce("user_id", "c_user_id").alias("user_id"),
-        "view_id",
-        "click_id",
-    )
+    joined = _view_click_join(events_stream(spark, sf_dir), "fullOuter")
     return run_to_memory(joined, output_mode="append")

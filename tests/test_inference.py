@@ -41,11 +41,8 @@ def test_bootstrap_weights_poissonish(spark):
     # empirical weight distribution over 20k hash draws ~ Poisson(1)
     from pyspark.sql import functions as F
 
-    from flink_rc_spark.operators.inference import (
-        _BS_KEY_SPARK,
-        _HEX5_SPARK,
-        _pois_case,
-    )
+    from flink_rc_spark.functions.exact import md5_int
+    from flink_rc_spark.operators.inference import _BS_KEY, _pois_case
 
     df = (
         spark.range(500)
@@ -54,7 +51,7 @@ def test_bootstrap_weights_poissonish(spark):
             "event_id",
             F.explode(F.sequence(F.lit(0), F.lit(39))).alias("b"),
         )
-        .select(F.expr(_pois_case(_HEX5_SPARK.format(k=_BS_KEY_SPARK))).alias("w"))
+        .select(F.expr(_pois_case(md5_int(_BS_KEY, 1, 5))).alias("w"))
     )
     counts = {r.w: r.c for r in df.groupBy("w").agg(F.count("*").alias("c")).collect()}
     n = sum(counts.values())

@@ -117,11 +117,11 @@ def test_hash_sample_invariant_under_repartitioning(spark, sf_dir):
                 F.concat_ws("-", "l_orderkey", "l_linenumber").alias("k"),
             )
         )
-        from flink_rc_spark.llm.sampling import _HASHV_SPARK
+        from flink_rc_spark.functions.exact import md5_int
 
         got = {
             tuple(r)
-            for r in li.filter(F.expr(_HASHV_SPARK) < 26)
+            for r in li.filter(F.expr(md5_int("k", 1, 2)) < 26)
             .select("l_orderkey", "l_linenumber", "l_quantity")
             .collect()
         }

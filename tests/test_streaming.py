@@ -302,7 +302,7 @@ def _chaos_chunks(sf_dir, n_chunks=6):
 
 def _chaos_replay(spark, tmp_path, name, chunks):
     """Write `chunks` as one file per micro-batch (mtime = arrival
-    order) and run the q_stream_join_outer pipeline over them."""
+    order) and run the q_stream_join_outer join over them."""
     import os
 
     import pyarrow.parquet as pq
@@ -310,6 +310,7 @@ def _chaos_replay(spark, tmp_path, name, chunks):
     from pyspark.sql import types as T
 
     from flink_rc_spark.streaming.replay import run_to_memory
+    from flink_rc_spark.streaming.windows import _view_click_join
 
     d = str(tmp_path / name)
     os.makedirs(d)
@@ -331,25 +332,7 @@ def _chaos_replay(spark, tmp_path, name, chunks):
         .parquet(d)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select("user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("vts"))
-        .withWatermark("vts", "2 hours")
-    )
-    clicks = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("cts"),
-        )
-        .withWatermark("cts", "2 hours")
-    )
-    joined = views.join(
-        clicks,
-        F.expr("user_id = c_user_id AND cts >= vts AND cts <= vts + INTERVAL 1 HOUR"),
-        "leftOuter",
-    ).select("user_id", "view_id", "click_id")
+    joined = _view_click_join(s, "leftOuter")
     stats: dict = {}
     out = run_to_memory(joined, output_mode="append", stats=stats)
     return out, stats
@@ -488,29 +471,10 @@ def _chaos_full_outer_replay(spark, tmp_path, name, chunks):
     """The q_stream_full_outer pipeline (both-side null emission) over
     an arbitrary chunk delivery schedule."""
     from flink_rc_spark.streaming.replay import run_to_memory
+    from flink_rc_spark.streaming.windows import _view_click_join
 
     s = _chaos_stream(spark, _chaos_write(tmp_path, name, chunks))
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select("user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("vts"))
-        .withWatermark("vts", "2 hours")
-    )
-    clicks = (
-        s.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("cts"),
-        )
-        .withWatermark("cts", "2 hours")
-    )
-    joined = views.join(
-        clicks,
-        F.expr("user_id = c_user_id AND cts >= vts AND cts <= vts + INTERVAL 1 HOUR"),
-        "fullOuter",
-    ).select(
-        F.coalesce("user_id", "c_user_id").alias("user_id"), "view_id", "click_id"
-    )
+    joined = _view_click_join(s, "fullOuter")
     stats: dict = {}
     out = run_to_memory(joined, output_mode="append", stats=stats)
     return out, stats
@@ -1426,7 +1390,8 @@ def test_stream_hll_slicing_invariant_and_equals_batch(spark, sf_dir):
 
     from flink_rc_spark.registry import REGISTRY
     from flink_rc_spark.streaming.replay import events_stream, run_to_memory
-    from flink_rc_spark.streaming.stateful import _SHLL_M, stream_hll
+    from flink_rc_spark.functions.sketches import _HLL_M
+    from flink_rc_spark.streaming.stateful import stream_hll
     from flink_rc_spark.util import ensure_package_shipped
 
     ensure_package_shipped(spark)
@@ -1443,11 +1408,11 @@ def test_stream_hll_slicing_invariant_and_equals_batch(spark, sf_dir):
     )
     reg_map = {r.bucket: r.register for r in regs}
     register_sum = sum(reg_map.values())
-    empty = _SHLL_M - len([v for v in reg_map.values() if v > 0])
+    empty = _HLL_M - len([v for v in reg_map.values() if v > 0])
     assert register_sum == one.register_sum
     assert empty == one.empty_buckets
     scaled = sum(
-        2 ** (41 - reg_map.get(b, 0)) for b in range(_SHLL_M)
+        2 ** (41 - reg_map.get(b, 0)) for b in range(_HLL_M)
     )
     assert scaled == one.scaled_power_sum
 
