@@ -39,8 +39,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MONEY = "decimal(12,2)"
-
 # Integer cents of the 2-decimal double ``value``, spelled exactly as
 # the oracles spell it: the DECIMAL cast rounds half away from zero in
 # both engines (numpy's np.round rounds half to even, so exact half
@@ -68,6 +66,18 @@ def hex_int(hex_sql: str, start: int | str, n: int, *, duck: bool = False) -> st
 def md5_int(key_sql: str, start: int | str, n: int, *, duck: bool = False) -> str:
     """``hex_int`` of ``md5(key_sql)``."""
     return hex_int(f"md5({key_sql})", start, n, duck=duck)
+
+
+# The document key every md5-derived document integer hashes (split
+# byte, file shard, 40-bit hv), spelled in the subset both engines parse.
+DOC_KEY = "CAST(doc_id AS STRING)"
+
+
+def doc_hv(*, duck: bool = False) -> str:
+    """A document's 40-bit hv: the first ten hex digits of
+    md5(DOC_KEY), the value q_sample_bottomk, q_sample_weighted and
+    q_sketch_kmv_setops rank documents by."""
+    return md5_int(DOC_KEY, 1, 10, duck=duck)
 
 
 def dlit(x, prec: int = 12, scale: int = 2) -> Column:

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import dsum, md5_int
+from flink_rc_spark.functions.exact import doc_hv, dsum, md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -477,7 +477,6 @@ def q_bloom_prune_join(spark, sf_dir):
 
 _KMV_K = 64
 _POW40 = 1099511627776  # 2^40; hv = first 10 md5 hex chars as bigint
-_KMV_KEY = "CAST(doc_id AS STRING)"
 
 # est(S) from a KMV sketch: exact when the set is smaller than k,
 # else (k-1) / frac(h_k) — one double division of exactly-agreed ints
@@ -496,7 +495,7 @@ _EST_SPARK = (
     oracle=f"""
     WITH hv AS (
         SELECT doc_id, lang, source,
-               {md5_int(_KMV_KEY, 1, 10, duck=True)} AS h
+               {doc_hv(duck=True)} AS h
         FROM documents
     ),
     a AS (SELECT h FROM hv WHERE lang = 'en'),
@@ -559,7 +558,7 @@ def q_sketch_kmv_setops(spark, sf_dir):
     hv = docs.select(
         "lang",
         "source",
-        F.expr(md5_int(_KMV_KEY, 1, 10)).alias("h"),
+        F.expr(doc_hv()).alias("h"),
     )
     a = hv.filter(F.col("lang") == "en").select("h")
     b = hv.filter(F.col("source").like("src1%")).select("h")

@@ -38,14 +38,8 @@ from flink_rc_spark.sources.tables import load
 
 _N_MERGES = 6
 
+
 # adjacent symbol pairs of the space-sentineled corpus string `s`
-_PAIRS_SPARK = (
-    "transform(sequence(1, size(split(trim(s), ' ')) - 1),"
-    " i -> struct(element_at(split(trim(s), ' '), i) AS a,"
-    "             element_at(split(trim(s), ' '), i + 1) AS b))"
-)
-
-
 def _pairs_duck(d: str) -> str:
     return f"""
         SELECT u.a AS a, u.b AS b

@@ -2,10 +2,17 @@
 
 Iterative ML on DataFrames, the clustering sibling of the PageRank
 fixpoint (llm/dedup.py q_graph_pagerank): a fixed number of Lloyd
-rounds over the embeddings table, each round = one broadcast of the
-k-row centroid table + one argmin ranking + one element-wise
-re-center aggregate — never a driver-side loop over vectors, never an
-all-pairs stage.
+rounds, each round = one assignment of every point to its nearest
+centroid + one element-wise re-center aggregate — never a driver-side
+loop over vectors, never an all-pairs stage.
+
+ONE FIT PER ENGINE: every k-means in the package — q_kmeans,
+q_silhouette and q_dedup_semdedup (k-means over the embeddings), the
+IVF coarse quantizer and the per-subspace PQ codebook of
+q_ivf_pq_search — is `lloyd` in Spark and `lloyd_cte` in DuckDB.
+Both take the points as (vec_id, *by, m), fit k centroids per `by`
+group (the PQ codebook fits one per subspace), and follow the same
+protocol, so no other module writes a round body.
 
 INTEGER FIXED-POINT protocol (what makes an iterative float algorithm
 hash-verifiable against an independent engine): embeddings live in
@@ -13,27 +20,28 @@ hash-verifiable against an independent engine): embeddings live in
 POSITIVE bigint exactly reproducible in both engines (the double
 (x+2)·10⁶ is the same IEEE value bit-for-bit from the same float32
 input). Distances are exact integer sums of squares (≤ 64·10¹² —
-well inside bigint), argmin ties break on centroid id, and the
-re-centered mean is quantized back to the integer grid with
-round-half-up spelled as (2·Σ + n) DIV (2n) — positive operands, so
-Spark's truncating DIV and DuckDB's flooring // agree. After the
-quantization, EVERY intermediate in both engines is an identical
-integer, so three rounds later the cluster sizes, members, and
-distances still hash-match exactly. (The same trick at 10⁻⁶
-resolution is how the PageRank key makes 5 damped rounds exact; the
-DSIR key applies it to log-ratios.)
+well inside bigint), argmin ties break on centroid id, an empty
+cluster keeps its centroid, and the re-centered mean is quantized
+back to the integer grid with round-half-up spelled as
+(2·Σ + n) DIV (2n) — positive operands, so Spark's truncating DIV and
+DuckDB's flooring // agree. After the quantization, EVERY
+intermediate in both engines is an identical integer, so three rounds
+later the cluster sizes, members, and distances still hash-match
+exactly. (The same trick at 10⁻⁶ resolution is how the PageRank key
+makes 5 damped rounds exact; the DSIR key applies it to log-ratios.)
 
-100 TB story: the model state (k×64 ints) is broadcast — vectors
-never shuffle for assignment (the BroadcastNestedLoopJoin against the
-8-row centroid table is the intended plan, same class as q_knn_label's
-broadcast probes); the re-center is an (c_id, dim) hash aggregate with
-map-side combine, shuffle volume k·64 rows per round. Rounds are a
-fixed small constant (Lloyd converges fast; production pipelines run
-bounded rounds on a sample anyway — see similarity.ivf_fit_centroids
-for the sample-fit variant this key generalizes).
+100 TB story: the model state (groups × k × dim ints) stays on the
+driver between rounds and rides to every task as a closure constant —
+vectors never shuffle for assignment; the re-center is a
+(by, c_id, dim) hash aggregate with map-side combine whose collected
+result is groups × k rows per round. Rounds are a fixed small constant
+(Lloyd converges fast; production pipelines run bounded rounds on a
+sample anyway).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -70,93 +78,108 @@ _DIST_SPARK = (
 # slower than the interpreted HOF fold. 16-term trees (PQ subdims,
 # matryoshka prefix) stay under the budget and DO win — see
 # similarity.py.
-_DIST_DUCK = (
-    f"list_sum(list_transform(range(1, {DIM + 1}),"
-    " i -> (m[i] - cm[i]) * (m[i] - cm[i])))"
-)
 
 
-def kmeans_cte(k_sql: str | None = None) -> str:
-    """Unrolled 3-round Lloyd as DuckDB CTE text (generated, not
-    hand-kept: the round body is identical text per round). Ends with
-    `assign{ROUNDS}` = (vec_id, m, c_id, dist) — the final cluster
-    assignment. Shared by q_kmeans' oracle and the SemDeDup key.
+def dist_duck(dim: int = DIM) -> str:
+    """DuckDB: exact squared distance between the bigint lists ``m``
+    and ``cm`` of length ``dim``."""
+    return (
+        f"list_sum(list_transform(range(1, {dim + 1}),"
+        " i -> (m[i] - cm[i]) * (m[i] - cm[i])))"
+    )
 
-    ``k_sql``: None keeps the fixed k={K} literal (q_kmeans' declared
-    contract); otherwise a scalar SQL expression over `embeddings`
-    computing k — the SemDeDup key passes a COUNT(*)-based formula so
-    the cluster count scales with the corpus (both engines evaluate
-    the same formula, so the oracle stays exact)."""
-    if k_sql is None:
-        seed = f"""
-    cent0 AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS c_id,
-               m AS cm
-        FROM (SELECT vec_id, m FROM vec ORDER BY vec_id LIMIT {K})
-    )"""
-    else:
-        seed = f"""
-    kparam AS (SELECT {k_sql} AS kk FROM embeddings),
-    cent0 AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS c_id,
-               m AS cm
-        FROM vec QUALIFY ROW_NUMBER() OVER (ORDER BY vec_id)
-                 <= (SELECT kk FROM kparam)
-    )"""
-    parts = [
-        f"""
-    vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),{seed}"""
-    ]
-    for r in range(1, ROUNDS + 1):
-        prev = f"cent{r - 1}"
-        parts.append(f"""
-    assign{r} AS (
-        SELECT vec_id, m, c_id, {_DIST_DUCK} AS dist
-        FROM vec CROSS JOIN {prev}
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY {_DIST_DUCK}, c_id) = 1
+
+def lloyd_cte(
+    p: str,
+    points: str,
+    seed_order: str,
+    k: int | str,
+    rounds: int,
+    dim: int,
+    by: Sequence[str] = (),
+) -> str:
+    """The Lloyd fit as DuckDB CTE text (generated: the round body is
+    identical text per round). ``points`` names a relation
+    (vec_id, *by, m); per ``by`` group the seeds `{p}cent0` are its
+    first ``k`` points in ``seed_order`` (``k`` an int or a scalar SQL
+    expression), c_id 0..k-1. Each of ``rounds`` rounds assigns every
+    point and re-centers, giving `{p}cent1`…`{p}cent{rounds}`
+    (*by, c_id, cm); `{p}asg` (vec_id, *by, m, c_id, dist) is the
+    nearest-centroid assignment against `{p}cent{rounds}`."""
+    grp = "".join(f"{b}, " for b in by)
+    part = f"PARTITION BY {', '.join(by)} " if by else ""
+    seed_rank = f"ROW_NUMBER() OVER ({part}ORDER BY {seed_order})"
+    ctes = [f"""
+    {p}cent0 AS (
+        SELECT {grp}CAST({seed_rank} - 1 AS BIGINT) AS c_id, m AS cm
+        FROM {points} QUALIFY {seed_rank} <= {k}
+    )"""]
+    for r in range(rounds + 1):
+        asg = f"{p}asg" if r == rounds else f"{p}asg{r}"
+        join = (
+            f"JOIN {p}cent{r} USING ({', '.join(by)})" if by
+            else f"CROSS JOIN {p}cent{r}"
+        )
+        ctes.append(f"""
+    {asg} AS (
+        SELECT * FROM (
+            SELECT vec_id, {grp}m, c_id, {dist_duck(dim)} AS dist
+            FROM {points} {join}
+        ) QUALIFY ROW_NUMBER() OVER (PARTITION BY {grp}vec_id
+                                     ORDER BY dist, c_id) = 1
     )""")
-        if r < ROUNDS:
-            parts.append(f"""
-    stats{r} AS (
-        SELECT c_id, i,
-               (2 * SUM(m[i]) + COUNT(*)) // (2 * COUNT(*)) AS cv
-        FROM assign{r}, range(1, {DIM + 1}) r(i)
-        GROUP BY c_id, i
-    ),
-    newc{r} AS (
-        SELECT c_id, list(cv ORDER BY i) AS cm FROM stats{r} GROUP BY c_id
-    ),
-    cent{r} AS (
-        SELECT p.c_id, COALESCE(n.cm, p.cm) AS cm
-        FROM cent{r - 1} p LEFT JOIN newc{r} n USING (c_id)
+        if r < rounds:
+            ctes.append(f"""
+    {p}cent{r + 1} AS (
+        SELECT {grp}c_id, COALESCE(n.cm, o.cm) AS cm
+        FROM {p}cent{r} o LEFT JOIN (
+            SELECT {grp}c_id, list(cv ORDER BY i) AS cm FROM (
+                SELECT {grp}c_id, i,
+                       (2 * SUM(m[i]) + COUNT(*)) // (2 * COUNT(*)) AS cv
+                FROM {asg}, range(1, {dim + 1}) r(i)
+                GROUP BY {grp}c_id, i
+            ) GROUP BY {grp}c_id
+        ) n USING ({grp}c_id)
     )""")
-    return ",".join(parts)
+    return ",".join(ctes)
 
 
-def _duck_oracle() -> str:
-    return f"""WITH {kmeans_cte()}
-    SELECT c_id,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           MIN(vec_id) AS min_vec_id,
-           CAST(SUM(dist) AS BIGINT) AS total_dist
-    FROM assign{ROUNDS}
-    GROUP BY c_id
-    ORDER BY c_id"""
-
-
-def _assign(vec: DataFrame, cent: DataFrame) -> DataFrame:
-    """One Lloyd assignment, Arrow-vectorized: the k-row centroid
-    table (k <= 64 by contract) is collected to the driver and
-    shipped as a numpy closure constant; each vector batch computes
-    exact int64 distances to ALL centroids with one matmul and takes
-    the (dist, c_id)-lexicographic argmin.
+def sq_dist_kernel():
+    """The exact-distance closure every Arrow kernel here shares:
+    ``dists(col, cm)`` maps a pandas Series of bigint vectors and a
+    (k, dim) int64 centroid matrix to the (n, k) int64 matrix of
+    squared distances.
 
     Exactness: |m-c|^2 = |m|^2 + |c|^2 - 2<m,c> term-by-term in
     int64 — quantized coords are <= ~2.6e6 (the +2.0 offset grid), so
     every intermediate is <= 64 * (2.6e6)^2 ~ 4.3e14 << 2^63; integer
     arithmetic is associative, so the expanded form equals the SQL
-    fold bit-for-bit. Tie-break: centroid rows are sorted by c_id and
+    fold bit-for-bit.
+
+    Kernels capture the returned closure at factory time and call it
+    through that cell, never through a module-level name: cloudpickle
+    ships module-level functions by reference, and Python workers
+    started without this package on their path would die with
+    ModuleNotFoundError (the llm/pairkern.py pickling contract)."""
+    import numpy as np
+
+    def dists(col, cm):
+        m = np.array([np.asarray(v) for v in col], dtype=np.int64)
+        c2 = (cm * cm).sum(axis=1)
+        return (m * m).sum(axis=1)[:, None] + c2[None, :] - 2 * (m @ cm.T)
+
+    return dists
+
+
+def _assign(
+    points: DataFrame, cent: list[tuple], by: Sequence[str] = ()
+) -> DataFrame:
+    """One Lloyd assignment, Arrow-vectorized: (vec_id, *by, m, c_id,
+    dist), every point's nearest centroid within its ``by`` group. The
+    driver rows ``cent`` (*by, c_id, cm) ship as numpy closure
+    constants; each Arrow batch computes exact int64 distances to ALL
+    of its group's centroids with one matmul and takes the argmin.
+    Tie-break: each group's centroids are sorted by c_id and
     np.argmin returns the FIRST minimum — exactly the oracle's
     ``ROW_NUMBER() OVER (ORDER BY dist, c_id) = 1``.
 
@@ -166,109 +189,125 @@ def _assign(vec: DataFrame, cent: DataFrame) -> DataFrame:
     3.9 s per round over 20k x 64 at sf1) and the 64-term flat unroll
     interprets even slower once it blows the stage's codegen budget
     (BASELINE.md r11). One vectorized matmul per Arrow batch is the
-    shape Spark MLlib itself uses for k-means assignment.
-
-    100 TB: vectors NEVER shuffle — the model rides to every
-    partition as a k x dim closure constant (32 KB at the k=64
-    contract cap) and each task streams its Arrow batches through
-    one BLAS call; collecting the k-row centroid table is the same
-    per-round driver round-trip the re-center update already makes.
-    The collect also CUTS the plan lineage each round, so round r's
-    plan never re-chains rounds 1..r-1."""
+    shape Spark MLlib itself uses for k-means assignment."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    rows = cent.orderBy("c_id").collect()
-    cids = np.array([r["c_id"] for r in rows], dtype=np.int64)
-    cm = np.array([list(r["cm"]) for r in rows], dtype=np.int64)
-    c2 = (cm * cm).sum(axis=1)
+    dists = sq_dist_kernel()
+    by = list(by)
+    groups: dict = {}
+    for *key, c_id, cm in sorted(cent):
+        groups.setdefault(tuple(key), []).append((c_id, cm))
+    models = {
+        key: (
+            np.array([c for c, _ in rows], dtype=np.int64),
+            np.array([cm for _, cm in rows], dtype=np.int64),
+        )
+        for key, rows in groups.items()
+    }
 
     def assign_batches(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            m = np.array([np.asarray(v) for v in pdf["m"]], dtype=np.int64)
-            d = (m * m).sum(axis=1)[:, None] + c2[None, :] - 2 * (m @ cm.T)
-            j = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "m": pdf["m"],
-                    "c_id": cids[j],
-                    "dist": d[np.arange(len(j)), j],
-                }
+            for key, part in pdf.groupby(by, sort=False) if by else [((), pdf)]:
+                cids, cm = models[key]
+                d = dists(part["m"], cm)
+                j = d.argmin(axis=1)
+                yield part.assign(c_id=cids[j], dist=d[np.arange(len(j)), j])
+
+    cols = ["vec_id", *by, "m"]
+    schema = StructType(
+        [points.schema[c] for c in cols]
+        + [StructField("c_id", LongType()), StructField("dist", LongType())]
+    )
+    return points.select(*cols).mapInPandas(assign_batches, schema)
+
+
+def lloyd(
+    points: DataFrame, seeds: DataFrame, rounds: int, by: Sequence[str] = ()
+) -> list[tuple]:
+    """The Lloyd fit in Spark, the twin of `lloyd_cte`: ``rounds``
+    rounds over ``points`` (vec_id, *by, m) from ``seeds``
+    (*by, c_id, cm). Returns the fitted centroids as driver rows
+    (*by, c_id, cm) sorted by (*by, c_id).
+
+    Each round is one `_assign` plus one collected re-center aggregate
+    of at most groups·k rows; the centroids stay on the driver between
+    rounds, and a cluster no point chose keeps its centroid there."""
+    by = list(by)
+    cent = sorted(tuple(r) for r in seeds.select(*by, "c_id", "cm").collect())
+    for _ in range(rounds):
+        new = {
+            tuple(r)[:-1]: r["cm"]
+            for r in _assign(points, cent, by)
+            .select(*by, "c_id", F.posexplode("m").alias("i", "v"))
+            .groupBy(*by, "c_id", "i")
+            .agg(F.expr("(2 * SUM(v) + COUNT(*)) DIV (2 * COUNT(*))").alias("cv"))
+            .groupBy(*by, "c_id")
+            .agg(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("i", "cv"))),
+                    lambda s: s["cv"],
+                ).alias("cm")
             )
+            .collect()
+        }
+        cent = [(*c[:-1], new.get(c[:-1], c[-1])) for c in cent]
+    return cent
 
-    return vec.mapInPandas(
-        assign_batches,
-        schema="vec_id bigint, m array<bigint>, c_id bigint, dist bigint",
-    )
 
-
-def _recenter(assign: DataFrame, cent: DataFrame) -> DataFrame:
-    """Element-wise integer-grid mean per cluster: explode dims, hash
-    aggregate on (c_id, dim), re-assemble the sorted array; empty
-    clusters keep their previous centroid (LEFT JOIN + COALESCE)."""
-    dims = assign.select(
-        "c_id", F.posexplode("m").alias("i", "v")
-    )
-    # exact round-half-up without float division: (2*s + n) DIV (2*n)
-    stats = dims.groupBy("c_id", "i").agg(
-        F.expr("(2 * SUM(v) + COUNT(*)) DIV (2 * COUNT(*))").alias("cv")
-    )
-    newc = stats.groupBy("c_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("i", "cv"))), lambda s: s["cv"]
-        ).alias("cm_new")
-    )
-    return (
-        cent.join(newc, "c_id", "left")
-        .select("c_id", F.coalesce("cm_new", "cm").alias("cm"))
-    )
+def _duck_oracle() -> str:
+    return f"""WITH
+    vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    {lloyd_cte('k', 'vec', 'vec_id', K, ROUNDS - 1, DIM)}
+    SELECT c_id,
+           CAST(COUNT(*) AS BIGINT) AS n_members,
+           MIN(vec_id) AS min_vec_id,
+           CAST(SUM(dist) AS BIGINT) AS total_dist
+    FROM kasg
+    GROUP BY c_id
+    ORDER BY c_id"""
 
 
 def kmeans_rounds(
     spark: SparkSession, sf_dir: str, k: int | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(vec, cent_final, assign): the quantized vectors, the centroid
-    table the LAST assignment round used (cent{ROUNDS-1} in the
-    oracle CTE), and the final assignment. Shared by kmeans_assign and
-    the silhouette key (which needs per-vector distances to EVERY
-    final centroid, not just the argmin)."""
+) -> tuple[DataFrame, list[tuple], DataFrame]:
+    """(vec, cent, assign): the quantized vectors, the driver rows
+    (c_id, cm) of the centroids the LAST assignment round used
+    (kcent{ROUNDS-1} in the oracle CTE), and the final assignment.
+    Shared by kmeans_assign and the silhouette key (which needs
+    per-vector distances to EVERY final centroid, not just the
+    argmin). ``k=None`` keeps the fixed k={K}."""
     emb = load(spark, sf_dir, "embeddings")
-    vec = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m")).transform(checkpoint, 
-        eager=True
+    vec = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m")).transform(
+        checkpoint, eager=True
     )  # scanned once, probed every round
-    w0 = Window.orderBy("vec_id")
-    cent = (
+    seeds = (
         vec.orderBy("vec_id")
         .limit(K if k is None else k)
         .select(
-            (F.row_number().over(w0) - 1).cast("bigint").alias("c_id"),
+            (F.row_number().over(Window.orderBy("vec_id")) - 1)
+            .cast("bigint")
+            .alias("c_id"),
             F.col("m").alias("cm"),
         )
     )
-    assign = None
-    for r in range(1, ROUNDS + 1):
-        assign = _assign(vec, cent)
-        if r < ROUNDS:
-            cent = _recenter(assign, cent).transform(checkpoint, eager=True)
+    cent = lloyd(vec, seeds, ROUNDS - 1)
     # The final assignment is consumed more than once downstream
-    # (semdedup's in-cluster SELF-join reads it on both sides; the
-    # silhouette key probes it against every centroid). The old
-    # window-argmin ended in an exchange those consumers could reuse;
-    # the projection argmin has no exchange, so materialize it ONCE
-    # here (lazy: persisted by the first job that touches it).
-    return vec, cent, assign.transform(checkpoint, eager=False)
+    # (semdedup's in-cluster SELF-join reads it on both sides), so
+    # materialize it ONCE here (lazy: persisted by the first job that
+    # touches it).
+    return vec, cent, _assign(vec, cent).transform(checkpoint, eager=False)
 
 
 def kmeans_assign(
     spark: SparkSession, sf_dir: str, k: int | None = None
 ) -> DataFrame:
     """The final Lloyd assignment (vec_id, m, c_id, dist) — the Spark
-    twin of kmeans_cte()'s assign{ROUNDS}. Shared by q_kmeans (fixed
-    k={K}) and the SemDeDup key (corpus-scaled k). ``k=None`` keeps
-    the fixed default."""
+    twin of the oracle's `kasg`. Shared by q_kmeans (fixed k={K}) and
+    the SemDeDup key (corpus-scaled k). ``k=None`` keeps the fixed
+    default."""
     return kmeans_rounds(spark, sf_dir, k)[2]
 
 
@@ -580,10 +619,12 @@ _SIL_MICRO = """
 
 
 def _silhouette_oracle() -> str:
-    return f"""WITH {kmeans_cte()},
+    return f"""WITH
+    vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    {lloyd_cte('k', 'vec', 'vec_id', K, ROUNDS - 1, DIM)},
     alld AS (
-        SELECT vec_id, c_id, {_DIST_DUCK} AS dist
-        FROM vec CROSS JOIN cent{ROUNDS - 1}
+        SELECT vec_id, c_id, {dist_duck()} AS dist
+        FROM vec CROSS JOIN kcent{ROUNDS - 1}
     ),
     ranked AS (
         SELECT vec_id, c_id, dist,
@@ -622,8 +663,8 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-verified); s is micro-quantized by exact DECIMAL floor
     division, so the per-cluster mean is a ratio of exact integers.
 
-    100 TB: ONE broadcast of the k-row centroid table against the
-    vector scan (the q_kmeans assignment shape — vectors never
+    100 TB: the k-row centroid table rides to the vector scan as a
+    closure constant (the q_kmeans assignment shape — vectors never
     shuffle), per-vector top-2 via a k-element in-row sort, then a
     k-row hash aggregate.
     """
@@ -631,27 +672,23 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     vec, cent, _ = kmeans_rounds(spark, sf_dir)
-    # Arrow-vectorized per-vector top-2 over the (tiny, collected)
-    # centroid table — the _assign shape; the crossJoin + interpreted
-    # HOF dist + collect_list sort it replaces was the key's dominant
-    # cost. np.lexsort((c_id, dist)) reproduces the SQL
-    # sort_array(struct(dist, c_id)) lexicographic tie-break exactly;
-    # int64 expansion is exact at the grid's magnitudes (see _assign).
-    rows = cent.orderBy("c_id").collect()
-    cids = np.array([r["c_id"] for r in rows], dtype=np.int64)
-    cm = np.array([list(r["cm"]) for r in rows], dtype=np.int64)
-    c2 = (cm * cm).sum(axis=1)
+    # Arrow-vectorized per-vector top-2 over the final centroids (driver
+    # rows sorted by c_id) with the shared exact-distance closure; the
+    # crossJoin + interpreted HOF dist + collect_list sort it replaces
+    # was the key's dominant cost.
+    dists = sq_dist_kernel()
+    cids = np.array([c for c, _ in cent], dtype=np.int64)
+    cm = np.array([m for _, m in cent], dtype=np.int64)
 
     def top2_batches(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            m = np.array([np.asarray(v) for v in pdf["m"]], dtype=np.int64)
-            d = (m * m).sum(axis=1)[:, None] + c2[None, :] - 2 * (m @ cm.T)
+            d = dists(pdf["m"], cm)
             # two smallest (dist, c_id) per row, exact lexicographic
             ordk = np.argsort(d, axis=1, kind="stable")  # ties -> lower idx = lower c_id
             i0, i1 = ordk[:, 0], ordk[:, 1]
-            r_idx = np.arange(len(m))
+            r_idx = np.arange(len(d))
             yield pd.DataFrame(
                 {
                     "own": cids[i0],

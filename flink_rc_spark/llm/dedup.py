@@ -1503,14 +1503,16 @@ def _semdedup_k(n: int) -> int:
 
 
 def _semdedup_oracle() -> str:
-    from flink_rc_spark.llm.cluster import ROUNDS, kmeans_cte
+    from flink_rc_spark.llm.cluster import DIM, ROUNDS, _QUANT_DUCK, lloyd_cte
 
+    k_sql = f"(SELECT {_SEMDEDUP_K_SQL} FROM embeddings)"
     dot = (
         "list_reduce(list_transform(range(1, 65), i -> a.e[i] * b.e[i]),"
         " (acc, x) -> acc + x)"
     )
     return f"""
-    WITH {kmeans_cte(k_sql=_SEMDEDUP_K_SQL)},
+    WITH vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    {lloyd_cte('k', 'vec', 'vec_id', k_sql, ROUNDS - 1, DIM)},
     v AS (SELECT vec_id,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
           FROM embeddings),
@@ -1519,7 +1521,7 @@ def _semdedup_oracle() -> str:
                        (acc, x) -> acc + x)) AS nrm
            FROM v),
     mem AS (SELECT asg.vec_id, asg.c_id, n.e, n.nrm
-            FROM assign{ROUNDS} asg JOIN nv n USING (vec_id)),
+            FROM kasg asg JOIN nv n USING (vec_id)),
     pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                {dot} / (a.nrm * b.nrm) AS cosv
@@ -1549,7 +1551,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication made tractable by CLUSTER SCOPING — k-means the
     embeddings (the fixed-point Lloyd of q_kmeans, llm/cluster.py,
-    shared via kmeans_assign/kmeans_cte so the whole composition
+    shared via kmeans_assign/lloyd_cte so the whole composition
     stays hash-exact), then compare pairs ONLY within a cluster and
     drop every vector that has a smaller-id in-cluster neighbor with
     cosine >= tau; one row per vector reports its cluster, keep flag,

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import md5_int
+from flink_rc_spark.functions.exact import DOC_KEY, md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
@@ -31,7 +31,7 @@ from flink_rc_spark.sources.tables import load
 # assignment so splits are stable under any partitioning / re-ingest.
 # Every doc-split and doc-shard key reads this one byte.
 def doc_split_byte(duck: bool = False) -> str:
-    return md5_int("CAST(doc_id AS STRING)", 1, 2, duck=duck)
+    return md5_int(DOC_KEY, 1, 2, duck=duck)
 
 
 @register(

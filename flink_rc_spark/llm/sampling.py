@@ -24,15 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import md5_int
+from flink_rc_spark.functions.exact import doc_hv, md5_int
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
 # A row is sampled on v = md5_int('k', 1, 2), the first md5 byte of its
-# key column k, in [0, 255]; a document's 40-bit hv is the first ten
-# hex digits of md5 of its _DOC_KEY.
-_DOC_KEY = "CAST(doc_id AS STRING)"
+# key column k, in [0, 255]; a document's 40-bit hv is exact.doc_hv.
 
 # per-segment sampling rates (x/256) for the stratified query
 _RATES = {
@@ -128,7 +126,7 @@ _BOTTOMK_K = 64
     WITH hashed AS (
         SELECT doc_id,
                md5(CAST(doc_id AS VARCHAR)) AS h,
-               {md5_int(_DOC_KEY, 1, 10, duck=True)} AS hv
+               {doc_hv(duck=True)} AS hv
         FROM documents
     ),
     bottom AS (
@@ -167,7 +165,7 @@ def q_sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = docs.select(
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("h"),
-        F.expr(md5_int(_DOC_KEY, 1, 10)).alias("hv"),
+        F.expr(doc_hv()).alias("hv"),
     )
     bottom = hashed.orderBy("h", "doc_id").limit(_BOTTOMK_K)
     w = Window.orderBy("h", "doc_id")
@@ -192,7 +190,7 @@ _WEIGHTED_K = 20
     oracle=f"""
     WITH keyed AS (
         SELECT doc_id, n_chars,
-               -ln(({md5_int(_DOC_KEY, 1, 10, duck=True)} + 1.0)
+               -ln(({doc_hv(duck=True)} + 1.0)
                    / 1099511627776.0)
                    / CAST(n_chars AS DOUBLE) AS ekey
         FROM documents
@@ -227,7 +225,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampler.
     """
     docs = load(spark, sf_dir, "documents")
-    hv = F.expr(md5_int(_DOC_KEY, 1, 10))
+    hv = F.expr(doc_hv())
     ekey = -F.log((hv.cast("double") + F.lit(1.0)) / F.lit(float(1 << 40))) / F.col(
         "n_chars"
     ).cast("double")
@@ -413,7 +411,7 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the chosen set (<= k = {_FPS_K} rows) lives ON THE DRIVER;
     each round ships it as a numpy closure constant into one
     Arrow-vectorized min-distance map (the cluster._assign shape —
-    exact int64 expansion, see that docstring) and TakeOrdered(1)s
+    exact int64 expansion, see cluster.sq_dist_kernel) and TakeOrdered(1)s
     the farthest vector back. Vectors never shuffle, nothing is
     re-checkpointed per round (the r10 form paid 8 eager checkpoints
     + 8 broadcast crossJoin plans with the interpreted HOF fold —
@@ -423,7 +421,7 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from flink_rc_spark.llm.cluster import _QUANT_SPARK
+    from flink_rc_spark.llm.cluster import _QUANT_SPARK, sq_dist_kernel
 
     emb = load(spark, sf_dir, "embeddings")
     vq = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m")).transform(
@@ -448,20 +446,16 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id, m, sel_rank, dist_at_pick) — the greedy state, driver-side
     chosen: list = [(int(seed["vec_id"]), list(seed["m"]), 0, None)]
 
+    dists = sq_dist_kernel()
+
     def dmin_map():
         cm = np.array([c[1] for c in chosen], dtype=np.int64)
-        c2 = (cm * cm).sum(axis=1)
 
         def batches(it):
             for pdf in it:
                 if len(pdf) == 0:
                     continue
-                m = np.array(
-                    [np.asarray(v) for v in pdf["m"]], dtype=np.int64
-                )
-                d = (
-                    (m * m).sum(axis=1)[:, None] + c2[None, :] - 2 * (m @ cm.T)
-                ).min(axis=1)
+                d = dists(pdf["m"], cm).min(axis=1)
                 yield pd.DataFrame({"vec_id": pdf["vec_id"], "dmin": d})
 
         return vq.mapInPandas(batches, schema="vec_id bigint, dmin bigint")

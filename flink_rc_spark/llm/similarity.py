@@ -225,135 +225,6 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_fit_centroids(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 16,
-    sample_rows: int = 2048,
-    iters: int = 10,
-    seed: int = 7,
-) -> np.ndarray:
-    """IVF coarse quantizer: k-means centroids fit on a bounded sample.
-
-    Planning-time step (same class as approxQuantile in
-    prefix_agg_salted): the sample is capped at `sample_rows` so the
-    driver-side numpy Lloyd iterations cost O(sample x k x dim)
-    regardless of table size — at 100 TB you fit on a 100k-row sample
-    and broadcast the centroids, exactly as FAISS trains IVF on a
-    sample. Deterministic: fixed seed, fixed iteration count,
-    deterministic sample (lowest vec_ids).
-    """
-    pdf = (
-        _vectors(spark, sf_dir)
-        .orderBy("vec_id")
-        .limit(sample_rows)
-        .select("e")
-        .toPandas()
-    )
-    if len(pdf) == 0:
-        raise ValueError("ivf_fit_centroids: vector table is empty — nothing to fit")
-    x = np.vstack(pdf["e"].to_numpy())  # (n, 64)
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)  # cosine => unit sphere
-    rng = np.random.default_rng(seed)
-    # tiny tables: can't seed more centroids than distinct sample rows
-    k = min(k, len(x))
-    cent = x[rng.choice(len(x), size=k, replace=False)]
-    for _ in range(iters):
-        sims = x @ cent.T  # cosine against unit centroids
-        assign = sims.argmax(axis=1)
-        for c in range(k):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cent[c] = m / (np.linalg.norm(m) or 1.0)
-    return cent
-
-
-def _ivf_assign_udf(centroids: np.ndarray, n_probe: int):
-    """pandas UDF: vector -> array of the `n_probe` nearest centroid
-    ids (by cosine). The centroid matrix is closure-captured — tiny,
-    shipped once per executor like a broadcast."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    cent = centroids.copy()
-
-    @pandas_udf("array<int>")
-    def assign(e: pd.Series) -> pd.Series:
-        mat = np.vstack(e.to_numpy())
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        sims = mat @ cent.T  # (n, k)
-        order = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    return assign
-
-
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 50,
-    n_clusters: int = 16,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF approximate top-k cosine pairs — the k-means twin of the
-    hyperplane path, same plan shape (cluster-id equi-join):
-
-    1. fit centroids on a sample (ivf_fit_centroids, planning time);
-    2. each row explodes into its `n_probe` nearest cluster ids
-       (multi-probe recovers recall at cluster boundaries);
-    3. candidates = equi-join on cluster id (slim id rows, no vector
-       payload), exact cosine re-scores the survivors.
-
-    Per-cluster occupancy is ~n/k so in-cluster pairs are
-    O(n^2 * n_probe^2 / k); scale k with n to bound it — measured
-    recall asserted in tests/test_llm.py alongside the LSH path.
-    """
-    cent = ivf_fit_centroids(spark, sf_dir, k=n_clusters)
-    assign = _ivf_assign_udf(cent, n_probe)
-    n = _vectors(spark, sf_dir)
-    slim = n.select("vec_id", F.explode(assign(F.col("e"))).alias("cl"))
-    a = slim.select(F.col("vec_id").alias("vec_a"), "cl")
-    b = slim.select(F.col("vec_id").alias("vec_b"), "cl")
-    cand = (
-        a.join(b, "cl")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    av = n.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"),
-                  F.col("nrm").alias("na"))
-    bv = n.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"),
-                  F.col("nrm").alias("nb"))
-    cos = F.expr(_DOT_SPARK) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(av, "vec_a")
-        .join(bv, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("_raw"))
-        .orderBy(F.desc("_raw"), "vec_a", "vec_b")
-        .limit(k)
-        .select("vec_a", "vec_b", F.round("_raw", 4).alias("cosine"))
-    )
-
-
-def ivf_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 50,
-    n_clusters: int = 16,
-    n_probe: int = 2,
-    gt: set | None = None,
-) -> float:
-    """recall@k of IVF ANN vs brute-force ground truth (pass ``gt``
-    to reuse one brute pass across configs — the audit-tool path)."""
-    if gt is None:
-        gt = {(r.vec_a, r.vec_b) for r in brute_topk(spark, sf_dir, k).collect()}
-    got = {
-        (r.vec_a, r.vec_b)
-        for r in ivf_topk(spark, sf_dir, k, n_clusters, n_probe).collect()
-    }
-    return len(gt & got) / len(gt)
-
-
 def _band_buckets_udf(planes_per_band: int, n_bands: int):
     """Vectorized (Arrow/numpy) per-row band-bucket codes.
 
@@ -863,18 +734,19 @@ def q_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization: each 64-dim vector compresses to 8
     4-bit codes — the nearest of 16 per-subspace centroids for each
     8-dim slice. The IVF-PQ pair is how billion-vector ANN indexes
-    (FAISS-style) fit in memory: IVF (ivf_fit/ivf_topk above) prunes
-    the search space, PQ shrinks the residual distance table ~64x.
+    (FAISS-style) fit in memory: IVF (the coarse quantizer of
+    q_ivf_pq_search) prunes the search space, PQ shrinks the residual
+    distance table ~64x.
 
     The "training" is deterministic sampling: subspace s's 16
     centroids are the vectors ranked first by md5(s#vec_id) — a
-    reproducible stand-in for k-means (the IVF twin shows the
-    sample-fit k-means path) that keeps the whole operator
-    exact-oracle-checkable. Assignment is a broadcast join of the
-    128-row codebook against (vector × subspace) rows; the argmin is
-    a bounded 16-candidate window with code-ordered tie-break; the
-    distance fold is sequential in both engines, so even the double
-    sq_dist hash-matches post-round.
+    reproducible stand-in for k-means (q_ivf_pq_search fits its
+    codebook with the integer Lloyd of llm/cluster.py) that keeps the
+    whole operator exact-oracle-checkable. Assignment is a broadcast
+    join of the 128-row codebook against (vector × subspace) rows; the
+    argmin is a bounded 16-candidate window with code-ordered
+    tie-break; the distance fold is sequential in both engines, so
+    even the double sq_dist hash-matches post-round.
 
     100 TB: codebook is O(K × dim) regardless of corpus size —
     broadcast; assignment is an embarrassingly parallel map (no
@@ -912,183 +784,90 @@ _IVFPQ_TOPK = 5    # results per query
 _IVF_SEED_DUCK = "md5('ivf#' || CAST(vec_id AS VARCHAR))"
 
 
-def _ivf_coarse_cte() -> str:
-    """Unrolled fitted coarse quantizer as DuckDB CTE text: integer
-    fixed-point Lloyd (the q_kmeans protocol — see llm/cluster.py's
-    module docstring for why every intermediate is an identical
-    integer in both engines), seeded from an md5-ranked sample,
-    ending in `home` (every vector's nearest fitted cell) and
-    `probes` (each query's {_IVF_PROBE} nearest cells)."""
-    from flink_rc_spark.llm.cluster import _DIST_DUCK as _IDIST_DUCK
-    from flink_rc_spark.llm.cluster import _QUANT_DUCK
+def _ivf_pq_fit_cte() -> str:
+    """The DuckDB twin of `_ivf_pq_fit`: the coarse quantizer
+    (`lloyd_cte` prefix i, {_IVF_K} cells over the quantized vectors
+    `vq`) and the product quantizer (prefix p, {_PQ_K} centroids per
+    8-dim subspace slice of `sub`), both {_IVF_ROUNDS} rounds from
+    md5-ranked seeds, ending in `home` (every vector's fitted cell),
+    `probes` (each query's {_IVF_PROBE} nearest cells), `codes` (every
+    vector's per-subspace code) and `adc` (each query's integer
+    distance table to every fitted PQ centroid). All distances live on
+    the 1e6 fixed-point grid, so assignments, ADC sums and ties are
+    exact bigints in both engines."""
+    from flink_rc_spark.llm.cluster import _QUANT_DUCK, dist_duck, lloyd_cte
 
-    parts = [
-        f"""
+    pq_seed = (
+        "md5('pq#' || CAST(s AS VARCHAR) || '#' || CAST(vec_id AS VARCHAR)),"
+        " vec_id"
+    )
+    coarse = lloyd_cte(
+        "i", "vq", f"{_IVF_SEED_DUCK}, vec_id", _IVF_K, _IVF_ROUNDS, _DIM
+    )
+    pq = lloyd_cte(
+        "p", "sub", pq_seed, _PQ_K, _IVF_ROUNDS, _PQ_SUBDIM, by=("s",)
+    )
+    return f"""
     vq AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
-    icent0 AS (
-        SELECT CAST(ROW_NUMBER() OVER (
-                   ORDER BY {_IVF_SEED_DUCK}, vec_id) - 1 AS BIGINT) AS c_id,
-               m AS cm
-        FROM vq QUALIFY ROW_NUMBER() OVER (
-                   ORDER BY {_IVF_SEED_DUCK}, vec_id) <= {_IVF_K}
-    )"""
-    ]
-    for r in range(1, _IVF_ROUNDS + 1):
-        parts.append(f"""
-    iasg{r} AS (
-        SELECT vec_id, m, c_id
-        FROM vq CROSS JOIN icent{r - 1}
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY {_IDIST_DUCK}, c_id) = 1
-    ),
-    istats{r} AS (
-        SELECT c_id, i,
-               (2 * SUM(m[i]) + COUNT(*)) // (2 * COUNT(*)) AS cv
-        FROM iasg{r}, range(1, {_DIM + 1}) r(i)
-        GROUP BY c_id, i
-    ),
-    inewc{r} AS (
-        SELECT c_id, list(cv ORDER BY i) AS cm FROM istats{r} GROUP BY c_id
-    ),
-    icent{r} AS (
-        SELECT p.c_id, COALESCE(n.cm, p.cm) AS cm
-        FROM icent{r - 1} p LEFT JOIN inewc{r} n USING (c_id)
-    )""")
-    parts.append(f"""
-    home AS (
-        SELECT vec_id, CAST(c_id AS INT) AS cell
-        FROM vq CROSS JOIN icent{_IVF_ROUNDS}
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY {_IDIST_DUCK}, c_id) = 1
-    ),
+    {coarse},
+    home AS (SELECT vec_id, CAST(c_id AS INT) AS cell FROM iasg),
     probes AS (
         SELECT vec_id AS qid, CAST(c_id AS INT) AS cell
         FROM vq CROSS JOIN icent{_IVF_ROUNDS}
         WHERE vec_id < 10
         QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY {_IDIST_DUCK}, c_id) <= {_IVF_PROBE}
-    )""")
-    return ",".join(parts)
+                                   ORDER BY {dist_duck(_DIM)}, c_id) <= {_IVF_PROBE}
+    ),
+    sub AS (
+        SELECT vec_id, CAST(s AS INT) AS s,
+               m[s * {_PQ_SUBDIM} + 1 : s * {_PQ_SUBDIM} + {_PQ_SUBDIM}] AS m
+        FROM vq, range({_PQ_SUBS}) r(s)
+    ),
+    {pq},
+    codes AS (SELECT vec_id, s, CAST(c_id AS INT) AS code FROM pasg),
+    adc AS (
+        SELECT vec_id AS qid, s, CAST(c_id AS INT) AS code,
+               {dist_duck(_PQ_SUBDIM)} AS d
+        FROM sub JOIN pcent{_IVF_ROUNDS} USING (s)
+        WHERE vec_id < 10
+    )"""
 
 
-# fitted-PQ integer subspace distance (columns ms = vector slice,
-# cs = centroid slice, both on the 1e6 fixed-point grid) — exact
-# bigint sum of squares, order-independent, so no fold policy needed;
-# unrolled flat for whole-stage codegen (the HOF fold is interpreted)
+# fitted-PQ integer subspace distance of the search phase (columns
+# ms = vector slice, cs = centroid slice, both on the 1e6 fixed-point
+# grid) — exact bigint sum of squares, order-independent, so no fold
+# policy needed; unrolled flat for whole-stage codegen (the HOF fold
+# is interpreted)
 _PQI_DIST_SPARK = " + ".join(
     f"((ms[{i}] - cs[{i}]) * (ms[{i}] - cs[{i}]))"
     for i in range(_PQ_SUBDIM)
 )
-_PQI_DIST_DUCK = (
-    f"list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}),"
-    " i -> (ms[i] - cs[i]) * (ms[i] - cs[i])))"
-)
 
-
-def _pq_fit_cte() -> str:
-    """Unrolled FITTED product-quantizer as DuckDB CTE text: per
-    subspace, {_PQ_K} centroids fit with {_IVF_ROUNDS} integer
-    fixed-point Lloyd rounds (md5-ranked per-subspace seeds), ending
-    in `codes` (every vector's per-subspace code) and `adc` (each
-    query's integer distance table to every fitted centroid). All
-    distances live on the 1e6 fixed-point grid, so assignment,
-    ADC sums, and ties are exact bigints in both engines."""
-    parts = [
-        f"""
-    sub AS (
-        SELECT vec_id, CAST(s AS INT) AS s,
-               m[s * {_PQ_SUBDIM} + 1 : s * {_PQ_SUBDIM} + {_PQ_SUBDIM}] AS ms
-        FROM vq, range({_PQ_SUBS}) r(s)
-    ),
-    pcent0 AS (
-        SELECT s, CAST(ROW_NUMBER() OVER (
-                   PARTITION BY s
-                   ORDER BY md5('pq#' || CAST(s AS VARCHAR) || '#'
-                                      || CAST(vec_id AS VARCHAR)), vec_id
-               ) - 1 AS INT) AS code,
-               ms AS cs
-        FROM sub QUALIFY ROW_NUMBER() OVER (
-                   PARTITION BY s
-                   ORDER BY md5('pq#' || CAST(s AS VARCHAR) || '#'
-                                      || CAST(vec_id AS VARCHAR)), vec_id
-               ) <= {_PQ_K}
-    )"""
-    ]
-    for r in range(1, _IVF_ROUNDS + 1):
-        parts.append(f"""
-    pasg{r} AS (
-        SELECT vec_id, s, ms, code
-        FROM sub JOIN pcent{r - 1} USING (s)
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                   ORDER BY {_PQI_DIST_DUCK}, code) = 1
-    ),
-    pstats{r} AS (
-        SELECT s, code, i,
-               (2 * SUM(ms[i]) + COUNT(*)) // (2 * COUNT(*)) AS cv
-        FROM pasg{r}, range(1, {_PQ_SUBDIM + 1}) r(i)
-        GROUP BY s, code, i
-    ),
-    pnewc{r} AS (
-        SELECT s, code, list(cv ORDER BY i) AS cs
-        FROM pstats{r} GROUP BY s, code
-    ),
-    pcent{r} AS (
-        SELECT p.s, p.code, COALESCE(n.cs, p.cs) AS cs
-        FROM pcent{r - 1} p
-        LEFT JOIN pnewc{r} n ON n.s = p.s AND n.code = p.code
-    )""")
-    parts.append(f"""
-    codes AS (
-        SELECT vec_id, s, code
-        FROM sub JOIN pcent{_IVF_ROUNDS} USING (s)
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                   ORDER BY {_PQI_DIST_DUCK}, code) = 1
-    ),
-    adc AS (
-        SELECT vec_id AS qid, s, code, {_PQI_DIST_DUCK} AS d
-        FROM sub JOIN pcent{_IVF_ROUNDS} USING (s)
-        WHERE vec_id < 10
-    )""")
-    return ",".join(parts)
 
 def _ivf_pq_fit(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
-    """Fit the coarse quantizer and PQ codebook:
-    _IVF_ROUNDS integer fixed-point Lloyd rounds each (the q_kmeans
-    protocol, llm/cluster.py) from md5-ranked seed samples. Returns
+    """Fit the coarse quantizer and PQ codebook with `lloyd`,
+    _IVF_ROUNDS rounds each from md5-ranked seeds. Returns
     (cent_rows, pcent_rows): [(c_id, cm)], [(s, code, cs)] on the 1e6
     integer grid — every intermediate is an identical bigint in both
     engines."""
-    from flink_rc_spark.llm.cluster import (
-        _QUANT_SPARK,
-        _assign,
-        _recenter,
-    )
+    from flink_rc_spark.llm.cluster import _QUANT_SPARK, lloyd
 
-    # coarse quantizer: md5-ranked sample seeds (limit-first
-    # TakeOrdered pulls the _IVF_K rows; the cell-id ranking window
-    # then runs over only those K rows), then _IVF_ROUNDS rounds —
-    # scanned-once vec is checkpointed and probed every round, the
-    # k-row centroid table broadcasts
     vec = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_QUANT_SPARK).alias("m")
-    ).transform(checkpoint, eager=True)
+    ).transform(checkpoint, eager=True)  # scanned once, read every round
+    # limit-first TakeOrdered pulls the _IVF_K seed rows; the cell-id
+    # ranking window then runs over only those rows
     smp = F.md5(F.concat(F.lit("ivf#"), F.col("vec_id").cast("string")))
-    w_seed = Window.orderBy(smp, "vec_id")
-    cent = (
+    seeds = (
         vec.orderBy(smp, "vec_id")
         .limit(_IVF_K)
-        .withColumn("rnk", F.row_number().over(w_seed))
         .select(
-            (F.col("rnk") - 1).cast("bigint").alias("c_id"),
+            (F.row_number().over(Window.orderBy(smp, "vec_id")) - 1)
+            .cast("bigint")
+            .alias("c_id"),
             F.col("m").alias("cm"),
         )
     )
-    for _ in range(_IVF_ROUNDS):
-        asg = _assign(vec, cent)
-        cent = _recenter(asg, cent).transform(checkpoint, eager=True)
-
-    # product quantizer: per-subspace integer fixed-point Lloyd (same
-    # rounds / seeding style as the coarse fit)
     sub = vec.crossJoin(
         F.broadcast(
             spark.range(_PQ_SUBS).select(F.col("id").cast("int").alias("s"))
@@ -1096,8 +875,8 @@ def _ivf_pq_fit(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     ).select(
         "vec_id",
         "s",
-        F.expr(f"slice(m, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})").alias("ms"),
-    ).transform(checkpoint, eager=True)  # probed every fit round
+        F.expr(f"slice(m, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM})").alias("m"),
+    )
     pseed = F.md5(
         F.concat(
             F.lit("pq#"),
@@ -1106,49 +885,19 @@ def _ivf_pq_fit(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
             F.col("vec_id").cast("string"),
         )
     )
-    w_pseed = Window.partitionBy("s").orderBy(pseed, "vec_id")
-    pcent = (
-        sub.withColumn("rnk", F.row_number().over(w_pseed))
+    pseeds = (
+        sub.withColumn(
+            "rnk",
+            F.row_number().over(Window.partitionBy("s").orderBy(pseed, "vec_id")),
+        )
         .filter(F.col("rnk") <= _PQ_K)
-        .select(
-            "s",
-            (F.col("rnk") - 1).cast("int").alias("code"),
-            F.col("ms").alias("cs"),
-        )
+        .select("s", (F.col("rnk") - 1).cast("bigint").alias("c_id"),
+                F.col("m").alias("cm"))
     )
-    w_pasg = Window.partitionBy("vec_id", "s").orderBy("d", "code")
-    for _ in range(_IVF_ROUNDS):
-        pasg = (
-            sub.join(F.broadcast(pcent), "s")
-            .withColumn("d", F.expr(_PQI_DIST_SPARK))
-            .withColumn("rn", F.row_number().over(w_pasg))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "s", "ms", "code")
-        )
-        pstats = pasg.select(
-            "s", "code", F.posexplode("ms").alias("i", "ve")
-        ).groupBy("s", "code", "i").agg(
-            F.expr("(2 * SUM(ve) + COUNT(*)) DIV (2 * COUNT(*))").alias("cv")
-        )
-        pnewc = pstats.groupBy("s", "code").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("i", "cv"))),
-                lambda x: x["cv"],
-            ).alias("cs_new")
-        )
-        pcent = (
-            pcent.join(pnewc, ["s", "code"], "left")
-            .select("s", "code", F.coalesce("cs_new", "cs").alias("cs"))
-            .transform(checkpoint, eager=True)
-        )
-    cent_rows = [
-        (int(r["c_id"]), [int(x) for x in r["cm"]]) for r in cent.collect()
-    ]
-    pcent_rows = [
-        (int(r["s"]), int(r["code"]), [int(x) for x in r["cs"]])
-        for r in pcent.collect()
-    ]
-    return cent_rows, pcent_rows
+    return (
+        lloyd(vec, seeds, _IVF_ROUNDS),
+        lloyd(sub, pseeds, _IVF_ROUNDS, by=("s",)),
+    )
 
 
 # full-vector squared L2 between aliased columns e and ce, as the
@@ -1177,14 +926,11 @@ _L2_FULL_DUCK = (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         FROM embeddings
     ),
-    -- FITTED coarse quantizer: {_IVF_K} centroids, {_IVF_ROUNDS}
-    -- integer fixed-point Lloyd rounds from an md5-ranked seed sample
-    -- (the q_kmeans protocol), ending in home + probes cells
-    {_ivf_coarse_cte()},
-    -- FITTED product quantizer: {_PQ_K} centroids x {_PQ_SUBS}
-    -- subspaces, {_IVF_ROUNDS} integer fixed-point Lloyd rounds on
-    -- the 1e6 grid, ending in codes + the per-query integer ADC table
-    {_pq_fit_cte()},
+    -- FITTED coarse quantizer ({_IVF_K} cells) and product quantizer
+    -- ({_PQ_K} centroids x {_PQ_SUBS} subspaces): {_IVF_ROUNDS} integer
+    -- fixed-point Lloyd rounds each (the q_kmeans protocol), ending in
+    -- home + probes cells, codes + the per-query integer ADC table
+    {_ivf_pq_fit_cte()},
     -- candidates: vectors homed in a probed cell (self excluded),
     -- scored by the sum of per-subspace ADC lookups over the
     -- candidate's codes — exact bigint sums, no fold policy needed

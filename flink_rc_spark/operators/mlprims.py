@@ -10,7 +10,9 @@ q_ks_test statistics family.
 
 Float policy:
 - The stump's Gini cost compares EXACT rationals floor-quantized at
-  1e9 in DECIMAL(38,0) (the q_chi2_test idiom) — no float impurity.
+  1e9 in DECIMAL(38,0) (the q_chi2_test idiom; HUGEINT in the oracle,
+  whose BIGINT numerator times 1e9 overflows at sf0.1) — no float
+  impurity.
 - Target encoding multiplies the global prior through, so the LOO
   encoding is a single exact rational, floor-quantized micro.
 - Naive Bayes / WoE need ln: each log is rounded to 6 dp and the
@@ -57,11 +59,12 @@ from flink_rc_spark.sources.tables import load
         ), split AS (
             SELECT f AS threshold, n_l, n_t - n_l AS n_r,
                    pos_l, pos_t - pos_l AS pos_r,
-                   ((n_l * n_l - pos_l * pos_l - (n_l - pos_l) * (n_l - pos_l))
+                   ((CAST(n_l AS HUGEINT) * n_l - CAST(pos_l AS HUGEINT) * pos_l
+                     - CAST(n_l - pos_l AS HUGEINT) * (n_l - pos_l))
                       * (n_t - n_l)
-                    + ((n_t - n_l) * (n_t - n_l)
-                       - (pos_t - pos_l) * (pos_t - pos_l)
-                       - ((n_t - n_l) - (pos_t - pos_l))
+                    + (CAST(n_t - n_l AS HUGEINT) * (n_t - n_l)
+                       - CAST(pos_t - pos_l AS HUGEINT) * (pos_t - pos_l)
+                       - CAST((n_t - n_l) - (pos_t - pos_l) AS HUGEINT)
                          * ((n_t - n_l) - (pos_t - pos_l)))
                       * n_l) * 1000000000
                    // (n_l * (n_t - n_l)) AS cost_e9
@@ -150,7 +153,6 @@ def q_decision_stump(spark, sf_dir):
 
 
 _NB_VOCAB = 100
-_NB_LANGS = ("de", "en", "es", "fr", "zh")
 
 
 @register(

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import md5_int
+from flink_rc_spark.functions.exact import DOC_KEY, md5_int
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources import load
 
@@ -136,7 +136,6 @@ def q_zorder_layout(spark, sf_dir):
 _COMPACT_TARGET = 2_000  # target bin size (chars of text per output file; sized to the synthetic corpus so the packing is non-degenerate at every SF)
 
 # a document's file shard: the first 4 md5 hex digits of doc_id, mod 64
-_SHARD_KEY = "CAST(doc_id AS STRING)"
 
 
 @register(
@@ -144,7 +143,7 @@ _SHARD_KEY = "CAST(doc_id AS STRING)"
     oracle=f"""
         WITH files AS (
             SELECT source,
-                   {md5_int(_SHARD_KEY, 1, 4, duck=True)} % 64 AS shard,
+                   {md5_int(DOC_KEY, 1, 4, duck=True)} % 64 AS shard,
                    CAST(SUM(n_chars) AS BIGINT) AS bytes
             FROM documents
             GROUP BY source, shard
@@ -193,7 +192,7 @@ def q_compaction_plan(spark, sf_dir):
     files = (
         docs.select(
             "source",
-            F.expr(f"{md5_int(_SHARD_KEY, 1, 4)} % 64").alias("shard"),
+            F.expr(f"{md5_int(DOC_KEY, 1, 4)} % 64").alias("shard"),
             "n_chars",
         )
         .groupBy("source", "shard")

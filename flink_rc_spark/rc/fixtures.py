@@ -1,7 +1,7 @@
 """Deterministic RC time-series fixtures (FIXTURES.md §B).
 
 Shape-compatible synthetics modeled on the reference's thesis datasets
-(Mackey-Glass chaotic series, a glaciers-style annual series, sine) —
+(Mackey-Glass chaotic series, sine) —
 generated by our own code, seed-pinned, never written into
 /root/testdata.
 """
@@ -27,13 +27,6 @@ def mackey_glass(n: int = 10000, tau: int = 17, warmup: int = 1000) -> np.ndarra
 def sine_noise(n: int = 2000, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return np.sin(0.1 * np.arange(n)) + rng.normal(0.0, 0.01, size=n)
-
-
-def annual_series(seed: int = 42) -> np.ndarray:
-    years = np.arange(1946, 2015)
-    rng = np.random.default_rng(seed)
-    t = years - 1946
-    return -0.4 * t + 3.0 * np.sin(0.3 * t) + rng.normal(0.0, 1.0, size=len(t))
 
 
 def series_df(

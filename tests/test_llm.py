@@ -152,19 +152,6 @@ def test_ann_banded_recall_and_pruning(spark, sf_dir):
     assert c_tight < 0.10 * n * (n - 1) / 2
 
 
-def test_ivf_recall_and_multiprobe_monotone(spark, sf_dir):
-    """IVF (k-means coarse quantizer, sample-fit, deterministic seed):
-    multi-probe recovers boundary pairs — measured 2026-08-13:
-    recall@50 = 0.38/0.76/0.98 at n_probe 1/2/4 (k=16, both sf0.001
-    and sf0.01)."""
-    from flink_rc_spark.llm.similarity import ivf_recall
-
-    r1 = ivf_recall(spark, sf_dir, k=50, n_clusters=16, n_probe=1)
-    r4 = ivf_recall(spark, sf_dir, k=50, n_clusters=16, n_probe=4)
-    assert r4 >= 0.9, f"IVF probe-4 recall too low: {r4}"
-    assert r1 <= r4, (r1, r4)
-
-
 def test_dedup_embedding_full_exact_verify_and_bounds(spark, sf_dir):
     """q_dedup_embedding_full is exact-oracled; this adds the
     numpy-independent bounds a hash can't express for the r7 bounded

@@ -130,3 +130,36 @@ def test_fixedwidth_roundtrip(spark, sf_dir):
         )
     )
     assert j.count() == 0
+
+
+def test_stump_oracle_exact_at_sf01(sf_dir):
+    """The oracle's Gini numerator times 1e9 passes BIGINT once the
+    corpus reaches sf0.1 (9289161420 * 1e9); it must stay exact there,
+    so it is checked against the Python integer reference on the
+    sf0.1 documents (DuckDB only — tier-1 parity runs at sf0.001)."""
+    import os
+
+    from tests.parity import duck_connect
+
+    con = duck_connect(os.path.join(os.path.dirname(sf_dir), "sf0.1"))
+    try:
+        got = con.execute(REGISTRY["q_decision_stump"].oracle).fetchall()
+        th = con.execute(
+            "SELECT n_chars, CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)"
+            " AS BIGINT), COUNT(*) FROM documents GROUP BY n_chars ORDER BY 1"
+        ).fetchall()
+    finally:
+        con.close()
+    pos_t, n_t = sum(p for _, p, _ in th), sum(c for _, _, c in th)
+    ref, pl, nl = [], 0, 0
+    for f, p, c in th:
+        pl, nl = pl + p, nl + c
+        nr, pr = n_t - nl, pos_t - pl
+        if nl and nr:
+            a_l = nl * nl - pl * pl - (nl - pl) ** 2
+            a_r = nr * nr - pr * pr - (nr - pr) ** 2
+            ref.append(((a_l * nr + a_r * nl) * 10**9 // (nl * nr), f, nl, nr, pl, pr))
+    ref.sort()
+    assert [(r[1], r[2], r[3], r[4], r[5], r[0]) for r in ref[:5]] == [
+        tuple(r) for r in got
+    ]

@@ -112,7 +112,7 @@ def test_silhouette_matches_python_fold(spark, sf_dir):
     rows = REGISTRY["q_silhouette"].builder(spark, sf_dir).collect()
     vec, cent, _ = kmeans_rounds(spark, sf_dir)
     vecs = {r.vec_id: np.array(r.m, dtype=object) for r in vec.collect()}
-    cents = {r.c_id: np.array(r.cm, dtype=object) for r in cent.collect()}
+    cents = {cid: np.array(cm, dtype=object) for cid, cm in cent}
     agg = {}
     for vid, m in vecs.items():
         ds = sorted(

@@ -4,8 +4,8 @@ a larger corpus (sf1's decorrelated vectors), recorded in BASELINE.md.
 
     python tools/ann_recall_audit.py [sf_dir]     # default .localdata/sf1
 
-Prints ONE JSON line: banded-LSH recall@50 at (4,16) and (8,16), IVF
-recall@50 at n_probe 1/2/4, composed IVF-PQ end recall@5, and the
+Prints ONE JSON line: banded-LSH recall@50 at (4,16) and (8,16), the
+composed IVF-PQ end recall@5 (q_ivf_pq_search), and the
 Matryoshka funnel recall@5 — each vs exact brute force (the O(n^2)
 ground truth runs here only; it is the measurement harness, not a
 shipped plan).
@@ -110,22 +110,19 @@ def main() -> None:
     )
     load_all()
     spark = get_spark(app="ann_recall_audit")
-    from flink_rc_spark.llm.similarity import ann_recall, ivf_recall
+    from flink_rc_spark.llm.similarity import ann_recall
 
     t0 = time.time()
     emb = _embeddings(spark, sf_dir)
     from flink_rc_spark.llm.similarity import brute_topk
 
-    # ONE brute ground-truth pass (O(n^2)) shared by all five configs
+    # ONE brute ground-truth pass (O(n^2)) shared by both LSH configs
     gt = {(r.vec_a, r.vec_b) for r in brute_topk(spark, sf_dir, 50).collect()}
     out = {
         "sf_dir": sf_dir,
         "n_vectors": len(emb),
         "ann_recall50_p4b16": round(ann_recall(spark, sf_dir, 50, 4, 16, gt=gt), 4),
         "ann_recall50_p8b16": round(ann_recall(spark, sf_dir, 50, 8, 16, gt=gt), 4),
-        "ivf_recall50_probe1": round(ivf_recall(spark, sf_dir, 50, 16, 1, gt=gt), 4),
-        "ivf_recall50_probe2": round(ivf_recall(spark, sf_dir, 50, 16, 2, gt=gt), 4),
-        "ivf_recall50_probe4": round(ivf_recall(spark, sf_dir, 50, 16, 4, gt=gt), 4),
         "ivf_pq_recall5": round(ivf_pq_recall5(spark, sf_dir, emb), 4),
         "matryoshka_recall5": round(matryoshka_recall5(spark, sf_dir, emb), 4),
         "semantic_block_recall": semantic_block_recall(emb),
