@@ -32,6 +32,7 @@ Two more values are spelled here once, for both engines:
   once, in the subset both engines parse:
   ``'u' || CAST(user_id AS STRING)`` (``||``, not ``concat``: on a
   NULL argument Spark's ``concat`` returns NULL, DuckDB's skips it).
+  The document key is ``DOC_KEY``; the vector seed keys are ``seed_key``.
 """
 
 from __future__ import annotations
@@ -71,6 +72,16 @@ def md5_int(key_sql: str, start: int | str, n: int, *, duck: bool = False) -> st
 # The document key every md5-derived document integer hashes (split
 # byte, file shard, 40-bit hv), spelled in the subset both engines parse.
 DOC_KEY = "CAST(doc_id AS STRING)"
+
+
+def seed_key(tag: str = "", by: str = "") -> str:
+    """The key a vector's md5 seed rank hashes, in the subset both
+    engines parse: ``'<tag>#'``, then ``<by>`` and ``'#'`` when given,
+    then the vec_id. Every md5-ranked sample of vectors (the IVF, PQ,
+    RVQ, MaxSim and coreset seeds) orders by md5(seed_key(...)), vec_id."""
+    head = f"'{tag}#' || " if tag else ""
+    mid = f"CAST({by} AS STRING) || '#' || " if by else ""
+    return f"{head}{mid}CAST(vec_id AS STRING)"
 
 
 def doc_hv(*, duck: bool = False) -> str:

@@ -17,12 +17,13 @@ protocol, so no other module writes a round body.
 INTEGER FIXED-POINT protocol (what makes an iterative float algorithm
 hash-verifiable against an independent engine): embeddings live in
 (−0.5, 0.5), so m_i = round((x_i + 2)·10⁶) maps every coordinate to a
-POSITIVE bigint exactly reproducible in both engines (the double
-(x+2)·10⁶ is the same IEEE value bit-for-bit from the same float32
-input). Distances are exact integer sums of squares (≤ 64·10¹² —
-well inside bigint), argmin ties break on centroid id, an empty
-cluster keeps its centroid, and the re-centered mean is quantized
-back to the integer grid with round-half-up spelled as
+POSITIVE bigint exactly reproducible in both engines
+(`functions/vectors.py::on_grid(2)`; the double (x+2)·10⁶ is the same
+IEEE value bit-for-bit from the same float32 input). Distances are
+exact integer sums of squares (≤ 64·10¹² — well inside bigint),
+argmin ties break on centroid id, an empty cluster keeps its
+centroid, and the re-centered mean is quantized back to the integer
+grid with round-half-up spelled as
 (2·Σ + n) DIV (2n) — positive operands, so Spark's truncating DIV and
 DuckDB's flooring // agree. After the quantization, EVERY
 intermediate in both engines is an identical integer, so three rounds
@@ -46,47 +47,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_rc_spark.functions.vectors import DIM, on_grid, sq_dist
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
 
 K = 8
 ROUNDS = 3  # assignment rounds; centroids update between them
-DIM = 64
-
-_QUANT_SPARK = (
-    "transform(embedding, x -> CAST(ROUND((CAST(x AS DOUBLE) + 2.0D) * 1000000)"
-    " AS BIGINT))"
-)
-_QUANT_DUCK = (
-    "list_transform(embedding, x -> CAST(ROUND((CAST(x AS DOUBLE) + 2.0)"
-    " * 1000000) AS BIGINT))"
-)
-
-_DIST_SPARK = (
-    "aggregate(zip_with(m, cm, (a, b) -> (a - b) * (a - b)),"
-    " 0L, (acc, x) -> acc + x)"
-)
-# A HOF fold, not 64 flat squared-difference terms (int64 addition is
-# exact, so values would be bit-identical): the r10 claim that the flat
-# form beat the HOF on the fit was a count()-probe artifact. The flat
-# tree measured EQUAL on the sf1 fit (10.5 vs 10.3 s) and 1.5-5x
-# SLOWER everywhere else in the r11 noop-sink A/Bs (q_kmeans 3.1 vs
-# 2.0 s sf0.1, q_sample_coreset 5.4 vs 3.8, q_ivf_pq_search 3.4 vs
-# 2.3, semdedup pairs 18 vs 3.3 s at sf1): a 64-term tree blows the whole-stage-codegen budget of its
-# enclosing stage, and an INTERPRETED flat tree (per-node dispatch) is
-# slower than the interpreted HOF fold. 16-term trees (PQ subdims,
-# matryoshka prefix) stay under the budget and DO win — see
-# similarity.py.
-
-
-def dist_duck(dim: int = DIM) -> str:
-    """DuckDB: exact squared distance between the bigint lists ``m``
-    and ``cm`` of length ``dim``."""
-    return (
-        f"list_sum(list_transform(range(1, {dim + 1}),"
-        " i -> (m[i] - cm[i]) * (m[i] - cm[i])))"
-    )
 
 
 def lloyd_cte(
@@ -123,7 +90,8 @@ def lloyd_cte(
         ctes.append(f"""
     {asg} AS (
         SELECT * FROM (
-            SELECT vec_id, {grp}m, c_id, {dist_duck(dim)} AS dist
+            SELECT vec_id, {grp}m, c_id,
+                   {sq_dist('m', 'cm', dim, grid=True, duck=True)} AS dist
             FROM {points} {join}
         ) QUALIFY ROW_NUMBER() OVER (PARTITION BY {grp}vec_id
                                      ORDER BY dist, c_id) = 1
@@ -186,10 +154,9 @@ def _assign(
     Why not pure SQL: the k x dim per-row argmin is the one kernel
     the built-in surface cannot express efficiently — the broadcast
     crossJoin + HOF fold evaluates interpreted (~47 ns/element,
-    3.9 s per round over 20k x 64 at sf1) and the 64-term flat unroll
-    interprets even slower once it blows the stage's codegen budget
-    (BASELINE.md r11). One vectorized matmul per Arrow batch is the
-    shape Spark MLlib itself uses for k-means assignment."""
+    3.9 s per round over 20k x 64 at sf1), and a flat unroll is slower
+    still (functions/vectors.py). One vectorized matmul per Arrow batch
+    is the shape Spark MLlib itself uses for k-means assignment."""
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -259,7 +226,7 @@ def lloyd(
 
 def _duck_oracle() -> str:
     return f"""WITH
-    vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    vec AS (SELECT vec_id, {on_grid(2, duck=True)} AS m FROM embeddings),
     {lloyd_cte('k', 'vec', 'vec_id', K, ROUNDS - 1, DIM)}
     SELECT c_id,
            CAST(COUNT(*) AS BIGINT) AS n_members,
@@ -280,7 +247,7 @@ def kmeans_rounds(
     per-vector distances to EVERY final centroid, not just the
     argmin). ``k=None`` keeps the fixed k={K}."""
     emb = load(spark, sf_dir, "embeddings")
-    vec = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m")).transform(
+    vec = emb.select("vec_id", F.expr(on_grid(2)).alias("m")).transform(
         checkpoint, eager=True
     )  # scanned once, probed every round
     seeds = (
@@ -378,7 +345,9 @@ def _pca_rounds_cte() -> str:
 @register(
     "q_embed_pca",
     oracle=f"""
-    WITH vec AS MATERIALIZED (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    WITH vec AS MATERIALIZED (
+        SELECT vec_id, {on_grid(2, duck=True)} AS m FROM embeddings
+    ),
     nn AS (SELECT COUNT(*) AS n FROM vec),
     sums AS (SELECT r.i AS i, CAST(SUM(m[r.i]) AS BIGINT) AS s
              FROM vec CROSS JOIN range(1, {DIM + 1}) r(i) GROUP BY r.i),
@@ -447,7 +416,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     eigenvalue).
     """
     emb = load(spark, sf_dir, "embeddings")
-    vec = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m"))
+    vec = emb.select("vec_id", F.expr(on_grid(2)).alias("m"))
     exploded = vec.select("vec_id", F.posexplode("m").alias("i0", "md"))
     mu_arr = (
         exploded.groupBy("i0")
@@ -496,7 +465,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_embed_drift",
     oracle=f"""
     WITH vec AS MATERIALIZED (
-        SELECT vec_id % 2 AS half, {_QUANT_DUCK} AS m FROM embeddings
+        SELECT vec_id % 2 AS half, {on_grid(2, duck=True)} AS m FROM embeddings
     ),
     dims AS (
         SELECT half, r.i AS dim,
@@ -551,7 +520,7 @@ def q_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = (
         emb.select(
             (F.col("vec_id") % 2).alias("half"),
-            F.posexplode(F.expr(_QUANT_SPARK)).alias("i0", "q"),
+            F.posexplode(F.expr(on_grid(2))).alias("i0", "q"),
         )
         .groupBy("half", (F.col("i0") + 1).alias("dim"))
         .agg(
@@ -620,10 +589,10 @@ _SIL_MICRO = """
 
 def _silhouette_oracle() -> str:
     return f"""WITH
-    vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    vec AS (SELECT vec_id, {on_grid(2, duck=True)} AS m FROM embeddings),
     {lloyd_cte('k', 'vec', 'vec_id', K, ROUNDS - 1, DIM)},
     alld AS (
-        SELECT vec_id, c_id, {dist_duck()} AS dist
+        SELECT vec_id, c_id, {sq_dist('m', 'cm', grid=True, duck=True)} AS dist
         FROM vec CROSS JOIN kcent{ROUNDS - 1}
     ),
     ranked AS (

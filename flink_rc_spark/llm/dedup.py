@@ -12,8 +12,8 @@ DuckDB oracles (value-hash matchable):
 Cross-engine determinism: every hash is md5 (identical hex in Spark and
 DuckDB); every signature is built from md5 output with integer
 arithmetic; float folds (cosine) run in identical sequential order on
-both sides (Spark `aggregate` left-fold == DuckDB `list_reduce`), so
-doubles match bit-for-bit and ROUND(x, 4) is stable.
+both sides (functions/vectors.py), so doubles match bit-for-bit and
+ROUND(x, 4) is stable.
 
 Scale design (100 TB): exact dedup is one hash-aggregate (map-side
 partial → tiny shuffle of 16-byte keys). MinHash banding is THE scale
@@ -34,9 +34,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_rc_spark.functions.exact import hex_int
-# HOF dot and norm everywhere: 64-term flat trees lose at every probed shape
-# (similarity.py kernel note, r11 A/B)
-from flink_rc_spark.llm.similarity import _DOT_SPARK, _LSH_BIT_DUCK, _NORM_SPARK
+from flink_rc_spark.functions.vectors import (
+    cosine,
+    on_grid,
+    plane_bit,
+    vectors,
+    vectors_cte,
+)
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -538,21 +542,12 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_embedding",
-    oracle="""
-    WITH v AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-               FROM embeddings WHERE vec_id < 200),
-    n AS (SELECT vec_id, e,
-                 sqrt(list_reduce(list_transform(e, x -> x*x),
-                      (acc, x) -> acc + x)) AS nrm
-          FROM v)
+    oracle=f"""
+    WITH {vectors_cte(where="vec_id < 200")}
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           ROUND(list_reduce(list_transform(range(1, 65),
-                   i -> a.e[i] * b.e[i]), (acc, x) -> acc + x)
-                 / (a.nrm * b.nrm), 4) AS cosine
+           ROUND({cosine(duck=True)}, 4) AS cosine
     FROM n a JOIN n b ON a.vec_id < b.vec_id
-    WHERE list_reduce(list_transform(range(1, 65), i -> a.e[i] * b.e[i]),
-                      (acc, x) -> acc + x) / (a.nrm * b.nrm) >= 0.35
+    WHERE {cosine(duck=True)} >= 0.35
     ORDER BY vec_a, vec_b
     """,
     tags=("llm", "dedup"),
@@ -562,29 +557,20 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     block).
 
     Floats are cast to double, then dot products and norms fold
-    sequentially in index order — Spark's `aggregate` and DuckDB's
-    `list_reduce` produce bit-identical doubles, so the rounded value
-    hashes match. Scale: brute-force pairwise is the *verify* stage;
+    sequentially in index order (functions/vectors.py), so both
+    engines produce bit-identical doubles and the rounded value hashes
+    match. Scale: brute-force pairwise is the *verify* stage;
     the candidate stage at 100 TB is q_sim_ann_lsh's hyperplane
     bucketing (same cosine expression, bucket-scoped join).
     """
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.filter(F.col("vec_id") < 200).select(
-        "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e")
-    )
-    n = v.withColumn(
-        "nrm",
-        F.expr(_NORM_SPARK),
-    )
+    n = vectors(spark, sf_dir).filter(F.col("vec_id") < 200)
     a = n.select(
         F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"), F.col("nrm").alias("na")
     )
     b = n.select(
         F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
     )
-    # small fixed block (vec_id < 200): HOF kernel — the r10 unroll
-    # regressed this key 0.79 -> 2.20 s at sf0.1 (plan-build cost)
-    cos = F.expr(_DOT_SPARK) / (F.col("na") * F.col("nb"))
+    cos = F.expr(cosine())
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .filter(cos >= 0.35)
@@ -946,13 +932,11 @@ def semantic_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         PAIRS_SCHEMA,
         make_group_pair_kernel,
     )
-    from flink_rc_spark.llm.similarity import _lsh_bit_spark, _vectors
-
     # planning-time scalar (one count, not a data pass per row)
     planes = _semantic_planes(load(spark, sf_dir, "embeddings").count())
-    n = _vectors(spark, sf_dir)
+    n = vectors(spark, sf_dir)
     bucket_expr = " + ".join(
-        f"({_lsh_bit_spark(j)}) * {2 ** j}" for j in range(planes)
+        f"({plane_bit(j)}) * {2 ** j}" for j in range(planes)
     )
     h = n.withColumn("bucket", F.expr(bucket_expr).cast("bigint"))
     return (
@@ -968,25 +952,16 @@ def semantic_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_dedup_semantic",
     oracle=f"""
-    WITH v AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-               FROM embeddings),
+    WITH {vectors_cte()},
     np AS (SELECT {_SEMANTIC_PLANES_SQL} AS p FROM embeddings),
-    n AS (SELECT vec_id, e,
-                 sqrt(list_reduce(list_transform(e, x -> x*x),
-                                  (acc, x) -> acc + x)) AS nrm
-          FROM v),
     h AS (SELECT vec_id, e, nrm,
                  CAST(list_sum(list_transform(range(0, (SELECT p FROM np)), j ->
-                      ({_LSH_BIT_DUCK})
+                      ({plane_bit('j', duck=True)})
                       * CAST(power(2, j) AS BIGINT)))
                       AS BIGINT) AS bucket
           FROM n),
     cand AS (
-        SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-               list_reduce(list_transform(range(1, 65),
-                           i -> a.e[i] * b.e[i]), (acc, x) -> acc + x)
-                   / (a.nrm * b.nrm) AS cos
+        SELECT a.vec_id AS doc_a, b.vec_id AS doc_b, {cosine(duck=True)} AS cos
         FROM h a JOIN h b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     ),
     close AS (SELECT doc_a, doc_b, cos FROM cand WHERE cos >= 0.30),
@@ -1503,28 +1478,18 @@ def _semdedup_k(n: int) -> int:
 
 
 def _semdedup_oracle() -> str:
-    from flink_rc_spark.llm.cluster import DIM, ROUNDS, _QUANT_DUCK, lloyd_cte
+    from flink_rc_spark.llm.cluster import DIM, ROUNDS, lloyd_cte
 
     k_sql = f"(SELECT {_SEMDEDUP_K_SQL} FROM embeddings)"
-    dot = (
-        "list_reduce(list_transform(range(1, 65), i -> a.e[i] * b.e[i]),"
-        " (acc, x) -> acc + x)"
-    )
     return f"""
-    WITH vec AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+    WITH vec AS (SELECT vec_id, {on_grid(2, duck=True)} AS m FROM embeddings),
     {lloyd_cte('k', 'vec', 'vec_id', k_sql, ROUNDS - 1, DIM)},
-    v AS (SELECT vec_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings),
-    nv AS (SELECT vec_id, e,
-                  sqrt(list_reduce(list_transform(e, x -> x*x),
-                       (acc, x) -> acc + x)) AS nrm
-           FROM v),
+    {vectors_cte("nv")},
     mem AS (SELECT asg.vec_id, asg.c_id, n.e, n.nrm
             FROM kasg asg JOIN nv n USING (vec_id)),
     pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               {dot} / (a.nrm * b.nrm) AS cosv
+               {cosine(duck=True)} AS cosv
         FROM mem a JOIN mem b
           ON a.c_id = b.c_id AND a.vec_id < b.vec_id
     ),
@@ -1583,15 +1548,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = load(spark, sf_dir, "embeddings").count()  # planning-time scalar
     asg = kmeans_assign(spark, sf_dir, k=_semdedup_k(n)).select("vec_id", "c_id")
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    nv = emb.withColumn(
-        "nrm",
-        F.expr(_NORM_SPARK),
-    )
-    mem = asg.join(nv, "vec_id")
+    mem = asg.join(vectors(spark, sf_dir).select("vec_id", "e", "nrm"), "vec_id")
 
     # In-cluster nearest-smaller-id neighbor via the shared
     # Arrow-vectorized kernel (llm/pairkern.py, first_neighbor mode):

@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import doc_hv, md5_int
+from flink_rc_spark.functions.exact import doc_hv, md5_int, seed_key
+from flink_rc_spark.functions.vectors import on_grid, sq_dist
 from flink_rc_spark.plans.inspect import checkpoint
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -332,21 +333,15 @@ def _fps_oracle() -> str:
     integer-grid vectors (the q_kmeans quantization), md5-ranked seed,
     then k−1 rounds of argmax-of-min-distance with vec_id tie-break,
     ending with the k-center coverage radius of the chosen set."""
-    from flink_rc_spark.llm.cluster import _QUANT_DUCK
-
-    dist = (
-        "list_sum(list_transform(range(1, 65),"
-        " i -> (v.m[i] - c.m[i]) * (v.m[i] - c.m[i])))"
-    )
+    dist = sq_dist("v.m", "c.m", grid=True, duck=True)
     parts = [
         f"""
-        vq AS (SELECT vec_id, {_QUANT_DUCK} AS m FROM embeddings),
+        vq AS (SELECT vec_id, {on_grid(2, duck=True)} AS m FROM embeddings),
         ch0 AS (
             SELECT vec_id, m, 0 AS sel_rank, CAST(NULL AS BIGINT) AS dist_at_pick
             FROM (SELECT vec_id, m,
                          ROW_NUMBER() OVER (
-                             ORDER BY md5('fps#' || CAST(vec_id AS VARCHAR)),
-                                      vec_id) AS rn
+                             ORDER BY md5({seed_key('fps')}), vec_id) AS rn
                   FROM vq) WHERE rn = 1
         )"""
     ]
@@ -421,22 +416,17 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from flink_rc_spark.llm.cluster import _QUANT_SPARK, sq_dist_kernel
+    from flink_rc_spark.llm.cluster import sq_dist_kernel
 
     emb = load(spark, sf_dir, "embeddings")
-    vq = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m")).transform(
+    vq = emb.select("vec_id", F.expr(on_grid(2)).alias("m")).transform(
         checkpoint, eager=True
     )  # scanned once, probed every round
     seed = (
         vq.withColumn(
             "rn",
             F.row_number().over(
-                Window.orderBy(
-                    F.md5(
-                        F.concat(F.lit("fps#"), F.col("vec_id").cast("string"))
-                    ),
-                    "vec_id",
-                )
+                Window.orderBy(F.expr(f"md5({seed_key('fps')})"), "vec_id")
             ),
         )
         .filter(F.col("rn") == 1)

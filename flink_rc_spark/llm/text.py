@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_rc_spark.functions.exact import md5_int
+from flink_rc_spark.functions.vectors import md5_dot, vectors, vectors_cte
 from flink_rc_spark.llm.profile import doc_split_byte
 from flink_rc_spark.registry import register
 from flink_rc_spark.sources.tables import load
@@ -741,27 +741,6 @@ _RRF_DEPTH = 50   # candidates taken from each ranker
 _RRF_TOPK = 20
 
 
-def _rrf_qdot_duck() -> str:
-    # md5-derived deterministic query vector (the hyperplane idiom:
-    # q[i] = hexval(md5('rrf_<i>')) - 7.5), sequential fold
-    key = "'rrf_' || CAST(i AS STRING)"
-    w = f"({md5_int(key, 1, 1, duck=True)} - 7.5)"
-    return (
-        f"list_reduce(list_transform(range(1, 65), i -> {w}"
-        " * e[i]), (acc, x) -> acc + x)"
-    )
-
-
-def _rrf_qdot_spark() -> str:
-    import hashlib
-
-    terms = []
-    for i in range(1, 65):
-        w = int(hashlib.md5(f"rrf_{i}".encode()).hexdigest()[0], 16) - 7.5
-        terms.append(f"({w}) * element_at(e, {i})")
-    return " + ".join(terms)
-
-
 @register(
     "q_rank_fusion",
     oracle=f"""
@@ -790,19 +769,13 @@ def _rrf_qdot_spark() -> str:
         WHERE {" + ".join(f"tf_{w}" for w in _BM25_TERMS)} > 0
         QUALIFY rl <= {_RRF_DEPTH}
     ),
-    v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings
-    ),
+    {vectors_cte()},
     sem AS (
         SELECT vec_id,
                ROW_NUMBER() OVER (
-                   ORDER BY {_rrf_qdot_duck()}
-                            / sqrt(list_reduce(list_transform(e, x -> x*x),
-                                               (acc, x) -> acc + x))
-                            DESC, vec_id) AS rs
-        FROM v
+                   ORDER BY {md5_dot("'rrf_'", duck=True)} / nrm DESC, vec_id
+               ) AS rs
+        FROM n
         QUALIFY rs <= {_RRF_DEPTH}
     )
     SELECT COALESCE(l.doc_id, s.vec_id) AS doc_id,
@@ -829,8 +802,9 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector retrieval without score calibration — ranks are
     scale-free, so the two incomparable score spaces never meet.
 
-    Determinism: the semantic query vector is md5-derived (the
-    hyperplane idiom) and its dot folds sequentially; BM25 reuses
+    Determinism: the semantic query vector is md5-derived
+    (functions/vectors.py::md5_dot, keys 'rrf_<i>') and its dot folds
+    sequentially; BM25 reuses
     q_bm25's fixed-order expression; both rankings tiebreak on the id;
     the fused score is a fixed two-term double expression (never an
     aggregate over variable rows). Exact oracle end-to-end.
@@ -853,18 +827,10 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rl", F.row_number().over(wl))
         .select("doc_id", "rl")
     )
-    from flink_rc_spark.sources.tables import load as _load
-
-    v = _load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    qcos = F.expr(_rrf_qdot_spark()) / F.expr(
-        "sqrt(aggregate(transform(e, x -> x*x), 0d, (acc, x) -> acc + x))"
-    )
+    qcos = F.expr(md5_dot("rrf_")) / F.col("nrm")
     ws = Window.orderBy(F.desc("_qc"), "vec_id")
     sem = (
-        v.select("vec_id", qcos.alias("_qc"))
+        vectors(spark, sf_dir).select("vec_id", qcos.alias("_qc"))
         .orderBy(F.desc("_qc"), "vec_id")
         .limit(_RRF_DEPTH)
         .withColumn("rs", F.row_number().over(ws))

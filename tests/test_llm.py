@@ -190,11 +190,8 @@ def test_dedup_embedding_full_planted_recall(spark, sf_dir):
     most n_bands candidates per vector."""
     from pyspark.sql import functions as F
 
-    from flink_rc_spark.llm.similarity import (
-        _BANDED_NB,
-        _NORM_SPARK,
-        embedding_canonical_dedup,
-    )
+    from flink_rc_spark.functions.vectors import as_double, norm
+    from flink_rc_spark.llm.similarity import _BANDED_NB, embedding_canonical_dedup
     from flink_rc_spark.sources.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
@@ -204,10 +201,9 @@ def test_dedup_embedding_full_planted_recall(spark, sf_dir):
     n_planted = planted.count()
     assert n_planted > 0
     both = emb.select("vec_id", "label", "embedding").unionByName(planted)
-    n = both.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    ).withColumn("nrm", F.expr(_NORM_SPARK))
+    n = both.select("vec_id", F.expr(as_double()).alias("e")).withColumn(
+        "nrm", F.expr(norm("e"))
+    )
     out = embedding_canonical_dedup(n)
     flagged = {r.vec_id for r in out.collect()}
     hits = sum(1 for v in flagged if v >= 1_000_000)

@@ -97,10 +97,10 @@ def test_unresolved_flags_missing_names():
     src = (
         "import bench\n"
         "def f():\n"
-        "    from flink_rc_spark.llm.similarity import _DOT_SPARK, _DOT_FLAT\n"
+        "    from flink_rc_spark.llm.similarity import _plane_weight, _DOT_FLAT\n"
         "    from flink_rc_spark.llm import cluster as C\n"
         "    from flink_rc_spark.no_such_module import x\n"
-        "    return bench.execute, bench.no_such_fn, C._DIST_SPARK, C._DIST_SPARK_FLAT\n"
+        "    return bench.execute, bench.no_such_fn, C.lloyd_cte, C._DIST_SPARK_FLAT\n"
     )
     bad = unresolved(src)
     assert len(bad) == 4, bad

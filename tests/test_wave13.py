@@ -67,13 +67,13 @@ def test_coreset_beats_hash_sample_coverage(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from flink_rc_spark.llm.cluster import _QUANT_SPARK
+    from flink_rc_spark.functions.vectors import on_grid
     from flink_rc_spark.sources.tables import load
 
     rows = REGISTRY["q_sample_coreset"].builder(spark, sf_dir).collect()
     fps_radius = rows[0].cover_radius_sq
     emb = load(spark, sf_dir, "embeddings")
-    vq = emb.select("vec_id", F.expr(_QUANT_SPARK).alias("m"))
+    vq = emb.select("vec_id", F.expr(on_grid(2)).alias("m"))
     hash_sample = (
         vq.withColumn(
             "rn",
