@@ -30,6 +30,13 @@ from flink_rc_spark.sources.tables import (
     parquet_files,
 )
 
+_CHECKPOINT_LOCATION = "spark.sql.streaming.checkpointLocation"
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_SYSTEM_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def _stream_dir(sf_dir: str, n_splits: int = 1) -> str:
     """The file stream source requires a *directory*.
@@ -114,7 +121,9 @@ def run_to_memory(
     - ``duration_ms``: ``StreamingQueryProgress.durationMs`` summed over
       the batches for ``addBatch``, ``queryPlanning``, ``walCommit``
       and ``triggerExecution``;
-    - ``rows_dropped_by_watermark`` and ``progress_window_saturated``.
+    - ``rows_dropped_by_watermark`` and ``progress_window_saturated``;
+    - ``state_rows``: ``numRowsTotal`` summed over the state operators
+      of the last progress, the keys the state store holds at the end.
 
     State partitions: streaming state operators shuffle on
     ``spark.sql.shuffle.partitions`` with NO AQE coalescing, and the
@@ -131,22 +140,48 @@ def run_to_memory(
     took the perfbench ``stream_replay`` pass from 6.02 s to ~4.7 s
     against 8 partitions (one per 512 KB of input, clamped to [8, 32]),
     and ``q_stream_tumbling`` at sf1 from 2.69 s to 1.24 s against 32
-    (BASELINE.md, "State partitions: one per task slot"). The conf is
-    set for the query's planning and restored afterwards, or unset again
-    if the session never set it (harness queries run sequentially).
+    (BASELINE.md, "State partitions: one per task slot").
+
+    Checkpoint files: with no checkpoint location the memory sink
+    checkpoints to a fresh directory under Spark's temporary local
+    directory. Spark writes it through the Hadoop FileContext API by
+    default, and without the native Hadoop library (the
+    ``NativeCodeLoader`` warning) ``RawLocalFileSystem`` forks a
+    ``readlink`` or ``chmod`` child process for every link-status
+    lookup and every file create: every offset, commit and source-log
+    entry, state-schema, state-delta and checksum file. JFR
+    ``jdk.ProcessStart`` counted about 150 forks per counter replay,
+    about 40 with ``FileSystemBasedCheckpointFileManager``, which this
+    query therefore uses. It renames a finished temporary file into
+    place, which is atomic only on a file system with POSIX rename
+    and one writer: so the manager is set only when the session sets
+    neither ``spark.sql.streaming.checkpointLocation`` nor a manager of
+    its own, the case of Spark's fresh, local, single-writer temporary
+    directory. Hadoop's ``.crc`` files and Spark's checkpoint checksums
+    are kept. (BASELINE.md, "Checkpoint forks and user-bucket state".)
+
+    Both confs are query-scoped: set for the query's planning and
+    restored afterwards, or unset again if the session never set them
+    (harness queries run sequentially).
     """
     spark = stream_df.sparkSession
     state_partitions = spark.sparkContext.defaultParallelism
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
+    query_confs = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    if spark.conf.get(_CHECKPOINT_LOCATION, None) is None and (
+        spark.conf.get(_CHECKPOINT_MANAGER, None) is None
+    ):
+        query_confs[_CHECKPOINT_MANAGER] = _FILE_SYSTEM_MANAGER
     # restored only after the bounded replay completes: batch planning
-    # reads the conf lazily, so restoring right after the async start()
+    # reads the confs lazily, so restoring right after the async start()
     # would race batch 0
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    saved = {k: spark.conf.get(k, None) for k in query_confs}
+    for k, v in query_confs.items():
+        spark.conf.set(k, v)
     q = None
     try:
         # start() lives INSIDE the try: if analysis fails, the finally
-        # still restores shuffle.partitions for subsequent batch queries.
+        # still restores the confs for subsequent batch queries.
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -182,13 +217,19 @@ def run_to_memory(
                 for p in progress
                 for so in p.get("stateOperators", [])
             )
+            stats["state_rows"] = sum(
+                so.get("numRowsTotal", 0)
+                for so in (progress[-1].get("stateOperators", [])
+                           if progress else [])
+            )
     finally:
         if q is not None:
             q.stop()
-        if prev_parts is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     # The memory sink's rows are driver-held and the registered table
     # SURVIVES q.stop(), later queries, and catalog.clearCache()
     # (probed r13, OPTIMIZATION_r13.md "Streaming replay — the

@@ -18,13 +18,33 @@ zero), so the emitted doubles equal the batch oracle's decimal sums
 bit-for-bit — no float drift however many micro-batches the stream is
 split into, and no second rounding rule in Python. Kernels that fold a
 user's events in order read them through ``_in_event_order``, which
-decides the (ts, event_id) order of a group's whole micro-batch in one
-place.
+decides the (user_id, ts, event_id) order of a group's whole
+micro-batch in one place.
 
-100 TB story: state is partitioned by user_id in the state store
-(RocksDB in production), sized O(distinct keys); the same operator
-carries the ESN reservoir vector or SGD weights as state — see
-flink_rc_spark/rc for the batch twins.
+State grain: eight per-user kernels (counter, ewma, funnel, esn,
+upsert, cep, anomaly, first_touch) keep their state per *user bucket*,
+``pmod(user_id, _USER_BUCKETS)``, through one driver,
+``_by_user_bucket``. Spark calls Python once per state key and pays
+about 2-3 ms of serializer work per call whatever its rows, so keying
+by user paid that once per user per micro-batch; keyed by bucket it is
+paid ``_USER_BUCKETS`` times. Inside a bucket the driver walks the user
+segments and calls the kernel's per-user fold, ``(user, ordered frame,
+state or None) -> (rows, new state or None)``, with that user's state,
+so every user is folded by the same code in the same order as before
+and the output is bit-identical. ``q_stream_timeout`` stays keyed by
+user: it needs one event-time timer per user.
+
+100 TB story: state lives in the state store (RocksDB in production)
+keyed by user bucket, and sized O(distinct users): a bucket's state is
+a users array beside the per-user states, typed by the kernel's
+``*_STATE_SCHEMA``. A bucket touched by a micro-batch has its whole
+state rewritten, so per-batch state I/O is O(users in touched buckets),
+not O(users touched); at that scale ``_USER_BUCKETS`` trades calls for
+rewrite volume. It is part of the checkpoint's state key and must never
+change under an existing checkpoint (the same users would be looked up
+under other buckets). The same operator carries the ESN reservoir
+vector or SGD weights as state — see flink_rc_spark/rc for the batch
+twins.
 """
 
 from __future__ import annotations
@@ -66,8 +86,9 @@ STATE_SCHEMA = T.StructType(
 
 def _in_event_order(pdf_iter) -> pd.DataFrame:
     """One group's rows for this micro-batch as one frame, in event-time
-    order: ts, then event_id, the total order each per-user kernel and
-    its batch oracle fold in.
+    order per user: user_id, then ts, then event_id. Each user's rows
+    are one contiguous segment in the total order its per-user fold and
+    batch oracle use.
 
     Chunk contract: Spark hands a group over in Arrow chunks of at most
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, in arrival
@@ -78,20 +99,89 @@ def _in_event_order(pdf_iter) -> pd.DataFrame:
     pdfs = list(pdf_iter)
     pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
     return pdf.take(
-        np.lexsort((pdf["event_id"].to_numpy(), pdf["ts"].to_numpy()))
+        np.lexsort(
+            (
+                pdf["event_id"].to_numpy(),
+                pdf["ts"].to_numpy(),
+                pdf["user_id"].to_numpy(),
+            )
+        )
     )
 
 
-def _counter(key, pdf_iter, state):
-    """State transition of the per-user running count/sum: fold the
-    group's micro-batch into (n, cents) state, emitting the per-row
-    running count/sum. The accumulation is integer cents, so the
-    vectorized cumsum is bit-identical to a per-row loop."""
-    n, cents = state.get if state.exists else (0, 0)
-    pdf = _in_event_order(pdf_iter)
+# The state key of the per-user kernels is pmod(user_id, _USER_BUCKETS).
+# A constant, not read from the session: the bucket count is part of
+# every checkpoint's state key and must never change under one.
+_USER_BUCKETS = 16
+
+
+def _by_user_bucket(rows, fold, out_schema, state_schema):
+    """``rows`` grouped by user bucket into one ``applyInPandasWithState``
+    whose kernel runs the per-user ``fold`` over each user in the
+    bucket's micro-batch.
+
+    ``fold(user, pdf, state)`` gets one user's rows in event order and
+    that user's state tuple (``state_schema``), or None for a user not
+    seen before, and returns ``(rows, new_state)``: the output frame or
+    None, and the new state tuple, or None to drop the user's state.
+
+    The bucket state is ``users`` beside ``states``, one
+    ``state_schema`` row per user. Array-typed state costs one codegen
+    compile per replay (the state encoder's array loop is a fresh class
+    each query; 18-44 ms on 4 cores, and q_stream_esn's array state paid
+    it before). A map layout compiles one too; only a scalar layout, one
+    opaque binary field, compiles none, and it would hide the per-user
+    types from Spark's state-schema check on restart, so the arrays
+    stay (BASELINE.md, "Checkpoint forks and user-bucket state")."""
+    bucket_schema = T.StructType(
+        [
+            T.StructField("users", T.ArrayType(T.LongType(), False)),
+            T.StructField("states", T.ArrayType(state_schema, False)),
+        ]
+    )
+
+    def kernel(key, pdf_iter, state):
+        held = dict(zip(*state.get)) if state.exists else {}
+        pdf = _in_event_order(pdf_iter).drop(columns="user_bucket")
+        uids = pdf["user_id"].to_numpy()
+        cuts = [0, *(np.flatnonzero(uids[1:] != uids[:-1]) + 1), len(uids)]
+        outs = []
+        for a, b in zip(cuts[:-1], cuts[1:]):
+            user = int(uids[a])
+            out, new = fold(user, pdf.iloc[a:b], held.get(user))
+            if new is None:
+                held.pop(user, None)
+            else:
+                held[user] = new
+            if out is not None:
+                outs.append(out)
+        if held:
+            state.update((list(held), list(held.values())))
+        elif state.exists:
+            state.remove()
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
+
+    bucket = F.pmod("user_id", F.lit(_USER_BUCKETS))
+    return rows.withColumn("user_bucket", bucket).groupBy(
+        "user_bucket"
+    ).applyInPandasWithState(
+        kernel,
+        outputStructType=out_schema,
+        stateStructType=bucket_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout",
+    )
+
+
+def _counter(user, pdf, state):
+    """Per-user running count/sum: fold the user's micro-batch into
+    (n, cents) state, emitting the per-row running count/sum. The
+    accumulation is integer cents, so the vectorized cumsum is
+    bit-identical to a per-row loop."""
+    n, cents = state or (0, 0)
     cum = cents + np.cumsum(pdf["cents"].to_numpy())
-    state.update((n + len(pdf), cents + int(pdf["cents"].sum())))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "user_id": pdf["user_id"].to_numpy(),
             "event_id": pdf["event_id"].to_numpy(),
@@ -99,6 +189,7 @@ def _counter(key, pdf_iter, state):
             "running_sum": cum / 100.0,
         }
     )
+    return out, (n + len(pdf), cents + int(pdf["cents"].sum()))
 
 
 def stateful_counter_stream(s):
@@ -106,13 +197,7 @@ def stateful_counter_stream(s):
     rows = s.select(
         "user_id", "event_id", "ts", F.expr(CENTS_SQL).alias("cents")
     )
-    return rows.groupBy("user_id").applyInPandasWithState(
-        _counter,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _by_user_bucket(rows, _counter, OUT_SCHEMA, STATE_SCHEMA)
 
 
 @register(
@@ -150,28 +235,27 @@ EWMA_OUT_SCHEMA = T.StructType(
 EWMA_STATE_SCHEMA = T.StructType([T.StructField("s", T.DoubleType())])
 
 
-def _ewma_kernel(key, pdf_iter, state):
+def _ewma_kernel(user, pdf, state):
     """Per-user EWMA state transition: s ← 0.25·x + 0.75·s, seeded by
     the first observation. DELIBERATELY a sequential per-row loop —
     the batch oracle is a sequential left fold, and any vectorized
     rewrite (power-series form) reorders float ops and drifts; the
     loop is bit-identical. Rows per (user, micro-batch) are bounded by
     the batch size, so the loop is short by construction."""
-    s = state.get[0] if state.exists else None
-    pdf = _in_event_order(pdf_iter)
+    s = state[0] if state else None
     ew = []
     for x in pdf["value"].to_numpy():
         x = float(x)
         s = x if s is None else 0.25 * x + 0.75 * s
         ew.append(s)
-    state.update((s,))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "user_id": pdf["user_id"].to_numpy(),
             "event_id": pdf["event_id"].to_numpy(),
             "ewma": ew,
         }
     )
+    return out, (s,)
 
 
 @register(
@@ -208,12 +292,8 @@ def q_stream_ewma(spark, sf_dir):
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
     rows = s.select("user_id", "event_id", "ts", "value")
-    out = rows.groupBy("user_id").applyInPandasWithState(
-        _ewma_kernel,
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    out = _by_user_bucket(
+        rows, _ewma_kernel, EWMA_OUT_SCHEMA, EWMA_STATE_SCHEMA
     )
     return run_to_memory(out, output_mode="append")
 
@@ -239,16 +319,16 @@ FUNNEL_STATE_SCHEMA = T.StructType(
 )
 
 
-def _funnel_kernel(key, pdf_iter, state):
+def _funnel_kernel(user, pdf, state):
     """Per-user view→click→purchase state machine. Emits a row only at
     each TRANSITION (step time getting set) — transitions are
     invariant to micro-batch boundaries on the event-time-ordered
     replay, which is what makes the streaming output equal the batch
     CTE spelling row-for-row (emitting evolving state instead would
     bake batch boundaries into the result)."""
-    t1, t2, t3 = state.get if state.exists else (None, None, None)
+    t1, t2, t3 = state or (None, None, None)
     outs = []
-    for _, row in _in_event_order(pdf_iter).iterrows():
+    for _, row in pdf.iterrows():
         et, ts = row["event_type"], row["ts"]
         if t1 is None:
             if et == "view":
@@ -262,9 +342,8 @@ def _funnel_kernel(key, pdf_iter, state):
             if et == "purchase" and ts > t2:
                 t3 = ts
                 outs.append((row["user_id"], 3, ts))
-    state.update((t1, t2, t3))
-    if outs:
-        yield pd.DataFrame(outs, columns=["user_id", "step", "ts"])
+    out = pd.DataFrame(outs, columns=["user_id", "step", "ts"]) if outs else None
+    return out, (t1, t2, t3)
 
 
 @register(
@@ -307,12 +386,8 @@ def q_stream_funnel(spark, sf_dir):
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
     rows = s.select("user_id", "event_id", "ts", "event_type")
-    out = rows.groupBy("user_id").applyInPandasWithState(
-        _funnel_kernel,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    out = _by_user_bucket(
+        rows, _funnel_kernel, FUNNEL_OUT_SCHEMA, FUNNEL_STATE_SCHEMA
     )
     return run_to_memory(out, output_mode="append")
 
@@ -350,23 +425,22 @@ def _esn_weights():
 def _esn_kernel(cfg, w_in, w):
     """Per-series reservoir state transition across micro-batches: the
     reference's R4 operator state (x(t-1) held in the Flink operator
-    instance) becomes a state-store array<double>. The kernel calls
+    instance) becomes an array<double> in the user's slot of its
+    bucket state (``_by_user_bucket``). The kernel calls
     the SAME ``reservoir_scan`` the batch RC module runs, seeded from
     stored state, so stream and batch trajectories are bit-identical
     float-for-float (asserted in tests/test_streaming.py).
 
     The weights are built once on the driver and closure-captured, as
     ``run_reservoir`` does: building them runs an ``eigvals``, which
-    cost ~70 us per group."""
+    cost ~70 us per user."""
     from flink_rc_spark.rc.reservoir import reservoir_scan
 
-    def kernel(key, pdf_iter, state):
-        x = np.array(state.get[0], dtype=float) if state.exists else None
-        pdf = _in_event_order(pdf_iter)
+    def kernel(user, pdf, state):
+        x = np.array(state[0], dtype=float) if state else None
         u = pdf[["value"]].to_numpy(dtype=float)
         states = reservoir_scan(u, w_in, w, cfg.include_bias, x0=x)
-        state.update((list(map(float, states[-1])),))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "user_id": pdf["user_id"].to_numpy(),
                 "event_id": pdf["event_id"].to_numpy(),
@@ -374,6 +448,7 @@ def _esn_kernel(cfg, w_in, w):
                 "state_norm": np.sqrt((states * states).sum(axis=1)),
             }
         )
+        return out, (list(map(float, states[-1])),)
 
     return kernel
 
@@ -381,12 +456,8 @@ def _esn_kernel(cfg, w_in, w):
 def esn_stream(s):
     """The per-user streaming reservoir trajectory of ``s``."""
     rows = s.select("user_id", "event_id", "ts", "value")
-    return rows.groupBy("user_id").applyInPandasWithState(
-        _esn_kernel(*_esn_weights()),
-        outputStructType=ESN_OUT_SCHEMA,
-        stateStructType=ESN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _by_user_bucket(
+        rows, _esn_kernel(*_esn_weights()), ESN_OUT_SCHEMA, ESN_STATE_SCHEMA
     )
 
 
@@ -553,30 +624,26 @@ UPSERT_STATE_SCHEMA = T.StructType(
 )
 
 
-def _upsert_kernel(key, pdf_iter, state):
+def _upsert_kernel(user, pdf, state):
     """Last-writer-wins by EVENT TIME (ts, then event_id): the state
     carries only the newest entry's coordinates plus the applied-op
     counter, so redelivered or re-sliced batches fold to the same
     answer — event-time ordering, not arrival ordering, decides."""
-    seq, bts, beid, bop, bcents, nops = (
-        state.get if state.exists else (0, -1, -1, "", 0, 0)
-    )
-    for pdf in pdf_iter:
-        cents = pdf["cents"].to_numpy()
-        ts_us = pdf["ts_us"].to_numpy()
-        eids = pdf["event_id"].to_numpy()
-        ops = pdf["event_type"].to_numpy()
-        nops += len(pdf)
-        for i in range(len(pdf)):
-            if (int(ts_us[i]), int(eids[i])) > (bts, beid):
-                bts, beid = int(ts_us[i]), int(eids[i])
-                bop = "D" if ops[i] == "click" else "U"
-                bcents = int(cents[i])
+    seq, bts, beid, bop, bcents, nops = state or (0, -1, -1, "", 0, 0)
+    cents = pdf["cents"].to_numpy()
+    ts_us = pdf["ts_us"].to_numpy()
+    eids = pdf["event_id"].to_numpy()
+    ops = pdf["event_type"].to_numpy()
+    nops += len(pdf)
+    for i in range(len(pdf)):
+        if (int(ts_us[i]), int(eids[i])) > (bts, beid):
+            bts, beid = int(ts_us[i]), int(eids[i])
+            bop = "D" if ops[i] == "click" else "U"
+            bcents = int(cents[i])
     seq += 1
-    state.update((seq, bts, beid, bop, bcents, nops))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
-            "user_id": [key[0]],
+            "user_id": [user],
             "seq": [seq],
             "last_event_id": [beid],
             "op": [bop],
@@ -584,22 +651,20 @@ def _upsert_kernel(key, pdf_iter, state):
             "n_ops": [nops],
         }
     )
+    return out, (seq, bts, beid, bop, bcents, nops)
 
 
 def stream_upsert(s):
     slim = s.select(
         "user_id",
+        "ts",
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
         "event_type",
         F.expr(CENTS_SQL).alias("cents"),
     )
-    return slim.groupBy("user_id").applyInPandasWithState(
-        _upsert_kernel,
-        outputStructType=UPSERT_OUT_SCHEMA,
-        stateStructType=UPSERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _by_user_bucket(
+        slim, _upsert_kernel, UPSERT_OUT_SCHEMA, UPSERT_STATE_SCHEMA
     )
 
 
@@ -674,7 +739,7 @@ CEP_STATE_SCHEMA = T.StructType(
 )
 
 
-def _cep_kernel(key, pdf_iter, state):
+def _cep_kernel(user, pdf, state):
     """Per-user CEP state machine for the pattern V+ C: the state is
     the OPEN run (first view's id + ts and the run length); a click
     arriving while a run is open closes and emits a match, any other
@@ -682,11 +747,8 @@ def _cep_kernel(key, pdf_iter, state):
     (``_in_event_order`` within a batch; batches arrive in event-time
     order by the replay contract), so the machine's transitions are
     exactly the batch gaps-and-islands decomposition's."""
-    first_id, first_ts, run_len = (
-        state.get if state.exists else (-1, -1, 0)
-    )
+    first_id, first_ts, run_len = state or (-1, -1, 0)
     out = []
-    pdf = _in_event_order(pdf_iter)
     for ts_us, eid, etype in zip(
         pdf["ts_us"].to_numpy(), pdf["event_id"].to_numpy(), pdf["event_type"]
     ):
@@ -696,25 +758,20 @@ def _cep_kernel(key, pdf_iter, state):
             run_len += 1
         elif etype == "click" and run_len >= 1:
             out.append(
-                (key[0], first_id, run_len, int(eid), int(ts_us) - first_ts)
+                (user, first_id, run_len, int(eid), int(ts_us) - first_ts)
             )
             run_len = 0
         else:
             run_len = 0
-    # Only users with an OPEN V+ run occupy the state store: a closed
-    # or never-opened run removes (or never writes) the entry, so
-    # state footprint tracks open runs, not the stream's lifetime
+    rows = pd.DataFrame(
+        out,
+        columns=["user_id", "first_view_id", "n_views", "click_id", "span_us"],
+    ) if out else None
+    # Only users with an OPEN V+ run occupy the state: a closed or
+    # never-opened run drops (or never writes) the user, so state
+    # footprint tracks open runs, not the stream's lifetime
     # distinct-user count (NoTimeout has no eviction path otherwise).
-    if run_len == 0:
-        if state.exists:
-            state.remove()
-    else:
-        state.update((first_id, first_ts, run_len))
-    if out:
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "first_view_id", "n_views", "click_id", "span_us"],
-        )
+    return rows, (first_id, first_ts, run_len) if run_len else None
 
 
 def stream_cep(s):
@@ -725,13 +782,7 @@ def stream_cep(s):
         "event_id",
         "event_type",
     )
-    return slim.groupBy("user_id").applyInPandasWithState(
-        _cep_kernel,
-        outputStructType=CEP_OUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _by_user_bucket(slim, _cep_kernel, CEP_OUT_SCHEMA, CEP_STATE_SCHEMA)
 
 
 @register(
@@ -782,8 +833,8 @@ def q_stream_cep(spark, sf_dir):
     100 TB: this is the shape Flink-CEP compiles contiguous patterns
     into — O(pattern length) state per key, no event buffering beyond
     the open run, emission latency = the closing event's arrival.
-    Spark runs it on applyInPandasWithState with user_id-partitioned
-    state; the batch twin is the backfill path over the same oracle.
+    Spark runs it on applyInPandasWithState with the open runs held in
+    user-bucket state (``_by_user_bucket``); the batch twin is the backfill path over the same oracle.
     """
     ensure_package_shipped(spark)
     s = events_stream(spark, sf_dir)
@@ -1091,7 +1142,7 @@ ANOM_STATE_SCHEMA = T.StructType(
 _ANOM_MIN_PRIOR = 5
 
 
-def _anomaly_kernel(key, pdf_iter, state):
+def _anomaly_kernel(user, pdf, state):
     """Per-user running-moment fold: state = (n, Σc, Σc²) over all
     PRIOR events (exact integers — the fold is associative on ordered
     prefixes, so micro-batch slicing cannot change any emitted row).
@@ -1101,9 +1152,8 @@ def _anomaly_kernel(key, pdf_iter, state):
     after one IEEE-exact sqrt."""
     import math
 
-    n, s, q = state.get if state.exists else (0, 0, 0)
+    n, s, q = state or (0, 0, 0)
     outs = []
-    pdf = _in_event_order(pdf_iter)
     for uid, eid, c in zip(
         pdf["user_id"].to_numpy(),
         pdf["event_id"].to_numpy(),
@@ -1118,11 +1168,10 @@ def _anomaly_kernel(key, pdf_iter, state):
                     (int(uid), int(eid), c, n, float(num) / math.sqrt(float(den)))
                 )
         n, s, q = n + 1, s + c, q + c * c
-    state.update((n, s, q))
-    if outs:
-        yield pd.DataFrame(
-            outs, columns=["user_id", "event_id", "cents", "n_prior", "z"]
-        )
+    out = pd.DataFrame(
+        outs, columns=["user_id", "event_id", "cents", "n_prior", "z"]
+    ) if outs else None
+    return out, (n, s, q)
 
 
 def stream_anomaly(s):
@@ -1132,12 +1181,8 @@ def stream_anomaly(s):
         "ts",
         F.expr(CENTS_SQL).alias("cents"),
     )
-    return rows.groupBy("user_id").applyInPandasWithState(
-        _anomaly_kernel,
-        outputStructType=ANOM_OUT_SCHEMA,
-        stateStructType=ANOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _by_user_bucket(
+        rows, _anomaly_kernel, ANOM_OUT_SCHEMA, ANOM_STATE_SCHEMA
     )
 
 
@@ -1324,26 +1369,19 @@ FT_OUT_SCHEMA = T.StructType(
 FT_STATE_SCHEMA = T.StructType([T.StructField("seen", T.LongType())])
 
 
-def _first_touch_kernel(key, pdf_iter, state):
+def _first_touch_kernel(user, pdf, state):
     """Per-user seen flag: the FIRST event (in event-time order) emits
     a new-user row; everything after is suppressed. Emission happens
     at a state TRANSITION (unseen → seen), so it is invariant to
     micro-batch boundaries on the ordered replay — the q_stream_funnel
     discipline with a 1-bit machine."""
-    first = _in_event_order(pdf_iter).iloc[:1]
-    if not state.exists:
-        state.update((1,))
-        yield first
+    return (None, state) if state else (pdf.iloc[:1], (1,))
 
 
 def stream_first_touch(s):
     rows = s.select("user_id", "event_id", "ts", "event_type")
-    return rows.groupBy("user_id").applyInPandasWithState(
-        _first_touch_kernel,
-        outputStructType=FT_OUT_SCHEMA,
-        stateStructType=FT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _by_user_bucket(
+        rows, _first_touch_kernel, FT_OUT_SCHEMA, FT_STATE_SCHEMA
     )
 
 

@@ -174,17 +174,47 @@ def test_state_partition_count_does_not_change_output(
         assert got == expected
 
 
-def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
+def test_run_to_memory_restores_shuffle_partitions(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """run_to_memory sets spark.sql.shuffle.partitions for the state
     stage only: afterwards the session's own value is back — or the
     conf is unset again if the session never set it — both after a
     completed replay and when start() fails analysis (append mode on an
-    aggregation without a watermark)."""
+    aggregation without a watermark). The same holds for
+    spark.sql.streaming.checkpointFileManagerClass, which the query
+    gets as the FileSystem manager; a session that sets a checkpoint
+    location or a manager of its own keeps it, and the manager conf is
+    never set."""
     from pyspark.errors import AnalysisException
+    from pyspark.sql.conf import RuntimeConfig
 
+    from flink_rc_spark.streaming import replay
     from flink_rc_spark.streaming.replay import events_stream, run_to_memory
 
     key = "spark.sql.shuffle.partitions"
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    location = "spark.sql.streaming.checkpointLocation"
+    assert spark.conf.get(manager, None) is None
+    assert spark.conf.get(location, None) is None
+    sets: list = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        sets.append((k, v))
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+
+    def after_each_replay(check):
+        """A completed replay, then one whose start() fails analysis."""
+        s = events_stream(spark, sf_dir)
+        assert run_to_memory(s.select("event_id")).count() > 0
+        check()
+        with pytest.raises(AnalysisException):
+            run_to_memory(s.groupBy("user_id").count(), output_mode="append")
+        check()
+
     prev = spark.conf.get(key, None)
     try:
         for setting in ("7", None):
@@ -192,17 +222,41 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, setting)
-            s = events_stream(spark, sf_dir)
-            assert run_to_memory(s.select("event_id")).count() > 0
-            assert spark.conf.get(key, None) == setting
-            with pytest.raises(AnalysisException):
-                run_to_memory(s.groupBy("user_id").count(), output_mode="append")
-            assert spark.conf.get(key, None) == setting
+
+            def restored():
+                assert spark.conf.get(key, None) == setting
+                assert spark.conf.get(manager, None) is None
+                assert (manager, replay._FILE_SYSTEM_MANAGER) in sets
+                sets.clear()
+
+            after_each_replay(restored)
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+    own_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    for own_key, own_value in (
+        (location, str(tmp_path / "checkpoints")),
+        (manager, own_manager),
+    ):
+        spark.conf.set(own_key, own_value)
+        sets.clear()
+
+        def untouched():
+            assert spark.conf.get(own_key, None) == own_value
+            assert all(k != manager for k, _ in sets), sets
+            if own_key == location:
+                assert spark.conf.get(manager, None) is None
+
+        try:
+            after_each_replay(untouched)
+        finally:
+            spark.conf.unset(own_key)
 
 
 def test_watermark_drops_late_row_across_batches(spark, tmp_path):
@@ -1508,3 +1562,59 @@ def test_stream_esn_on_shuffled_events_matches_batch(
     streamed = REGISTRY["q_stream_esn"].builder(spark, d).collect()
     got = {(r.user_id, r.event_id): (r.x0, r.state_norm) for r in streamed}
     assert len(got) > 0 and got == _batch_esn_trajectories(spark, d)
+
+
+# The registered keys of the eight kernels that keep per-user state in
+# user buckets (``stateful._by_user_bucket``).
+_BUCKETED_KEYS = [
+    "q_stream_stateful_counter",
+    "q_stream_ewma",
+    "q_stream_funnel",
+    "q_stream_esn",
+    "q_stream_upsert",
+    "q_stream_cep",
+    "q_stream_anomaly",
+    "q_stream_first_touch",
+]
+
+
+@pytest.mark.parametrize("key", _BUCKETED_KEYS)
+def test_bucketed_state_holds_one_row_per_bucket(spark, sf_dir, key, monkeypatch):
+    """The per-user kernels key their state by user bucket: after a
+    replay of sf0.01 (150 users) the state store holds at most
+    ``_USER_BUCKETS`` rows, where a per-user key holds one row per user
+    (per user with an open run for cep), and the output still equals
+    the batch reference: the key's DuckDB oracle, or the batch
+    reservoir scan for q_stream_esn."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flink_rc_spark.streaming import stateful as st
+    from flink_rc_spark.streaming.replay import run_to_memory
+    from tests.parity import compare_frames, duck_connect
+
+    # the shipped scales sit beside the session's test scale
+    d = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    users = pq.read_table(os.path.join(d, "events.parquet"), columns=["user_id"])
+    assert len(pc.unique(users["user_id"])) > 4 * st._USER_BUCKETS
+
+    runs: list = []
+
+    def recording(df, output_mode="append"):
+        runs.append({})
+        return run_to_memory(df, output_mode=output_mode, stats=runs[-1])
+
+    monkeypatch.setattr(st, "run_to_memory", recording)
+    out = REGISTRY[key].builder(spark, d)
+    assert len(runs) == 1 and 0 < runs[0]["state_rows"] <= st._USER_BUCKETS, runs
+    if key == "q_stream_esn":
+        got = {(r.user_id, r.event_id): (r.x0, r.state_norm) for r in out.collect()}
+        assert got == _batch_esn_trajectories(spark, d)
+        return
+    con = duck_connect(d)
+    try:
+        compare_frames(out.toPandas(), con.execute(REGISTRY[key].oracle).df(), key)
+    finally:
+        con.close()
