@@ -37,14 +37,24 @@ user: it needs one event-time timer per user.
 100 TB story: state lives in the state store (RocksDB in production)
 keyed by user bucket, and sized O(distinct users): a bucket's state is
 a users array beside the per-user states, typed by the kernel's
-``*_STATE_SCHEMA``. A bucket touched by a micro-batch has its whole
-state rewritten, so per-batch state I/O is O(users in touched buckets),
-not O(users touched); at that scale ``_USER_BUCKETS`` trades calls for
-rewrite volume. It is part of the checkpoint's state key and must never
-change under an existing checkpoint (the same users would be looked up
-under other buckets). The same operator carries the ESN reservoir
-vector or SGD weights as state — see flink_rc_spark/rc for the batch
-twins.
+``*_STATE_SCHEMA``. The bucket keys (``_BUCKET_KEYS``) must never
+change under an existing checkpoint: the same users would be looked up
+under other keys. The same operator carries the ESN reservoir vector or
+SGD weights as state — see flink_rc_spark/rc for the batch twins. The
+grain has two limits, measured only up to sf1 (15,000 users, about 470
+per bucket) on ``local[4]`` (BASELINE.md, "Checkpoint forks and
+user-bucket state"):
+
+- Parallelism: a replay of these kernels has at most 32 non-empty state
+  keys, so at most 32 state tasks carry work; ``run_to_memory`` sets one
+  state partition per task slot, and on a session with more slots the
+  rest idle. The keys spread evenly over any power-of-two partition
+  count up to 32; other counts hash them unevenly.
+- Row size: seven of the eight kernels never drop a user (cep drops one
+  whose run ends), so a bucket's state row holds every user the bucket
+  has seen, and a micro-batch that touches a bucket reads its whole row
+  into Python and rewrites it. Per-batch state I/O is O(users in touched
+  buckets), not O(users touched).
 """
 
 from __future__ import annotations
@@ -109,10 +119,29 @@ def _in_event_order(pdf_iter) -> pd.DataFrame:
     )
 
 
-# The state key of the per-user kernels is pmod(user_id, _USER_BUCKETS).
-# A constant, not read from the session: the bucket count is part of
-# every checkpoint's state key and must never change under one.
-_USER_BUCKETS = 16
+# The state keys of the per-user kernels: user bucket
+# b = pmod(user_id, _USER_BUCKETS) is keyed by _BUCKET_KEYS[b]. Spark
+# puts a state key in partition pmod(hash(key), n) (Murmur3, seed 42);
+# these are the smallest ints whose hashes fall in 32 distinct residues
+# mod 32, so every power-of-two number of state partitions up to 32
+# gets an equal share of buckets; the plain residues do not (the int
+# keys 0..31 fall 5/10/7/10 into 4 partitions, the bigint residues of
+# pmod(user_id, 16) 6/6/1/3). Constants, not read from the session:
+# they are every checkpoint's state key and must never change under
+# one.
+_BUCKET_KEYS = (
+    12, 64, 10, 1, 37, 20, 32, 35, 13, 6, 98, 7, 73, 30, 28, 0,
+    67, 16, 5, 69, 65, 44, 2, 75, 148, 17, 49, 33, 25, 15, 4, 21,
+)
+_USER_BUCKETS = len(_BUCKET_KEYS)
+
+
+def _user_bucket():
+    """The state key of ``user_id``'s bucket."""
+    return F.element_at(
+        F.array(*map(F.lit, _BUCKET_KEYS)),
+        (F.pmod("user_id", F.lit(_USER_BUCKETS)) + 1).cast("int"),
+    )
 
 
 def _by_user_bucket(rows, fold, out_schema, state_schema):
@@ -162,8 +191,7 @@ def _by_user_bucket(rows, fold, out_schema, state_schema):
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
-    bucket = F.pmod("user_id", F.lit(_USER_BUCKETS))
-    return rows.withColumn("user_bucket", bucket).groupBy(
+    return rows.withColumn("user_bucket", _user_bucket()).groupBy(
         "user_bucket"
     ).applyInPandasWithState(
         kernel,
