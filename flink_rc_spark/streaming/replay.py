@@ -149,10 +149,11 @@ def run_to_memory(
     ``NativeCodeLoader`` warning) ``RawLocalFileSystem`` forks a
     ``readlink`` or ``chmod`` child process for every link-status
     lookup and every file create: every offset, commit and source-log
-    entry, state-schema, state-delta and checksum file. JFR
-    ``jdk.ProcessStart`` counted about 150 forks per counter replay,
-    about 40 with ``FileSystemBasedCheckpointFileManager``, which this
-    query therefore uses. It renames a finished temporary file into
+    entry, state-schema, state-delta and checksum file. In prototype
+    readings, JFR ``jdk.ProcessStart`` counted about 150 forks per
+    counter replay, about 40 with
+    ``FileSystemBasedCheckpointFileManager``, which this query
+    therefore uses; they were not recounted on the final code. It renames a finished temporary file into
     place, which is atomic only on a file system with POSIX rename
     and one writer: so the manager is set only when the session sets
     neither ``spark.sql.streaming.checkpointLocation`` nor a manager of
